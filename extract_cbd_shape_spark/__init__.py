@@ -14,9 +14,12 @@ Re-creates the semantics of TREEcg/extract-cbd-shape (reference at
   job extracts every member of every page.
 
 Plus the web-scale KG-construction stages the reference doesn't have:
-vectorized page->triples extraction, entity linking, connected-components
-canonicalization, partitioned materialization, and the training-data
-operators (dedup, similarity search, text analysis).
+vectorized page->triples extraction, store-local bulk extraction
+(bucket by page once, then one sink-fused task per bucket file), entity
+linking, connected-components canonicalization, and snapshot
+materialization. Corpus operators outside the pipeline (sampling,
+similarity search, PII redaction, packing, span dedup, BM25, PageRank,
+multimodal columns) sit beside them in `operators/` and `functions/`.
 """
 
 __version__ = "0.1.0"

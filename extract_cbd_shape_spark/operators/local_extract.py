@@ -1,45 +1,49 @@
-"""Store-local extraction fast path (applyInPandas per store).
+"""Store-local extraction: the whole CBD + shape algorithm per store.
 
 When every member's relevant quads live inside one store slice — an
 LDES page, a crawled document, a named-graph bundle — which is the
 reference's own operating regime (``bulkExtract`` runs over ONE page
 store, lib/CBDShapeExtractor.ts:68-127), a global frontier fixpoint is
-overkill: the whole extraction for a store fits in one executor task.
+overkill: the whole extraction for a store fits in one task.
 
-This module shuffles quads ONCE by a caller-supplied ``store_key``,
-cogroups the member seeds by the same key, and runs the complete
-CBD + shape-guided algorithm per store inside an Arrow-batched
-``applyInPandas``. Semantics are identical to ``operators/extract.py``
-(the same golden fixtures and DuckDB oracles run against both engines);
-only the physical strategy differs — the same kind of choice Spark
-makes between a broadcast and a shuffle join, made here at the
-granularity of the whole algorithm:
+The corpus is bucketed by store once at ingest (``materialize_store``,
+or any ``materialize_table`` snapshot bucketed by the store column,
+like the pipeline's ``raw_triples``), one file per bucket. Then
+``extract_store_files_to_store`` runs one task per bucket file: a
+pyarrow read, the per-bucket kernel and a parquet write, all in the
+Python worker, with no exchange. Semantics are identical to
+``operators/extract.py`` (the same fixtures and DuckDB oracles run
+against both engines); only the physical strategy differs:
 
 * global engine (extract.py): arbitrary cross-store graphs, giant
   stores, shared dimension entities -> driver-coordinated DataFrame
   fixpoints;
-* local engine (this file): store-partitioned corpora -> one shuffle +
-  embarrassingly parallel per-store Python, no driver rounds, no
-  global state. At 10^12 documents this is the throughput path; a
-  skewed giant store falls back to the global engine.
+* local engine (this file): store-partitioned corpora -> embarrassingly
+  parallel per-bucket work, no driver rounds, no global state. A
+  skewed giant store is excluded here and served by the global engine
+  (``exclude_stores``; the pipeline routes them).
 
-The per-store algorithm mirrors the reference's recursive lifecycle
-(extract -> extractRecursively -> CBD / path match / nodeLink,
-lib/CBDShapeExtractor.ts:305-508) re-derived from SURVEY.md §3 — the
-trie is the same reduced-word set used by the bulk engine
-(shapes/ast.py), so found() gating and required-path validation are
-shared code, not a re-implementation.
+Two per-bucket kernels: the CSR kernel (``_vec_extract_bucket``) for
+shapes ``compile_single_hop_links`` accepts, and the per-member
+interpreter (``extract_store``), which mirrors the reference's
+recursive lifecycle (extract -> extractRecursively -> CBD / path match
+/ nodeLink, lib/CBDShapeExtractor.ts:305-508) re-derived from SURVEY.md
+§3 and is the parity reference for everything else. The trie is the
+same reduced-word set used by the bulk engine (shapes/ast.py), so
+found() gating and required-path validation are shared code, not a
+re-implementation.
 """
 
 from __future__ import annotations
 
+import os
 from typing import Dict, Iterable, List, Optional, Sequence, Set, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from extract_cbd_shape_spark.model import BLANK, IRI, LITERAL, Term
+from extract_cbd_shape_spark.model import BLANK, IRI, LITERAL, QUAD_COLS, Term
 from extract_cbd_shape_spark.shapes.ast import (
     ROOT_WORD,
     AlternativePath,
@@ -51,30 +55,15 @@ from extract_cbd_shape_spark.shapes.ast import (
     extend_word,
 )
 from extract_cbd_shape_spark.shapes.compiler import ShapesGraph
+from extract_cbd_shape_spark.sinks.materialize import (
+    _data_dirs,
+    materialize_table,
+)
 
 # Quad tuple layout inside a store (matches model.QUAD_COLS order).
 _S, _SK, _P, _OV, _OK, _OL, _OD, _G, _GK = range(9)
 
-RESULT_SCHEMA = (
-    "entity string, subject string, subject_kind tinyint, predicate string, "
-    "object_value string, object_kind tinyint, object_lang string, "
-    "object_datatype string, graph string, graph_kind tinyint"
-)
-
-_RESULT_TYPES = dict(
-    f.strip().rsplit(" ", 1) for f in RESULT_SCHEMA.split(", ")
-)
-
-
-def _projected_schema(columns: Sequence[str]) -> str:
-    """DDL for a subset of the result columns (operator-level projection
-    pushdown: Catalyst can't prune through mapInPandas, so the caller's
-    projection is pushed into the kernel's output schema — narrower
-    Arrow batches cross the Python/JVM boundary)."""
-    bad = [c for c in columns if c not in _RESULT_TYPES]
-    if bad:
-        raise ValueError(f"unknown result columns: {bad}")
-    return ", ".join(f"{c} {_RESULT_TYPES[c]}" for c in columns)
+OUT_COLS = ["entity", *QUAD_COLS]
 
 
 class _Store:
@@ -865,9 +854,8 @@ def _vec_extract_bucket(
         # by the interpreter's literal-focus scan. Bake the identity into
         # the literal value codes so object-keyed lookups compare it in
         # one int64. Non-literals keep bare values (their codes must
-        # still equal subject/member/graph codes). Pruned inputs
-        # (columns= dropped lang/datatype from the scan) degrade to
-        # value-only identity — exactly what the interpreter sees too.
+        # still equal subject/member/graph codes). Inputs without the
+        # lang/datatype columns degrade to value-only identity.
         lang = tq["object_lang"].fillna("") if "object_lang" in tq else ""
         dt = tq["object_datatype"].fillna("") if "object_datatype" in tq else ""
         comp = obj_vals + "\x00" + lang + "\x00" + dt
@@ -1408,15 +1396,11 @@ def _vec_extract_bucket(
 # coalesce to this value and still pair up as one store.
 _NULL_STORE = "\x00<null-store>"
 
-
 def _marker_stream(triples: DataFrame, members: DataFrame,
                    store_col: str) -> DataFrame:
     """Union quads with member-seed marker rows (predicate NULL —
-    impossible for a real quad) into ONE stream keyed by ``store_col``.
-    This is the layout both the shuffling engine and the pre-bucketed
-    store share: one hash-partition by store co-locates every member
-    with its quads, and the kernel tells the two row kinds apart by the
-    NULL predicate."""
+    impossible for a real quad) into ONE stream keyed by ``store_col``;
+    the kernel tells the two row kinds apart by the NULL predicate."""
     if "entity_kind" not in members.columns:
         members = members.withColumn(
             "entity_kind", F.lit(IRI).cast("tinyint"))
@@ -1426,12 +1410,7 @@ def _marker_stream(triples: DataFrame, members: DataFrame,
     members = members.withColumn(
         store_col, F.coalesce(F.col(store_col), F.lit(_NULL_STORE))
     )
-    tq = triples.select(
-        F.col(store_col),
-        "subject", "subject_kind", "predicate", "object_value",
-        "object_kind", "object_lang", "object_datatype", "graph",
-        "graph_kind",
-    )
+    tq = triples.select(F.col(store_col), *QUAD_COLS)
     mq = members.select(
         F.col(store_col),
         F.col("entity").alias("subject"),
@@ -1456,35 +1435,30 @@ def _make_runner(
     cbd_default_graph: bool,
     store_col: str,
     members_from_subjects: bool,
-    cols: List[str],
-    exclude_stores: frozenset = frozenset(),
-    store_distinct: bool = False,
+    exclude_stores: frozenset,
+    store_distinct: bool,
 ):
-    """Build the mapInArrow partition function. ``members_from_subjects``
+    """Build the per-bucket function: Arrow batches of one complete
+    bucket in, Arrow batches of extracted quads out. ``members_from_subjects``
     derives the member set per store inside the kernel (every distinct
     IRI subject of the store — the crawl/pipeline regime) instead of
-    reading marker rows, which lets callers skip the seed-distinct
-    shuffle entirely.
+    reading marker rows.
 
-    The boundary is ``mapInArrow`` + Arrow-backed pandas, not
-    ``mapInPandas``: converting millions of quad strings to numpy
-    object arrays and back costs more than the extraction itself
-    (measured ~1.55s round-trip vs ~1.2s at sf0.1), while
-    ``types_mapper=pd.ArrowDtype`` keeps string columns zero-copy on
-    the Arrow buffers through every merge."""
+    Buckets stay Arrow-backed pandas (``types_mapper=pd.ArrowDtype``):
+    converting millions of quad strings to numpy object arrays and back
+    costs more than the extraction itself (measured ~1.55s round-trip
+    vs ~1.2s at sf0.1), while Arrow dtypes keep string columns
+    zero-copy on the Arrow buffers through every merge."""
     import pyarrow as pa
 
-    out_schema = pa.schema(
-        [
-            pa.field(c, pa.int8() if _RESULT_TYPES[c] == "tinyint"
-                     else pa.string())
-            for c in cols
-        ]
-    )
+    out_schema = pa.schema([
+        pa.field(c, pa.int8() if c.endswith("_kind") else pa.string())
+        for c in OUT_COLS
+    ])
 
     def _emit(out: pd.DataFrame):
         tbl = pa.Table.from_pandas(out, preserve_index=False)
-        yield from tbl.select(cols).cast(out_schema).to_batches()
+        yield from tbl.select(OUT_COLS).cast(out_schema).to_batches()
 
     def run_partition(batches) -> "Iterable[pa.RecordBatch]":
         arrs = list(batches)
@@ -1525,16 +1499,11 @@ def _make_runner(
             # here. store_distinct=True is the caller's contract that
             # the corpus is duplicate-free (e.g. any materialize_table
             # snapshot) and skips the pass.
-            tpdf = tpdf.drop_duplicates(
-                [c for c in (store_col, "subject", "subject_kind",
-                             "predicate", "object_value", "object_kind",
-                             "object_lang", "object_datatype", "graph",
-                             "graph_kind") if c in tpdf]
-            )
+            tpdf = tpdf.drop_duplicates([store_col, *QUAD_COLS])
         if vec_plan is not None:
             yield from _emit(_vec_extract_bucket(
                 tpdf, mpdf, store_col, vec_plan, bulk,
-                cbd_default_graph, set(ignore_local), cols,
+                cbd_default_graph, set(ignore_local), OUT_COLS,
             ))
             return
         out_rows: List[tuple] = []
@@ -1542,22 +1511,13 @@ def _make_runner(
             k: [(int(ek), ev) for ek, ev in zip(g["_m_kind"], g["_m_entity"])]
             for k, g in mpdf.groupby("_m_store", sort=False)
         }
-        n = len(tpdf)
-
-        def _opt(col):  # pruned-input tolerance (see ``columns=``)
-            return tpdf[col].to_numpy() if col in tpdf else [None] * n
-
-        lang = _opt("object_lang")
-        dt = _opt("object_datatype")
-        gr = _opt("graph")
-        gk = _opt("graph_kind")
         quads_all = list(zip(
             tpdf["subject"], tpdf["subject_kind"], tpdf["predicate"],
             tpdf["object_value"], tpdf["object_kind"],
-            [None if pd.isna(x) else x for x in lang],
-            [None if pd.isna(x) else x for x in dt],
-            [None if pd.isna(x) else x for x in gr],
-            [None if pd.isna(x) else int(x) for x in gk],
+            [None if pd.isna(x) else x for x in tpdf["object_lang"]],
+            [None if pd.isna(x) else x for x in tpdf["object_datatype"]],
+            [None if pd.isna(x) else x for x in tpdf["graph"]],
+            [None if pd.isna(x) else int(x) for x in tpdf["graph_kind"]],
         ))
         by_store: Dict[str, List[tuple]] = {}
         for skey, q in zip(tpdf[store_col], quads_all):
@@ -1573,144 +1533,35 @@ def _make_runner(
                               cbd_default_graph=cbd_default_graph)
             )
         if out_rows:
-            yield from _emit(pd.DataFrame(out_rows, columns=OUT_COLS)[cols])
+            yield from _emit(pd.DataFrame(out_rows, columns=OUT_COLS))
 
     return run_partition
 
 
-OUT_COLS = ["entity", "subject", "subject_kind", "predicate",
-            "object_value", "object_kind", "object_lang",
-            "object_datatype", "graph", "graph_kind"]
-
-
 def materialize_store(
     triples: DataFrame,
-    members: Optional[DataFrame],
+    members: DataFrame,
     path: str,
     store_col: str = "store_key",
-    n_buckets: Optional[int] = None,
 ) -> str:
-    """Ingest-time bucketing: write the combined member+quad stream
-    hash-partitioned by ``store_col`` as one parquet file per bucket.
+    """Ingest-time bucketing for store-local extraction: quads plus one
+    marker row per member seed (``_marker_stream``) land as the next
+    snapshot of the table at ``path``, hash-bucketed by ``store_col``
+    with one file per bucket (``sinks.materialize.materialize_table``),
+    so every store lives whole inside one file. Returns the snapshot's
+    data dir, which ``extract_store_files_to_store`` reads.
 
-    This is the 100 TB layout: the corpus is shuffled by store ONCE when
-    it lands, and every subsequent extraction over it
-    (``local_bulk_extract_prebucketed``) runs with ZERO exchanges —
-    scan -> per-store kernel -> sink, embarrassingly parallel. The
-    production target is an Iceberg table ``partitionedBy(bucket(N,
-    store))``; on plain parquet one file per hash bucket gives the same
-    guarantee as long as readers never split a file (see
-    ``read_store``).
-
-    ``members=None`` writes quads only — for corpora whose member set is
-    derivable per store (every IRI subject: the crawl regime), extracted
-    later with ``members_from_subjects=True``."""
-    spark = triples.sparkSession
-    p = n_buckets or max(64, spark.sparkContext.defaultParallelism * 2)
-    if members is None:
-        combined = triples.withColumn(
-            store_col, F.coalesce(F.col(store_col), F.lit(_NULL_STORE))
-        ).select(
-            F.col(store_col),
-            "subject", "subject_kind", "predicate", "object_value",
-            "object_kind", "object_lang", "object_datatype", "graph",
-            "graph_kind",
-        )
-    else:
-        combined = _marker_stream(triples, members, store_col)
-    combined.repartition(p, F.col(store_col)).write.mode(
-        "overwrite").parquet(path)
-    return path
-
-
-def read_store(spark: SparkSession, path: str) -> DataFrame:
-    """Read a ``materialize_store`` table preserving store-completeness
-    per task: raises ``spark.sql.files.maxPartitionBytes`` above the
-    largest data file so the scan never SPLITS a file (splitting could
-    cut a store in half mid-file; COMBINING whole files is always safe —
-    a task then simply holds several complete buckets).
-
-    The raised value lives in a CLONED session (same SparkContext,
-    copy-on-write SQLConf), never the caller's: file-scan partitioning
-    reads the conf at execution time, so a session-wide set would
-    inflate partition sizing for every later unrelated scan (ADVICE r2,
-    low). The returned DataFrame is bound to the clone; it composes with
-    the caller's DataFrames normally (one shared context)."""
-    import os
-
-    biggest = 0
-    for root, _dirs, files in os.walk(path):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                biggest = max(biggest, os.path.getsize(os.path.join(root, fn)))
-    raw = spark.conf.get(
-        "spark.sql.files.maxPartitionBytes", "134217728").strip().lower()
-    units = {"k": 1024, "m": 1024 ** 2, "g": 1024 ** 3, "t": 1024 ** 4}
-    s = raw[:-1] if raw.endswith("b") else raw
-    mult = 1
-    if s and s[-1] in units:
-        mult, s = units[s[-1]], s[:-1]
-    cur = int(s) * mult
-    if biggest >= cur:
-        scoped = SparkSession(
-            spark.sparkContext, spark._jsparkSession.cloneSession()
-        )
-        scoped.conf.set(
-            "spark.sql.files.maxPartitionBytes", str(biggest + 1))
-        return scoped.read.parquet(path)
-    return spark.read.parquet(path)
-
-
-def local_bulk_extract_prebucketed(
-    store: DataFrame,
-    shapes_graph: Optional[ShapesGraph] = None,
-    shape: Optional[Term] = None,
-    store_col: str = "store_key",
-    bulk: bool = True,
-    cbd_default_graph: bool = False,
-    graphs_to_ignore: Sequence[Term] = (),
-    vectorize: bool = True,
-    members_from_subjects: bool = False,
-    columns: Optional[Sequence[str]] = None,
-    store_distinct: bool = False,
-) -> DataFrame:
-    """Zero-shuffle extraction over a pre-bucketed store.
-
-    ``store`` is a ``materialize_store`` table (via ``read_store``) or
-    any DataFrame whose partitioning already co-locates each store's
-    rows in one partition — the engine adds NO exchange: the only
-    stages are scan -> Arrow kernel -> result. With
-    ``members_from_subjects=True`` the member seeds are derived inside
-    the kernel (distinct IRI subjects per store), so even the seed
-    ``distinct()`` shuffle disappears.
-
-    Skew note: the giant-store guard lives at ingest
-    (``materialize_store`` callers route oversized stores to the global
-    engine); by the time data is bucketed the skew decision has been
-    made.
-
-    ``columns``: subset of the result columns to emit — projection
-    pushdown through the Arrow boundary (a caller's ``.select`` after
-    ``mapInPandas`` prunes AFTER the Python->JVM transfer; this prunes
-    before it). When the projection skips ``object_lang``/
-    ``object_datatype`` the caller may also drop them from the input
-    scan — the kernel never reads them for traversal."""
-    vec_plan = compile_single_hop_links(
-        shapes_graph, shape, cbd_default_graph) if vectorize else None
-    cols = list(columns) if columns is not None else OUT_COLS
-    runner = _make_runner(
-        vec_plan, shapes_graph, shape,
-        tuple((g.kind, g.value) for g in graphs_to_ignore),
-        bulk, cbd_default_graph, store_col, members_from_subjects, cols,
-        store_distinct=store_distinct,
-    )
-    return store.mapInArrow(runner, _projected_schema(cols))
+    Corpora whose member set is every IRI subject of a store (the crawl
+    regime) need no marker rows: a ``materialize_table`` snapshot
+    bucketed by the store column is read with
+    ``members_from_subjects=True``, as the pipeline does."""
+    m = materialize_table(_marker_stream(triples, members, store_col), path,
+                          "materialize_store", bucket_by=store_col)
+    return os.path.join(path, _data_dirs(m)[0])
 
 
 def _store_files(path: str) -> List[str]:
-    """All bucket data files of a ``materialize_store`` table."""
-    import os
-
+    """All bucket data files under one data dir."""
     files: List[str] = []
     for root, _dirs, fns in os.walk(path):
         for fn in fns:
@@ -1719,95 +1570,32 @@ def _store_files(path: str) -> List[str]:
     return sorted(files)
 
 
+def _write_atomic(tbl, dest: str) -> None:
+    """Write the Arrow table ``tbl`` to ``dest`` through a hidden temp
+    file (leading ``.``, which Spark and pyarrow readers skip) and an
+    atomic rename: a task killed between the two leaves only a file no
+    reader sees, and a retry replaces ``dest`` whole."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    folder, name = os.path.split(dest)
+    tmp = os.path.join(folder, f".{name}.{uuid.uuid4().hex}.tmp")
+    pq.write_table(tbl, tmp)
+    os.replace(tmp, dest)
+
+
 def _file_manifest(spark: SparkSession, files: List[str]) -> DataFrame:
-    """One bucket file per task. Each ``materialize_store`` file is a
-    complete set of stores, so file granularity preserves the kernel's
-    store-completeness contract with no conf games (``read_store``'s
-    maxPartitionBytes clone becomes unnecessary on this path).
+    """One bucket file per task. Each bucket file is a complete set of
+    stores, so file granularity preserves the kernel's
+    store-completeness contract.
 
     Built as a parallelized RDD with one path per slice — no Exchange
     anywhere in the plan (a ``repartition`` would insert a RoundRobin
-    exchange, harmless over 256 strings but breaking the engine's
-    zero-Exchange plan contract)."""
+    exchange)."""
     rdd = spark.sparkContext.parallelize(
         [(p,) for p in files], max(1, len(files)))
     return spark.createDataFrame(rdd, "path string")
-
-
-def _store_read_columns(
-    store_col: str, columns: Optional[Sequence[str]]
-) -> Optional[List[str]]:
-    """Column projection for the python-native parquet read — the
-    file-scan twin of the JVM path's ``.drop('object_lang',
-    'object_datatype')`` pushdown: the kernel never traverses literal
-    lang/datatype, so when the caller's output projection omits them the
-    reader skips their column chunks entirely."""
-    if columns is None or {"object_lang", "object_datatype"} & set(columns):
-        return None
-    return [store_col, "subject", "subject_kind", "predicate",
-            "object_value", "object_kind", "graph", "graph_kind"]
-
-
-def local_bulk_extract_files(
-    spark: SparkSession,
-    store_path: str,
-    shapes_graph: Optional[ShapesGraph] = None,
-    shape: Optional[Term] = None,
-    store_col: str = "store_key",
-    bulk: bool = True,
-    cbd_default_graph: bool = False,
-    graphs_to_ignore: Sequence[Term] = (),
-    vectorize: bool = True,
-    members_from_subjects: bool = False,
-    columns: Optional[Sequence[str]] = None,
-    exclude_stores: Sequence[str] = (),
-    store_distinct: bool = False,
-) -> DataFrame:
-    """Zero-shuffle extraction with a PYTHON-NATIVE scan: the job's rows
-    are bucket FILE PATHS; each task opens its complete bucket parquet
-    file with pyarrow inside the Python worker and runs the kernel on
-    the mmapped Arrow buffers directly.
-
-    Motivation (measured, BENCH_LAYERS.md): the extraction kernel's
-    numpy work scales ~0.97 as independent processes, but routing the
-    same bytes JVM-scan -> Arrow IPC -> Python anti-scales on a shared
-    memory bus — a pass-through ``mapInArrow`` costs 2x the kernel
-    itself. Reading the parquet in the worker eliminates the input leg
-    entirely; only the (much smaller, projected) RESULT crosses back to
-    the JVM. Spark still owns scheduling, task retries, speculative
-    execution, and downstream composition — the same division of labor
-    as Spark's Python Data Source API (pyspark 4
-    ``spark.dataSource``), expressed with ``mapInArrow`` so the plan
-    stays a plain DataFrame.
-
-    At 100 TB the pattern holds: the manifest is the Iceberg scan-file
-    list (planned driver-side, tiny), tasks read data files via the
-    table FileIO, and no executor JVM materializes quad bytes.
-    Semantics are identical to ``local_bulk_extract_prebucketed``
-    (parity-tested); only the scan's physical path differs."""
-    vec_plan = compile_single_hop_links(
-        shapes_graph, shape, cbd_default_graph) if vectorize else None
-    cols = list(columns) if columns is not None else OUT_COLS
-    runner = _make_runner(
-        vec_plan, shapes_graph, shape,
-        tuple((g.kind, g.value) for g in graphs_to_ignore),
-        bulk, cbd_default_graph, store_col, members_from_subjects, cols,
-        exclude_stores=frozenset(exclude_stores),
-        store_distinct=store_distinct,
-    )
-
-    read_cols = _store_read_columns(store_col, columns)
-
-    def file_runner(batches) -> "Iterable":
-        import pyarrow.parquet as pq
-
-        for b in batches:
-            for p in b.column("path").to_pylist():
-                yield from runner(
-                    pq.read_table(p, columns=read_cols).to_batches())
-
-    paths = _file_manifest(spark, _store_files(store_path))
-    return paths.mapInArrow(file_runner, _projected_schema(cols))
 
 
 def extract_store_files_to_store(
@@ -1822,44 +1610,37 @@ def extract_store_files_to_store(
     graphs_to_ignore: Sequence[Term] = (),
     vectorize: bool = True,
     members_from_subjects: bool = False,
-    columns: Optional[Sequence[str]] = None,
     exclude_stores: Sequence[str] = (),
     store_distinct: bool = False,
 ) -> DataFrame:
-    """Sink-fused extraction: read bucket parquet -> kernel -> WRITE
-    output parquet, all inside the Python worker. The executor JVM never
+    """Sink-fused store-local extraction: each task reads one complete
+    bucket parquet file with pyarrow, runs the per-bucket kernel (the
+    CSR kernel, or the per-member interpreter with ``vectorize=False``
+    or for shapes the kernel does not accept) and WRITES the result
+    parquet, all inside the Python worker. The executor JVM never
     touches a quad byte in either direction — Spark contributes
     scheduling, retries, and the returned per-file lineage manifest
     ``(src, file, rows)``.
 
-    This is the materialization path a 100 TB extraction actually runs
-    (extract once, land a new table): the input manifest is the ingest
-    table's file list, each task writes its bucket's result file, and
-    the output inherits the input's store-hash layout (result rows of a
+    The output inherits the input's store-hash layout (result rows of a
     bucket stay in that bucket — extraction only emits quads of stores
     seeded in the same bucket), so downstream extractions over the
-    result need no re-bucketing. Writes go to a temp name then
-    ``os.replace`` so a retried task can never leave a torn file; on a
-    production object store the same contract comes from the Iceberg
-    commit protocol (``sinks/materialize.py``).
+    result need no re-bucketing. Result files land under deterministic
+    names through ``_write_atomic``, so a task killed mid-write or
+    retried never leaves a torn or duplicate file in ``out_path``.
 
     Returns the manifest DataFrame (cheap — one row per bucket);
     callers count/aggregate it without moving quads through the JVM."""
-    import os
-
     os.makedirs(out_path, exist_ok=True)
     vec_plan = compile_single_hop_links(
         shapes_graph, shape, cbd_default_graph) if vectorize else None
-    cols = list(columns) if columns is not None else OUT_COLS
     runner = _make_runner(
         vec_plan, shapes_graph, shape,
         tuple((g.kind, g.value) for g in graphs_to_ignore),
-        bulk, cbd_default_graph, store_col, members_from_subjects, cols,
-        exclude_stores=frozenset(exclude_stores),
-        store_distinct=store_distinct,
+        bulk, cbd_default_graph, store_col, members_from_subjects,
+        frozenset(exclude_stores), store_distinct,
     )
 
-    read_cols = _store_read_columns(store_col, columns)
     # Accept one data dir or several (a snapshot that inherits parent
     # data dirs, sinks/materialize append model). Result names flatten
     # the path relative to the dirs' common root, so files from
@@ -1869,15 +1650,12 @@ def extract_store_files_to_store(
     store_root = os.path.commonpath([os.path.abspath(d) for d in src_dirs])
 
     def sink_runner(batches) -> "Iterable":
-        import uuid
-
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         for b in batches:
             for p in b.column("path").to_pylist():
-                out_batches = list(runner(
-                    pq.read_table(p, columns=read_cols).to_batches()))
+                out_batches = list(runner(pq.read_table(p).to_batches()))
                 dest = None
                 rows = 0
                 if out_batches:
@@ -1890,11 +1668,8 @@ def extract_store_files_to_store(
                     # bucket=19/part-00029 coexist), so flatten the
                     # path relative to the store root into the name.
                     rel = os.path.relpath(os.path.abspath(p), store_root)
-                    dest = os.path.join(
-                        out_path, rel.replace(os.sep, "--"))
-                    tmp = dest + "." + uuid.uuid4().hex + ".tmp"
-                    pq.write_table(tbl, tmp)
-                    os.replace(tmp, dest)
+                    dest = os.path.join(out_path, rel.replace(os.sep, "--"))
+                    _write_atomic(tbl, dest)
                 yield pa.RecordBatch.from_pydict(
                     {"src": [p], "file": [dest], "rows": [rows]},
                     schema=pa.schema([
@@ -1909,118 +1684,3 @@ def extract_store_files_to_store(
         files.extend(_store_files(d))
     paths = _file_manifest(spark, files)
     return paths.mapInArrow(sink_runner, "src string, file string, rows long")
-
-
-def local_bulk_extract(
-    triples: DataFrame,
-    members: DataFrame,
-    shapes_graph: Optional[ShapesGraph] = None,
-    shape: Optional[Term] = None,
-    store_col: str = "store_key",
-    bulk: bool = True,
-    cbd_default_graph: bool = False,
-    n_buckets: Optional[int] = None,
-    graphs_to_ignore: Sequence[Term] = (),
-    vectorize: bool = True,
-    giant_store_threshold: Optional[int] = None,
-    columns: Optional[Sequence[str]] = None,
-    store_distinct: bool = False,
-) -> DataFrame:
-    """Distributed wrapper: one shuffle by ``store_col``, then per-store
-    extraction in applyInPandas (cogrouped with the member seeds).
-    ``columns``: projection pushdown into the kernel output schema (see
-    ``local_bulk_extract_prebucketed``).
-
-    ``triples``: quad columns + ``store_col``; ``members``: ``entity``
-    (string), optional ``entity_kind``, + ``store_col``.
-
-    Stores are hashed into ``n_buckets`` coarse groups (default 4x the
-    default parallelism) so the per-group pandas overhead amortizes over
-    thousands of stores per task; store isolation is preserved by
-    grouping on ``store_col`` again inside the task.
-
-    ``giant_store_threshold``: when set, one counting pass finds stores
-    with more quads than the threshold and routes them through the
-    global fixpoint engine (one run per giant store, preserving store
-    isolation) instead of landing the whole store in a single
-    applyInPandas task — the skew/OOM guard for web-scale corpora where
-    one page can be 10^6 quads. Costs one extra aggregate scan, so the
-    raw operator leaves it off; KGConstructionPipeline turns it on."""
-    if giant_store_threshold is not None:
-        giants = [
-            r[0]
-            for r in triples.groupBy(store_col)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > giant_store_threshold)
-            .select(store_col)
-            .collect()
-        ]
-        if giants:
-            from extract_cbd_shape_spark.model import QUAD_COLS
-            from extract_cbd_shape_spark.operators.extract import (
-                BulkCBDShapeExtractor,
-            )
-
-            parts = [
-                local_bulk_extract(
-                    triples.filter(~F.col(store_col).isin(giants)),
-                    members.filter(~F.col(store_col).isin(giants)),
-                    shapes_graph, shape, store_col, bulk,
-                    cbd_default_graph, n_buckets, graphs_to_ignore,
-                    vectorize, None, columns, store_distinct,
-                )
-            ]
-            ex = BulkCBDShapeExtractor(
-                triples.sparkSession, shapes_graph=shapes_graph,
-                cbd_default_graph=cbd_default_graph,
-            )
-            # One global-engine run per giant store: its frontier joins
-            # spread the store over every executor, and per-store runs
-            # preserve store isolation (no cross-store subject walks).
-            for g in giants:
-                res, _ = ex.extract(
-                    triples.filter(F.col(store_col) == g).drop(store_col),
-                    members.filter(F.col(store_col) == g).select(
-                        "entity", "entity_kind"
-                    ),
-                    shape=shape,
-                    graphs_to_ignore=graphs_to_ignore,
-                    bulk=bulk,
-                )
-                giant_part = res.select("entity", *QUAD_COLS)
-                if columns is not None:
-                    giant_part = giant_part.select(*columns)
-                parts.append(giant_part)
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-
-    spark = triples.sparkSession
-    # Partition count decoupled from session parallelism: enough
-    # partitions that store-hash collisions balance (law of large
-    # numbers), scaled up with the cluster.
-    p = n_buckets or max(64, spark.sparkContext.defaultParallelism * 2)
-    # Vectorized fast path: single-hop forward-predicate shape DAGs run
-    # as columnar merges over the whole bucket (no per-member Python).
-    vec_plan = compile_single_hop_links(
-        shapes_graph, shape, cbd_default_graph) if vectorize else None
-
-    # SINGLE-shuffle physical plan: member seeds ride along as marker
-    # rows in the same stream, the union is hash-repartitioned by store
-    # (NO sort — unlike groupBy/cogroup applyInPandas, which sorts every
-    # partition by key), and mapInPandas consumes whole partitions.
-    # Store isolation is enforced inside the kernel by the store column,
-    # so partition = a coarse bucket of many stores. (Corpora that are
-    # bucketed by store at ingest skip even this one shuffle —
-    # materialize_store / local_bulk_extract_prebucketed.)
-    combined = _marker_stream(triples, members, store_col).repartition(
-        p, F.col(store_col))
-    cols = list(columns) if columns is not None else OUT_COLS
-    runner = _make_runner(
-        vec_plan, shapes_graph, shape,
-        tuple((g.kind, g.value) for g in graphs_to_ignore),
-        bulk, cbd_default_graph, store_col, False, cols,
-        store_distinct=store_distinct,
-    )
-    return combined.mapInArrow(runner, _projected_schema(cols))

@@ -21,12 +21,12 @@ from typing import Dict, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from extract_cbd_shape_spark.model import BLANK, IRI, LITERAL, Term
+from extract_cbd_shape_spark.model import BLANK, IRI, Term
 from extract_cbd_shape_spark.operators.closure import (
     connected_components,
     connected_components_driver,
 )
-from extract_cbd_shape_spark.operators.extract import BulkCBDShapeExtractor, Member
+from extract_cbd_shape_spark.operators.extract import BulkCBDShapeExtractor
 from extract_cbd_shape_spark.operators.linking import link_mentions
 from extract_cbd_shape_spark.shapes.compiler import ShapesGraph
 from extract_cbd_shape_spark.sinks.materialize import (
@@ -63,7 +63,6 @@ class KGConstructionPipeline:
         shapes_graph: Optional[ShapesGraph] = None,
         shape: Optional[Term] = None,
         dict_size: int = 20,
-        local_extraction: bool = True,
         construct_rules: Optional[list] = None,
     ):
         self.spark = spark
@@ -71,7 +70,6 @@ class KGConstructionPipeline:
         self.shapes_graph = shapes_graph
         self.shape = shape
         self.dict_size = dict_size
-        self.local_extraction = local_extraction
         # Optional CONSTRUCT enrichment rules (stage 4b): each rule is a
         # dict of `operators.bgp.bgp_construct` keyword arguments
         # (patterns, template, optional, filters, ...) evaluated over
@@ -99,7 +97,12 @@ class KGConstructionPipeline:
 
     def _stage_done(self, name: str, stage: str) -> bool:
         m = latest_manifest(self._table(name))
-        return m is not None and m["stage"] == stage
+        if m is None or m["stage"] != stage:
+            return False
+        # raw_triples snapshots written before ingest-time skew
+        # detection carry no giant_stores: re-parse them instead of
+        # giving stage 2 a second routing path
+        return name != "raw_triples" or "giant_stores" in m
 
     def _extract_entities_sink(self, src_dirs, giants,
                                inherit: bool = False,
@@ -120,18 +123,12 @@ class KGConstructionPipeline:
         import pyarrow.parquet as pq
 
         from extract_cbd_shape_spark.operators.local_extract import (
+            OUT_COLS,
             extract_store_files_to_store,
-            local_bulk_extract,
         )
 
         spark = self.spark
         src = list(src_dirs)
-        if giants is None:  # pre-threshold snapshot layout: one scan
-            giants = [
-                r[0] for r in read_data_dirs(spark, src).groupBy("page_url")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .filter(F.col("_n") > GIANT_PAGE_QUADS).collect()
-            ]
         snap_dir = begin_snapshot(self._table("entity_triples"))
         data_dir = os.path.join(snap_dir, "data")
         mrows = extract_store_files_to_store(
@@ -149,23 +146,27 @@ class KGConstructionPipeline:
             if fn.startswith("giant-"):
                 os.remove(os.path.join(data_dir, fn))
         if giants:
-            store = read_data_dirs(spark, src).drop("bucket").withColumnRenamed(
-                "page_url", "store_key")
-            gq = store.filter(F.col("store_key").isin(giants))
-            subjects = gq.filter(F.col("subject_kind") == IRI).select(
-                "store_key", F.col("subject").alias("entity"),
-                F.col("subject_kind").alias("entity_kind")).distinct()
-            gres = local_bulk_extract(
-                gq, subjects, shapes_graph=self.shapes_graph,
-                shape=self.shape,
-                giant_store_threshold=GIANT_PAGE_QUADS - 1,
-            ).select(
-                "entity", "subject", "subject_kind", "predicate",
-                "object_value", "object_kind", "object_lang",
-                "object_datatype", "graph", "graph_kind",
-            )
+            import shutil
             import tempfile
 
+            store = read_data_dirs(spark, src).drop("bucket")
+            ex = BulkCBDShapeExtractor(spark, shapes_graph=self.shapes_graph)
+            # One global-engine run per giant page: its frontier joins
+            # spread the page over every executor, and per-page runs
+            # keep pages isolated (no cross-page subject walks). Seeds
+            # are the page's IRI subjects, as in the kernel.
+            parts = []
+            for g in giants:
+                page = store.filter(F.col("page_url") == g).drop("page_url")
+                seeds = page.filter(F.col("subject_kind") == IRI).select(
+                    F.col("subject").alias("entity"),
+                    F.col("subject_kind").alias("entity_kind"),
+                ).distinct()
+                res, _ = ex.extract(page, seeds, shape=self.shape, bulk=True)
+                parts.append(res.select(*OUT_COLS))
+            gres = parts[0]
+            for part in parts[1:]:
+                gres = gres.unionByName(part)
             tmp = tempfile.mkdtemp(prefix="giants_", dir=self.warehouse)
             try:
                 gres.write.mode("overwrite").parquet(tmp)
@@ -179,9 +180,8 @@ class KGConstructionPipeline:
                     partitions.append(
                         {"src": "giant_stores", "file": dest, "rows": n})
             finally:
-                import shutil
-
                 shutil.rmtree(tmp, ignore_errors=True)
+                ex.release()
         extra = {"giant_stores": giants}
         if epoch is not None:
             extra["epoch"] = epoch
@@ -215,105 +215,44 @@ class KGConstructionPipeline:
         )
 
     def run(self, pages: DataFrame, resume: bool = True) -> Dict[str, dict]:
-        spark = self.spark
         manifests: Dict[str, dict] = {}
         self.stage_seconds = {}
 
         # Stage 1 — pages -> raw triples (Arrow-vectorized parse).
         if not (resume and self._stage_done("raw_triples", "extract_pages")):
+            resume = False  # every later stage reads this snapshot
             with self._timed("parse"):
-                raw = self._parse_pages(pages)
                 # Store-complete by page: each page's triples land whole
                 # in one bucket file, so stage 2 extracts with ZERO
                 # shuffles (the one repartition here is the ingest-time
                 # bucketing a 100 TB corpus pays once, not per
                 # extraction).
                 manifests["raw_triples"] = materialize_table(
-                    raw, self._table("raw_triples"), "extract_pages",
-                    bucket_by="page_url", store_complete=True,
+                    self._parse_pages(pages), self._table("raw_triples"),
+                    "extract_pages", bucket_by="page_url",
                     # skew detection is paid once at ingest: pages above
                     # the threshold are listed in the manifest and every
                     # later extraction routes them without re-scanning
                     # the corpus
                     giant_threshold=GIANT_PAGE_QUADS,
                 )
-        raw = read_latest_snapshot(spark, self._table("raw_triples"))
 
         # Stage 2 — per-entity CBD/shape extraction. Page triples are
         # store-partitioned by construction (each page's subjects live in
-        # that page), so the store-local fast path applies: one shuffle
-        # by page, per-page extraction, no driver fixpoint rounds.
-        # Cross-page graphs would set local_extraction=False and take the
-        # global bulk engine instead.
-        _t0 = time.time()
+        # that page), so each task reads one bucket file with pyarrow in
+        # the worker, extracts (member seeds = distinct IRI subjects per
+        # page, derived inside the kernel) and writes its result file
+        # into the next entity_triples snapshot — no quad bytes through
+        # the JVM, no exchange, no driver fixpoint rounds. Skew guard:
+        # giant pages were identified at ingest (manifest giant_stores)
+        # and route to the global engine.
         if not (resume and self._stage_done("entity_triples", "extract_entities")):
-            # Seeds stay distributed: a DataFrame of distinct subjects
-            # (collecting 10^12-scale subject lists to the driver is the
-            # one thing this pipeline must never do).
-            ex = None
-            results = None
-            if self.local_extraction:
-                from extract_cbd_shape_spark.operators.local_extract import (
-                    local_bulk_extract,
+            resume = False
+            with self._timed("extract"):
+                manifests["entity_triples"] = self._extract_entities_sink(
+                    latest_snapshot_paths(self._table("raw_triples")),
+                    latest_manifest(self._table("raw_triples"))["giant_stores"],
                 )
-
-                m = latest_manifest(self._table("raw_triples"))
-                if m and m.get("store_complete") and m.get("bucket_by") == "page_url":
-                    # Sink-fused zero-shuffle path: the snapshot is
-                    # store-complete per bucket file; each task reads
-                    # its bucket parquet with pyarrow in the worker,
-                    # extracts (member seeds = distinct IRI subjects
-                    # per page, derived inside the kernel), and writes
-                    # its result file into the next entity_triples
-                    # snapshot — no quad bytes through the JVM, no
-                    # exchange (BENCH_LAYERS.md). Skew guard: giant
-                    # pages were identified at ingest (manifest
-                    # giant_stores) and route to the global engine.
-                    manifests["entity_triples"] = self._extract_entities_sink(
-                        latest_snapshot_paths(self._table("raw_triples")),
-                        m.get("giant_stores"),
-                    )
-                else:
-                    # resumed from a pre-store-complete snapshot layout
-                    t2 = raw.drop("bucket").withColumnRenamed(
-                        "page_url", "store_key")
-                    # IRI subjects only: blank-node subjects (page-scoped
-                    # labels) are reached through CBD blank closure, not
-                    # seeded as members.
-                    subjects = t2.filter(F.col("subject_kind") == IRI).select(
-                        "store_key", F.col("subject").alias("entity")
-                    ).distinct()
-                    results = local_bulk_extract(
-                        t2, subjects, shapes_graph=self.shapes_graph,
-                        shape=self.shape,
-                        # skew guard: a pathological page with more quads
-                        # than this routes through the global engine
-                        # instead of one straggler task
-                        giant_store_threshold=GIANT_PAGE_QUADS,
-                    )
-            else:
-                subjects = raw.filter(F.col("subject_kind") == IRI).select(
-                    F.col("subject").alias("entity")).distinct()
-                ex = BulkCBDShapeExtractor(spark, shapes_graph=self.shapes_graph)
-                results, flags = ex.extract(
-                    raw.drop("page_url", "bucket"), subjects,
-                    shape=self.shape, bulk=True,
-                )
-            if results is not None:
-                entity_triples = results.select(
-                    "entity", "subject", "subject_kind", "predicate",
-                    "object_value", "object_kind", "object_lang",
-                    "object_datatype", "graph", "graph_kind",
-                )
-                manifests["entity_triples"] = materialize_table(
-                    entity_triples, self._table("entity_triples"),
-                    "extract_entities",
-                )
-            if ex is not None:
-                # stage output is materialized — drop the run's cached
-                # store copies before the next stage claims memory
-                ex.release()
-            self.stage_seconds["extract"] = round(time.time() - _t0, 3)
         self._graph_stages(manifests, resume)
 
         for name in ("raw_triples", "entity_triples", "links", "entities", "triples"):
@@ -358,7 +297,7 @@ class KGConstructionPipeline:
         if not (epoch is not None and m and m.get("epoch") == epoch):
             m = materialize_table(
                 self._parse_pages(new_pages), raw_tbl,
-                "extract_pages", bucket_by="page_url", store_complete=True,
+                "extract_pages", bucket_by="page_url",
                 giant_threshold=GIANT_PAGE_QUADS, append=True,
                 manifest_extra=(
                     {"epoch": epoch} if epoch is not None else None
@@ -371,8 +310,7 @@ class KGConstructionPipeline:
             manifests["entity_triples"] = me
         else:
             manifests["entity_triples"] = self._extract_entities_sink(
-                [delta_dir],
-                m.get("delta_giant_stores", m.get("giant_stores")),
+                [delta_dir], m["delta_giant_stores"],
                 inherit=True, epoch=epoch,
             )
         self._graph_stages(manifests, resume=False)

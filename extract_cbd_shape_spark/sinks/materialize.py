@@ -53,7 +53,6 @@ def materialize_table(
     stage: str,
     bucket_by: Optional[str] = "subject",
     n_buckets: int = 32,
-    store_complete: bool = False,
     giant_threshold: Optional[int] = None,
     append: bool = False,
     manifest_extra: Optional[dict] = None,
@@ -61,11 +60,10 @@ def materialize_table(
     """Write df as the next snapshot of the table at ``path``.
     Returns the manifest dict.
 
-    ``store_complete=True`` additionally repartitions by the bucket
-    value before writing, so each bucket lands as ONE file — a reader
-    that never splits files (``operators.local_extract.read_store``)
-    then sees every ``bucket_by`` group whole inside one task, which is
-    the precondition for zero-shuffle store-local extraction. This is
+    A bucketed write lands each bucket as ONE file, so every
+    ``bucket_by`` group lives whole inside one file — the precondition
+    for store-local extraction, which runs one task per file
+    (``operators.local_extract.extract_store_files_to_store``). This is
     the parquet stand-in for Iceberg's ``partitionedBy(bucket(N, col))``
     write distribution.
 
@@ -79,8 +77,8 @@ def materialize_table(
     written; the new snapshot's manifest lists the parent's data dirs by
     reference plus its own (Iceberg snapshot/manifest reuse — a 100 TB
     table is never rewritten to ingest a day of crawl). Caller contract
-    for ``store_complete`` append tables: the delta contains only NEW
-    ``bucket_by`` groups (re-crawled pages go through url_dedup first),
+    for append tables read by store-local extraction: the delta
+    contains only NEW ``bucket_by`` groups (re-crawled pages go through url_dedup first),
     so every group still lives whole inside one file. Manifest carries
     merged ``giant_stores`` plus delta-scoped ``delta_giant_stores`` /
     ``delta_rows`` so incremental consumers process only the delta."""
@@ -112,7 +110,8 @@ def materialize_table(
         # snapshot, a metadata explosion at scale (and measurably the
         # dominant pipeline-stage cost on this sandbox's shared disk).
         # One write-side shuffle puts each bucket in ONE task -> one
-        # file per bucket, which is also what store_complete requires.
+        # file per bucket, which is also what store-local extraction
+        # requires.
         out = out.repartition(n_buckets, F.col("bucket"))
     writer = out.write.mode("overwrite")
     if bucket_by is not None:
@@ -168,7 +167,6 @@ def materialize_table(
         "rows": (parent["rows"] + rows) if parent else rows,
         "bucket_by": bucket_by,
         "n_buckets": n_buckets if bucket_by else None,
-        "store_complete": bool(store_complete and bucket_by),
         "partitions": per_partition,
         "data_dirs": (_data_dirs(parent) + [own_dir]) if parent else [own_dir],
     }
@@ -223,7 +221,6 @@ def commit_snapshot(
         "rows": rows,
         "bucket_by": None,
         "n_buckets": None,
-        "store_complete": False,
         "partitions": partitions,
         **extra,
     }

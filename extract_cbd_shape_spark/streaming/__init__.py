@@ -3,6 +3,4 @@ from extract_cbd_shape_spark.streaming.incremental import (  # noqa: F401
     pages_stream,
     stream_pages_to_triples,
     streaming_kg_construction,
-    streaming_lang_sessions,
-    streaming_page_metrics,
 )

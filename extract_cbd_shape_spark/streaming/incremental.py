@@ -18,18 +18,13 @@ and stops — the "incremental re-run over new page partitions" mode from
 SURVEY.md §2.2. A long-lived trigger works identically at cluster scale;
 ``maxFilesPerTrigger`` bounds micro-batch size so executor memory is
 sized by config, not corpus size.
-
-``streaming_page_metrics`` shows the watermark + windowed-aggregation
-path (late pages beyond the watermark are dropped, state is bounded).
 """
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from extract_cbd_shape_spark.sinks.materialize import (
     latest_manifest,
@@ -127,208 +122,4 @@ def streaming_kg_construction(
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
         return q
-    return writer.start()
-
-
-def streaming_lang_sessions(pages: DataFrame, gap_seconds: int = 10,
-                            watermark: str = "10 seconds") -> DataFrame:
-    """Custom stateful streaming operator (``applyInPandasWithState``):
-    per-lang session windows with a gap timeout. A session is a maximal
-    run of pages whose event times are <= ``gap_seconds`` apart; one row
-    is emitted per CLOSED session (lang, session_start, session_end,
-    n_pages). A session closes when a later page for the key arrives
-    more than ``gap_seconds`` after its end, or when the watermark
-    passes its end + gap (event-time timeout) — so state is bounded:
-    one open session per key, evicted by timeout.
-
-    Scale story: state is partitioned by the group key across
-    executors; per micro-batch each key's rows are sessionized with
-    vectorized pandas (sort + diff + cumsum — Python work is per
-    SESSION, never per row), and the carried open session is re-merged
-    with the batch sessions by interval union, so out-of-order arrivals
-    across micro-batches (legal under the watermark) land correctly."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_ms = gap_seconds * 1000
-
-    def _emit(key, sessions):
-        return pd.DataFrame(
-            {
-                "lang": key[0],
-                "session_start": pd.to_datetime(
-                    [s[0] for s in sessions], unit="ms"
-                ),
-                "session_end": pd.to_datetime(
-                    [s[1] for s in sessions], unit="ms"
-                ),
-                "n_pages": [s[2] for s in sessions],
-            }
-        )
-
-    def _fn(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            closed = state.get
-            state.remove()
-            yield _emit(key, [closed])
-            return
-        ts = pd.concat([pdf["warc_ts"] for pdf in pdf_iter])
-        ms = (ts.astype("int64") // 1_000_000).sort_values().reset_index(
-            drop=True
-        )
-        sid = (ms.diff() > gap_ms).cumsum()
-        agg = ms.groupby(sid).agg(["min", "max", "size"])
-        sessions = [
-            (int(a), int(b), int(n))
-            for a, b, n in agg.itertuples(index=False, name=None)
-        ]
-        if state.exists:
-            # Sessionize the UNION of the carried open session and the
-            # batch sessions: rows older than the carried session, a
-            # carried session bridging two batch sessions, or a carried
-            # session newer than every batch row are all legal under the
-            # watermark (ADVICE r2) — so insert the carried interval in
-            # start order and re-merge with the gap rule instead of only
-            # comparing against sessions[0].
-            sessions.append(tuple(state.get))
-            sessions.sort()
-            merged = [sessions[0]]
-            for s, e, n in sessions[1:]:
-                ls, le, ln = merged[-1]
-                if s - le <= gap_ms:
-                    merged[-1] = (ls, max(le, e), ln + n)
-                else:
-                    merged.append((s, e, n))
-            sessions = merged
-        closed, last = sessions[:-1], sessions[-1]
-        state.update(last)
-        # event-time timeout must sit above the current watermark
-        state.setTimeoutTimestamp(
-            max(last[1] + gap_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        if closed:
-            yield _emit(key, closed)
-
-    return (
-        pages.withWatermark("warc_ts", watermark)
-        .groupBy("lang")
-        .applyInPandasWithState(
-            _fn,
-            "lang string, session_start timestamp, "
-            "session_end timestamp, n_pages long",
-            "start_ms long, end_ms long, n long",
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def streaming_page_metrics(pages: DataFrame, watermark: str = "1 hour",
-                           window: str = "1 hour") -> DataFrame:
-    """Per-(event-time window, lang) page counts with a watermark:
-    late pages beyond ``watermark`` are dropped and aggregation state
-    is evicted — bounded state at unbounded corpus size."""
-    return (
-        pages.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), F.col("lang"))
-        .agg(
-            F.count("*").alias("n_pages"),
-            F.sum(F.length("text")).alias("n_chars"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "lang", "n_pages", "n_chars",
-        )
-    )
-
-
-DOCS_DDL = (
-    "doc_id long, text string, lang string, source string, n_chars long"
-)
-
-
-def streaming_corpus_dedup(
-    spark: SparkSession,
-    docs_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: Optional[int] = None,
-):
-    """Continuously dedup a document stream against the corpus built so
-    far — the streaming driver for ``operators.dedup``'s incremental
-    exact-dedup (the operation a 100 TB ingest actually runs per batch).
-
-    Each micro-batch:
-
-    1. reads the accumulated fingerprint index (``out_dir/index``,
-       epoch-partitioned parquet — only md5 keys, ~1/1000 of corpus
-       size, and the read is incremental metadata work for parquet);
-    2. ``dedup_new_against_index`` keeps the batch's novel texts
-       (anti-join vs index + one min-aggregate within the batch —
-       cost ∝ |batch| + |index keys|, never |corpus|);
-    3. appends surviving documents to ``out_dir/docs`` and their
-       fingerprints to the index, both under ``epoch=<batch_id>``
-       partitions written with DYNAMIC partition overwrite — a replayed
-       micro-batch (crash between writes and checkpoint commit)
-       overwrites its own epoch deterministically instead of appending
-       twice, which is what makes the sink exactly-once on top of
-       Structured Streaming's at-least-once foreachBatch contract.
-
-    Returns the StreamingQuery (caller awaits termination).
-    """
-    from extract_cbd_shape_spark.operators.dedup import (
-        dedup_new_against_index,
-    )
-
-    index_dir = os.path.join(out_dir, "index")
-    docs_out = os.path.join(out_dir, "docs")
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.errors.exceptions.captured import AnalysisException
-
-        sp = batch.sparkSession
-        try:
-            # STRICTLY earlier epochs only: a replayed batch must not
-            # see its own crashed attempt's fingerprints, or the
-            # anti-join would drop the whole batch and the epoch
-            # overwrite would erase it (batch ids are monotone, so
-            # epoch < batch_id is exactly "the committed past").
-            index = (
-                sp.read.parquet(index_dir)
-                .filter(F.col("epoch") < batch_id)
-                .select("text_hash")
-            )
-        except AnalysisException as e:
-            # ONLY the first batch's missing directory means "empty
-            # index". Any other read failure (corrupt footer, storage
-            # error) must fail the batch — treating it as empty would
-            # silently admit every historical duplicate as novel.
-            if "PATH_NOT_FOUND" not in str(e):
-                raise
-            index = sp.createDataFrame([], "text_hash string")
-        survivors = dedup_new_against_index(batch, index)
-        keep = (
-            batch.join(survivors.select("doc_id"), "doc_id")
-            .withColumn("epoch", F.lit(batch_id))
-        )
-        dyn = {"partitionOverwriteMode": "dynamic"}
-        (keep.write.mode("overwrite").options(**dyn)
-         .partitionBy("epoch").parquet(docs_out))
-        (survivors.select("text_hash")
-         .withColumn("epoch", F.lit(batch_id))
-         .write.mode("overwrite").options(**dyn)
-         .partitionBy("epoch").parquet(index_dir))
-
-    reader = spark.readStream.schema(DOCS_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_dir)
-    writer = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
     return writer.start()

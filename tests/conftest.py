@@ -38,3 +38,31 @@ def spark():
 def load_fixture(relpath: str) -> str:
     with open(os.path.join(REFERENCE_TESTS, relpath)) as f:
         return f.read()
+
+
+@pytest.fixture
+def sink_extract(spark, tmp_path_factory):
+    """Store-local extraction the way the pipeline runs it: bucket the
+    quads and member seeds by store (``materialize_store``), run the
+    sink-fused kernel (``extract_store_files_to_store``) and read the
+    result files back as a DataFrame."""
+    from extract_cbd_shape_spark.operators.local_extract import (
+        OUT_COLS,
+        extract_store_files_to_store,
+        materialize_store,
+    )
+
+    schema = ", ".join(
+        f"{c} {'tinyint' if c.endswith('_kind') else 'string'}"
+        for c in OUT_COLS)
+
+    def run(triples, members, store_col="store_key", **kw):
+        root = tmp_path_factory.mktemp("sink")
+        store = materialize_store(
+            triples, members, str(root / "store"), store_col=store_col)
+        out = str(root / "out")
+        extract_store_files_to_store(
+            spark, store, out, store_col=store_col, **kw).collect()
+        return spark.read.schema(schema).parquet(out)
+
+    return run

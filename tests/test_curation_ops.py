@@ -1,18 +1,12 @@
-"""PII redaction, repetition metrics, and sequence packing."""
+"""PII redaction and sequence packing."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from extract_cbd_shape_spark.operators.packing import (
     pack_offsets,
     pack_sequences,
 )
 from extract_cbd_shape_spark.operators.pii import redact_documents
-from extract_cbd_shape_spark.operators.repetition import (
-    line_stats,
-    repetition_keep,
-    top_bigram_stats,
-)
 
 
 def test_pii_redaction_counts_and_text(spark):
@@ -33,34 +27,6 @@ def test_pii_redaction_counts_and_text(spark):
     r2 = rows[2]
     assert (r2["n_email"], r2["n_ipv4"], r2["n_phone"]) == (0, 0, 0)
     assert r2["clean_text"] == "no pii here"
-
-
-def test_line_and_bigram_stats(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "a\nb\na\nc"),       # 4 lines, one repeat -> 0.25
-            (2, "x y x y x"),        # bigrams: xy yx xy yx -> top 0.5
-        ],
-        "doc_id long, text string",
-    )
-    ls = {r["doc_id"]: r for r in line_stats(df).collect()}
-    assert ls[1]["n_lines"] == 4 and ls[1]["dup_line_frac"] == 0.25
-    assert ls[2]["n_lines"] == 1 and ls[2]["dup_line_frac"] == 0.0
-    bg = {r["doc_id"]: r for r in top_bigram_stats(df).collect()}
-    assert bg[2]["n_bigrams"] == 4 and bg[2]["top_bigram_frac"] == 0.5
-
-
-def test_repetition_keep_flags(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "a b c\nd e f\ng h i\nj k l"),  # 11 distinct bigrams
-            (2, "a b c\na b c\na b c\nd e f"),  # dup_line_frac 0.5 -> drop
-            (3, "x y x y x y x y x y"),         # top bigram 5/9 -> drop
-        ],
-        "doc_id long, text string",
-    )
-    keep = {r["doc_id"]: r["keep"] for r in repetition_keep(df).collect()}
-    assert keep == {1: True, 2: False, 3: False}
 
 
 @pytest.mark.parametrize("n_buckets", [1, 3, 64])

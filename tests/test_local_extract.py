@@ -1,15 +1,13 @@
-"""Store-local fast-path engine (operators/local_extract.py): the same
-golden fixtures as the global DataFrame engine, plus engine parity."""
+"""Store-local engine (operators/local_extract.py): the same golden
+fixtures as the global DataFrame engine, plus engine parity. Bucket-level
+runs go through the sink-fused path (``sink_extract`` fixture)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from extract_cbd_shape_spark.model import IRI, Term, quad_to_row
 from extract_cbd_shape_spark.operators import BulkCBDShapeExtractor
-from extract_cbd_shape_spark.operators.local_extract import (
-    extract_store,
-    local_bulk_extract,
-)
+from extract_cbd_shape_spark.operators.local_extract import extract_store
 from extract_cbd_shape_spark.rdf import parse_trig
 from extract_cbd_shape_spark.shapes import ShapesGraph
 
@@ -116,7 +114,7 @@ ex:M2 { ex:M2 ex:p "b" . ex:M1 ex:q "leak" . }
     assert "leak" not in {r[4] for r in rows if r[0] == EX + "M1"}
 
 
-def test_engine_parity_kbo(spark):
+def test_engine_parity_kbo(spark, sink_extract):
     from extract_cbd_shape_spark.operators.kgtriples import (
         KBO_SHAPE_IRI, KBO_SHAPE_TTL, kbo_members)
 
@@ -131,7 +129,7 @@ def test_engine_parity_kbo(spark):
 
     t2 = triples.withColumn("store_key", F.split(F.col("subject"), ":")[1])
     m2 = members.withColumn("store_key", F.split(F.col("entity"), ":")[1])
-    l = local_bulk_extract(t2, m2, shapes_graph=shapes, shape=shape)
+    l = sink_extract(t2, m2, shapes_graph=shapes, shape=shape)
     lset = {tuple(r) for r in
             l.select("entity", "subject", "predicate", "object_value").collect()}
     assert gset == lset
@@ -167,7 +165,7 @@ ex:LeafShape a sh:NodeShape ;
 """
 
 
-def _vec_vs_loop(spark, shape_ttl, shape_iri, bulk, ignore=()):
+def _vec_vs_loop(spark, sink_extract, shape_ttl, shape_iri, bulk, ignore=()):
     quads = [quad_to_row(q) for q in parse_trig(VEC_CORPUS)]
     tdf = spark.createDataFrame(quads, schema=_QUAD_SCHEMA).withColumn(
         "store_key", F.lit("s1"))
@@ -177,9 +175,9 @@ def _vec_vs_loop(spark, shape_ttl, shape_iri, bulk, ignore=()):
     sg = ShapesGraph.from_quads(parse_trig(shape_ttl)) if shape_ttl else None
     shape = Term(IRI, shape_iri) if shape_iri else None
     kw = dict(shapes_graph=sg, shape=shape, bulk=bulk,
-              graphs_to_ignore=ignore, n_buckets=2)
-    vec = local_bulk_extract(tdf, mem, vectorize=True, **kw)
-    loop = local_bulk_extract(tdf, mem, vectorize=False, **kw)
+              graphs_to_ignore=ignore)
+    vec = sink_extract(tdf, mem, vectorize=True, **kw)
+    loop = sink_extract(tdf, mem, vectorize=False, **kw)
     vrows = {tuple(r) for r in vec.collect()}
     lrows = {tuple(r) for r in loop.collect()}
     assert vrows == lrows
@@ -194,26 +192,27 @@ _QUAD_SCHEMA = (
 )
 
 
-def test_vec_parity_cbd_only(spark):
-    _vec_vs_loop(spark, None, None, bulk=False)
+def test_vec_parity_cbd_only(spark, sink_extract):
+    _vec_vs_loop(spark, sink_extract, None, None, bulk=False)
 
 
-def test_vec_parity_bulk_isolation_and_pickup(spark):
-    rows = _vec_vs_loop(spark, None, None, bulk=True)
+def test_vec_parity_bulk_isolation_and_pickup(spark, sink_extract):
+    rows = _vec_vs_loop(spark, sink_extract, None, None, bulk=True)
     a = {r[4] for r in rows if r[0] == "http://example.org/A"}
     assert "own graph quad" in a          # named-graph pickup
     assert "should not leak into A via CBD" not in a  # bulk isolation
 
 
-def test_vec_parity_shape_links(spark):
-    _vec_vs_loop(spark, VEC_SHAPE, "http://example.org/RootShape", bulk=False)
-    _vec_vs_loop(spark, VEC_SHAPE, "http://example.org/RootShape", bulk=True)
+def test_vec_parity_shape_links(spark, sink_extract):
+    for bulk in (False, True):
+        _vec_vs_loop(spark, sink_extract, VEC_SHAPE,
+                     "http://example.org/RootShape", bulk=bulk)
 
 
-def test_vec_parity_graphs_to_ignore(spark):
+def test_vec_parity_graphs_to_ignore(spark, sink_extract):
     from extract_cbd_shape_spark.model import Term as T
     rows = _vec_vs_loop(
-        spark, None, None, bulk=False,
+        spark, sink_extract, None, None, bulk=False,
         ignore=(T(IRI, "http://example.org/GA"),))
     a = {r[4] for r in rows if r[0] == "http://example.org/A"}
     assert "in-A-graph" not in a
@@ -298,7 +297,7 @@ def test_vec_gate_rejects_literal_focus_inverse_first_child():
     ("ZeroOrMorePathShape2", "A"),
     ("ZeroOrMorePathShape2", "B"),
 ])
-def test_vec_parity_forward_sequence_alternative(spark, shape, entity):
+def test_vec_parity_forward_sequence_alternative(spark, sink_extract, shape, entity):
     """r3 kernel extension: forward sequences/alternatives run as
     chained CSR gathers — parity with the interpreter on the
     reference's own path fixtures (tests/05)."""
@@ -312,16 +311,15 @@ def test_vec_parity_forward_sequence_alternative(spark, shape, entity):
         "store_key", F.lit("s1"))
     mem = spark.createDataFrame([(EX + entity,)], "entity string").withColumn(
         "store_key", F.lit("s1"))
-    kw = dict(shapes_graph=sg, shape=Term(IRI, EX + shape), bulk=False,
-              n_buckets=1)
+    kw = dict(shapes_graph=sg, shape=Term(IRI, EX + shape), bulk=False)
     vec = {tuple(r) for r in
-           local_bulk_extract(tdf, mem, vectorize=True, **kw).collect()}
+           sink_extract(tdf, mem, vectorize=True, **kw).collect()}
     loop = {tuple(r) for r in
-            local_bulk_extract(tdf, mem, vectorize=False, **kw).collect()}
+            sink_extract(tdf, mem, vectorize=False, **kw).collect()}
     assert vec == loop and len(vec) > 0
 
 
-def test_vec_parity_multihop_nodelink(spark):
+def test_vec_parity_multihop_nodelink(spark, sink_extract):
     """A 2-hop sequence nodeLink: the intermediate hop is an IRI the
     CBD star never reaches — witnesses for the match chain and the
     linked shape's extraction must both appear, vec == interpreter."""
@@ -348,11 +346,11 @@ ex:Leaf ex:val "leaf star" ; ex:other "leaf star 2" .
         [("http://example.org/M",)], "entity string").withColumn(
         "store_key", F.lit("s1"))
     kw = dict(shapes_graph=sg, shape=Term(IRI, EX + "RootShape"),
-              bulk=False, n_buckets=1)
+              bulk=False)
     vec = {tuple(r) for r in
-           local_bulk_extract(tdf, mem, vectorize=True, **kw).collect()}
+           sink_extract(tdf, mem, vectorize=True, **kw).collect()}
     loop = {tuple(r) for r in
-            local_bulk_extract(tdf, mem, vectorize=False, **kw).collect()}
+            sink_extract(tdf, mem, vectorize=False, **kw).collect()}
     assert vec == loop
     vals = {r[4] for r in vec}
     # root star (2) + hop-2 witness (Mid->Leaf) + leaf star (2);
@@ -364,7 +362,7 @@ ex:Leaf ex:val "leaf star" ; ex:other "leaf star 2" .
     assert len(vec) == 5
 
 
-def test_vec_parity_alternative_chain_link(spark):
+def test_vec_parity_alternative_chain_link(spark, sink_extract):
     """Non-closed forward alternative, both as a match path and as a
     nodeLink pattern ((a|b)/c link): vec == interpreter, and targets
     reached through EITHER branch are claimed and extracted."""
@@ -395,11 +393,11 @@ ex:L2 ex:val "v2" .
         [("http://example.org/M",)], "entity string").withColumn(
         "store_key", F.lit("s1"))
     kw = dict(shapes_graph=sg, shape=Term(IRI, EX + "RootShape"),
-              bulk=False, n_buckets=1)
+              bulk=False)
     vec = {tuple(r) for r in
-           local_bulk_extract(tdf, mem, vectorize=True, **kw).collect()}
+           sink_extract(tdf, mem, vectorize=True, **kw).collect()}
     loop = {tuple(r) for r in
-            local_bulk_extract(tdf, mem, vectorize=False, **kw).collect()}
+            sink_extract(tdf, mem, vectorize=False, **kw).collect()}
     assert vec == loop
     vals = {r[4] for r in vec}
     assert {"v1", "v2"} <= vals  # both branches' leaves extracted
@@ -407,7 +405,7 @@ ex:L2 ex:val "v2" .
     assert len(vec) == 6
 
 
-def test_vec_parity_inverse_chain_link(spark):
+def test_vec_parity_inverse_chain_link(spark, sink_extract):
     """Inverse nodeLink (^ptr -> child shape): targets come from the
     object-sorted CSR and the linked shape extracts at the SUBJECT of
     the incoming quad; the inverse match witness is emitted even at
@@ -436,11 +434,11 @@ ex:Other ex:ptr ex:Unrelated .
         [("http://example.org/M",)], "entity string").withColumn(
         "store_key", F.lit("s1"))
     kw = dict(shapes_graph=sg, shape=Term(IRI, EX + "RootShape"),
-              bulk=False, n_buckets=1)
+              bulk=False)
     vec = {tuple(r) for r in
-           local_bulk_extract(tdf, mem, vectorize=True, **kw).collect()}
+           sink_extract(tdf, mem, vectorize=True, **kw).collect()}
     loop = {tuple(r) for r in
-            local_bulk_extract(tdf, mem, vectorize=False, **kw).collect()}
+            sink_extract(tdf, mem, vectorize=False, **kw).collect()}
     assert vec == loop
     vals = {r[4] for r in vec}
     assert "root star" in vals          # M's CBD
@@ -451,7 +449,7 @@ ex:Other ex:ptr ex:Unrelated .
     assert len(vec) == 4
 
 
-def test_vec_inverse_literal_identity(spark):
+def test_vec_inverse_literal_identity(spark, sink_extract):
     """A forward-then-inverse chain through a LITERAL focus matches by
     full literal identity (value, lang, datatype) — lib/Utils.ts:85-92:
     "lit" must not match "lit"@en. vec == interpreter."""
@@ -476,11 +474,11 @@ ex:Y ex:q "lit"@en .
         [("http://example.org/M",)], "entity string").withColumn(
         "store_key", F.lit("s1"))
     kw = dict(shapes_graph=sg, shape=Term(IRI, EX + "RootShape"),
-              bulk=False, n_buckets=1)
+              bulk=False)
     vec = {tuple(r) for r in
-           local_bulk_extract(tdf, mem, vectorize=True, **kw).collect()}
+           sink_extract(tdf, mem, vectorize=True, **kw).collect()}
     loop = {tuple(r) for r in
-            local_bulk_extract(tdf, mem, vectorize=False, **kw).collect()}
+            sink_extract(tdf, mem, vectorize=False, **kw).collect()}
     assert vec == loop
     subs = {r[1] for r in vec}
     assert EX + "X" in subs      # plain "lit" matches
@@ -488,7 +486,7 @@ ex:Y ex:q "lit"@en .
     assert len(vec) == 2         # M's star + X's inverse witness
 
 
-def test_vec_parity_bulk_isolation_through_inverse(spark):
+def test_vec_parity_bulk_isolation_through_inverse(spark, sink_extract):
     """Bulk member isolation applies to inverse hops too: an incoming
     edge stored in ANOTHER member's named graph must not be matched
     (lib/CBDShapeExtractor.ts:95-99 via Path.ts:66)."""
@@ -513,18 +511,18 @@ ex:M2 { ex:In2 ex:ptr ex:M1 . }
         [("http://example.org/M1",), ("http://example.org/M2",)],
         "entity string").withColumn("store_key", F.lit("s1"))
     kw = dict(shapes_graph=sg, shape=Term(IRI, EX + "InvShape"),
-              bulk=True, n_buckets=1)
+              bulk=True)
     vec = {tuple(r) for r in
-           local_bulk_extract(tdf, mem, vectorize=True, **kw).collect()}
+           sink_extract(tdf, mem, vectorize=True, **kw).collect()}
     loop = {tuple(r) for r in
-            local_bulk_extract(tdf, mem, vectorize=False, **kw).collect()}
+            sink_extract(tdf, mem, vectorize=False, **kw).collect()}
     assert vec == loop
     m1_subs = {r[1] for r in vec if r[0] == EX + "M1"}
     assert EX + "In1" in m1_subs      # default-graph incoming edge
     assert EX + "In2" not in m1_subs  # lives in M2's named graph
 
 
-def test_vec_parity_shaped_cbd_default_graph(spark):
+def test_vec_parity_shaped_cbd_default_graph(spark, sink_extract):
     """cbd_default_graph narrows ONLY the CBD star, not path matching
     (reference: extractCbdDefaultGraph guards the star lookup,
     lib/CBDShapeExtractor.ts:479). A match-path witness living in a
@@ -550,17 +548,17 @@ ex:G { ex:A ex:name "named graph witness" . }
     ).withColumn("store_key", F.lit("s1"))
     sg = ShapesGraph.from_quads(parse_trig(shape_ttl))
     kw = dict(shapes_graph=sg, shape=Term(IRI, EX + "NameShape"),
-              bulk=False, cbd_default_graph=True, n_buckets=1)
+              bulk=False, cbd_default_graph=True)
     vec = {tuple(r) for r in
-           local_bulk_extract(tdf, mem, vectorize=True, **kw).collect()}
+           sink_extract(tdf, mem, vectorize=True, **kw).collect()}
     loop = {tuple(r) for r in
-            local_bulk_extract(tdf, mem, vectorize=False, **kw).collect()}
+            sink_extract(tdf, mem, vectorize=False, **kw).collect()}
     assert vec == loop
     assert len(vec) == 2  # star quad + named-graph path witness
     assert "named graph witness" in {r[4] for r in vec}
 
 
-def test_bfs_claim_contract_vec_matches_global(spark):
+def test_bfs_claim_contract_vec_matches_global(spark, sink_extract):
     """Bulk-engine claim contract (ADVICE r2, medium): when a node is
     reachable through nodeLinks to DIFFERENT shapes at different depths,
     both bulk engines (vectorized kernel, global fixpoint) claim the
@@ -604,8 +602,8 @@ ex:Z ex:v "only reached when X is claimed by CShape" .
 
     t2 = tdf.withColumn("store_key", F.lit("s1"))
     m2 = mem.withColumn("store_key", F.lit("s1"))
-    vec = local_bulk_extract(t2, m2, shapes_graph=sg, shape=shape,
-                             vectorize=True, n_buckets=1)
+    vec = sink_extract(t2, m2, shapes_graph=sg, shape=shape,
+                       vectorize=True)
     vset = {tuple(r) for r in vec.select(*cols).collect()}
     assert vset == gset
     # BFS claim: X=BShape at depth 1, so Z is never reached
@@ -615,80 +613,62 @@ ex:Z ex:v "only reached when X is claimed by CShape" .
     # the interpreter's DFS claims X=CShape (pc link comes first) and
     # DOES reach Z — the documented divergence
     interp = {tuple(r) for r in
-              local_bulk_extract(t2, m2, shapes_graph=sg, shape=shape,
-                                 vectorize=False, n_buckets=1)
+              sink_extract(t2, m2, shapes_graph=sg, shape=shape,
+                           vectorize=False)
               .select(*cols).collect()}
     assert any(r[1] == EX + "Z" for r in interp)
     assert len(interp) == 5
 
 
-def test_giant_store_fallback_parity(spark):
-    """A store above giant_store_threshold routes through the global
-    engine; results must equal the pure store-local run."""
-    from extract_cbd_shape_spark.operators.kgtriples import (
-        KBO_SHAPE_IRI, KBO_SHAPE_TTL, kbo_members)
-
-    triples, members = kbo_members(spark, "/root/testdata/sf0.001")
-    shapes = ShapesGraph.from_quads(parse_trig(KBO_SHAPE_TTL))
-    shape = Term(IRI, KBO_SHAPE_IRI)
-    # two stores: one giant (every order with key < 1000), one normal
-    giant_key = F.when(F.col("subject").rlike("^[ma]:[0-9]{1,3}$"),
-                       F.lit("giant")).otherwise(F.split(F.col("subject"), ":")[1])
-    t2 = triples.withColumn("store_key", giant_key)
-    m2 = members.withColumn(
-        "store_key",
-        F.when(F.col("entity").rlike("^m:[0-9]{1,3}$"), F.lit("giant"))
-        .otherwise(F.split(F.col("entity"), ":")[1]),
-    )
-    kw = dict(shapes_graph=shapes, shape=shape, n_buckets=8)
-    plain = local_bulk_extract(t2, m2, **kw)
-    routed = local_bulk_extract(t2, m2, giant_store_threshold=500, **kw)
-    pset = {tuple(r) for r in
-            plain.select("entity", "subject", "predicate", "object_value").collect()}
-    rset = {tuple(r) for r in
-            routed.select("entity", "subject", "predicate", "object_value").collect()}
-    assert pset == rset
-    assert len(pset) > 0
-
-
-def test_prebucketed_store_parity(spark, tmp_path):
-    """materialize_store + zero-shuffle extraction must equal the
-    shuffling engine, both with marker members and with members derived
-    from IRI subjects; the physical plan must contain no Exchange."""
+def test_prebucketed_store_parity(spark, sink_extract, tmp_path):
+    """materialize_store + the sink-fused kernel must equal the
+    per-member interpreter, both with marker members and with members
+    derived from IRI subjects; the physical plan must contain no
+    Exchange."""
     from extract_cbd_shape_spark.operators.kgtriples import (
         KBO_SHAPE_IRI, KBO_SHAPE_TTL, kbo_members)
     from extract_cbd_shape_spark.operators.local_extract import (
-        local_bulk_extract_prebucketed, materialize_store, read_store)
+        extract_store_files_to_store, materialize_store)
+    from extract_cbd_shape_spark.sinks.materialize import (
+        latest_snapshot_path, materialize_table)
 
     triples, members = kbo_members(spark, "/root/testdata/sf0.001")
     shapes = ShapesGraph.from_quads(parse_trig(KBO_SHAPE_TTL))
     shape = Term(IRI, KBO_SHAPE_IRI)
     t2 = triples.withColumn("store_key", F.split(F.col("subject"), ":")[1])
     m2 = members.withColumn("store_key", F.split(F.col("entity"), ":")[1])
-
-    base = local_bulk_extract(t2, m2, shapes_graph=shapes, shape=shape)
-    bset = {tuple(r) for r in
-            base.select("entity", "subject", "predicate", "object_value").collect()}
-
     cols = ["entity", "subject", "predicate", "object_value"]
-    st = read_store(spark, materialize_store(
-        t2, m2, str(tmp_path / "store"), n_buckets=8))
-    pre = local_bulk_extract_prebucketed(st, shapes_graph=shapes, shape=shape)
-    assert "Exchange" not in pre._jdf.queryExecution().executedPlan().toString()
-    pset = {tuple(r) for r in pre.select(*cols).collect()}
+
+    base = sink_extract(t2, m2, shapes_graph=shapes, shape=shape,
+                        vectorize=False)
+    bset = {tuple(r) for r in base.select(*cols).collect()}
+
+    store = materialize_store(t2, m2, str(tmp_path / "store"))
+    manifest = extract_store_files_to_store(
+        spark, store, str(tmp_path / "out"), shapes_graph=shapes,
+        shape=shape)
+    assert "Exchange" not in (
+        manifest._jdf.queryExecution().executedPlan().toString())
+    manifest.collect()
+    pset = {tuple(r) for r in
+            spark.read.parquet(str(tmp_path / "out")).select(*cols).collect()}
     assert pset == bset and len(pset) > 0
 
-    # quads-only store; members derived per store from IRI subjects
-    # (KBO subjects are exactly the member IRIs + address blanks)
-    st2 = read_store(spark, materialize_store(
-        t2, None, str(tmp_path / "store2"), n_buckets=8))
-    pre2 = local_bulk_extract_prebucketed(
-        st2, shapes_graph=shapes, shape=shape, members_from_subjects=True)
-    p2set = {tuple(r) for r in pre2.select(*cols).collect()}
+    # quads-only store bucketed like the pipeline's raw_triples; members
+    # derived per store from IRI subjects (KBO subjects are exactly the
+    # member IRIs + address blanks)
+    materialize_table(t2, str(tmp_path / "quads"), "quads",
+                      bucket_by="store_key")
+    extract_store_files_to_store(
+        spark, latest_snapshot_path(str(tmp_path / "quads")),
+        str(tmp_path / "out2"), shapes_graph=shapes, shape=shape,
+        members_from_subjects=True).collect()
+    p2set = {tuple(r) for r in spark.read.parquet(
+        str(tmp_path / "out2")).select(*cols).collect()}
     assert p2set == bset
 
 
-def test_duplicated_store_dedup_parity(spark):
+def test_duplicated_store_dedup_parity(spark, sink_extract):
     """Reference uniqueQuads (lib/Utils.ts:44-64): a duplicated store
     quad appears ONCE per extraction. The vectorized kernel must match
     the interpreter on a corpus with duplicate rows; store_distinct=True
@@ -704,31 +684,29 @@ def test_duplicated_store_dedup_parity(spark):
     dup = t2.unionByName(t2.limit(500))  # duplicate a slice of quads
 
     cols = ["entity", "subject", "predicate", "object_value"]
-    interp = local_bulk_extract(
+    interp = sink_extract(
         dup, m2, shapes_graph=shapes, shape=shape, vectorize=False)
     iset = sorted(tuple(r) for r in interp.select(*cols).collect())
     assert len(iset) == len(set(iset)), "interpreter emits unique quads"
 
-    vec = local_bulk_extract(dup, m2, shapes_graph=shapes, shape=shape)
+    vec = sink_extract(dup, m2, shapes_graph=shapes, shape=shape)
     vset = sorted(tuple(r) for r in vec.select(*cols).collect())
     assert vset == iset
 
     # distinct input + store_distinct=True: same result, dedup skipped
-    fast = local_bulk_extract(
+    fast = sink_extract(
         t2, m2, shapes_graph=shapes, shape=shape, store_distinct=True)
     assert sorted(tuple(r) for r in fast.select(*cols).collect()) == iset
 
 
-def test_file_scan_and_sink_fused_parity(spark, tmp_path):
-    """The python-native scan (local_bulk_extract_files) and the
-    sink-fused variant (extract_store_files_to_store) must produce the
-    exact quad set of the shuffling engine — the JVM-free data path is
-    a physical strategy, not a semantics change (BENCH_LAYERS.md)."""
+def test_file_scan_and_sink_fused_parity(spark, sink_extract, tmp_path):
+    """The sink-fused kernel's lineage manifest: one row per bucket file
+    whose row counts sum to the landed result, and a re-run (simulated
+    task retry) over the same output dir is idempotent."""
     from extract_cbd_shape_spark.operators.kgtriples import (
         KBO_SHAPE_IRI, KBO_SHAPE_TTL, kbo_members)
     from extract_cbd_shape_spark.operators.local_extract import (
-        extract_store_files_to_store, local_bulk_extract_files,
-        materialize_store)
+        _store_files, extract_store_files_to_store, materialize_store)
 
     triples, members = kbo_members(spark, "/root/testdata/sf0.001")
     shapes = ShapesGraph.from_quads(parse_trig(KBO_SHAPE_TTL))
@@ -736,58 +714,20 @@ def test_file_scan_and_sink_fused_parity(spark, tmp_path):
     t2 = triples.withColumn("store_key", F.split(F.col("subject"), ":")[1])
     m2 = members.withColumn("store_key", F.split(F.col("entity"), ":")[1])
     cols = ["entity", "subject", "predicate", "object_value"]
-    base = local_bulk_extract(t2, m2, shapes_graph=shapes, shape=shape)
-    bset = {tuple(r) for r in base.select(*cols).collect()}
 
-    store_path = materialize_store(t2, m2, str(tmp_path / "store"),
-                                   n_buckets=8)
-    fs = local_bulk_extract_files(
-        spark, store_path, shapes_graph=shapes, shape=shape)
-    plan = fs._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    fset = {tuple(r) for r in fs.select(*cols).collect()}
-    assert fset == bset and len(fset) > 0
-
-    # interpreter kernel over the same file manifest
-    fs_i = local_bulk_extract_files(
-        spark, store_path, shapes_graph=shapes, shape=shape,
-        vectorize=False)
-    assert {tuple(r) for r in fs_i.select(*cols).collect()} == bset
-
-    # sink-fused: manifest counts match, landed files re-read to the
-    # same set, and a re-run (simulated task retry) is idempotent
+    store_path = materialize_store(t2, m2, str(tmp_path / "store"))
     out = str(tmp_path / "extracted")
+    first = None
     for _ in range(2):
-        manifest = extract_store_files_to_store(
-            spark, store_path, out, shapes_graph=shapes, shape=shape)
-        rows = manifest.collect()
-        assert sum(r["rows"] for r in rows) == fs.count()
-        assert len(rows) == 8
+        rows = extract_store_files_to_store(
+            spark, store_path, out, shapes_graph=shapes, shape=shape,
+        ).collect()
+        assert len(rows) == len(_store_files(store_path))
         landed = spark.read.parquet(out)
-        assert {tuple(r) for r in landed.select(*cols).collect()} == bset
-
-
-def test_read_store_does_not_mutate_session_conf(spark, tmp_path):
-    """read_store's no-split guard must stay scoped to its own cloned
-    session — the caller's maxPartitionBytes is untouched (ADVICE r2)."""
-    from extract_cbd_shape_spark.operators.kgtriples import kbo_members
-    from extract_cbd_shape_spark.operators.local_extract import (
-        materialize_store, read_store)
-
-    key = "spark.sql.files.maxPartitionBytes"
-    spark.conf.set(key, "4096")  # below any real bucket file size
-    try:
-        t2, m2 = kbo_members(spark, "/root/testdata/sf0.001")
-        t2 = t2.withColumn("store_key", F.split(F.col("subject"), ":")[1])
-        st = read_store(spark, materialize_store(
-            t2, None, str(tmp_path / "store"), n_buckets=4))
-        assert st.count() > 0
-        assert spark.conf.get(key) == "4096"
-        # the scan itself must still be no-split: 4 bucket files -> at
-        # most 4 partitions even though each file exceeds 4096 bytes
-        assert st.rdd.getNumPartitions() <= 4
-    finally:
-        spark.conf.unset(key)
+        assert sum(r["rows"] for r in rows) == landed.count()
+        got = {tuple(r) for r in landed.select(*cols).collect()}
+        assert got and (first is None or got == first)
+        first = got
 
 
 def test_deep_nodelink_chain_no_recursion_error():
@@ -848,49 +788,17 @@ def test_vec_deep_chain_linear_growth():
     assert t8k < t2k * 10  # linear is ~4x; quadratic ~16x
 
 
-def test_projected_columns_parity(spark, tmp_path):
-    """columns= projection pushdown (kernel emits only the requested
-    columns through Arrow) must equal the post-hoc .select, on the
-    vectorized kernel, the per-member interpreter, and the zero-shuffle
-    pre-bucketed store with a pruned input scan."""
-    from extract_cbd_shape_spark.operators.kgtriples import (
-        KBO_SHAPE_IRI, KBO_SHAPE_TTL, kbo_members)
-    from extract_cbd_shape_spark.operators.local_extract import (
-        local_bulk_extract_prebucketed, materialize_store, read_store)
-
-    triples, members = kbo_members(spark, "/root/testdata/sf0.001")
-    shapes = ShapesGraph.from_quads(parse_trig(KBO_SHAPE_TTL))
-    shape = Term(IRI, KBO_SHAPE_IRI)
-    t2 = triples.withColumn("store_key", F.split(F.col("subject"), ":")[1])
-    m2 = members.withColumn("store_key", F.split(F.col("entity"), ":")[1])
-    cols = ["entity", "subject", "predicate", "object_value"]
-
-    base = local_bulk_extract(t2, m2, shapes_graph=shapes, shape=shape)
-    bset = {tuple(r) for r in base.select(*cols).collect()}
-    assert len(bset) > 0
-
-    for vec in (True, False):
-        proj = local_bulk_extract(
-            t2, m2, shapes_graph=shapes, shape=shape, vectorize=vec,
-            columns=cols)
-        assert [f.name for f in proj.schema.fields] == cols
-        assert {tuple(r) for r in proj.collect()} == bset
-
-    st = read_store(spark, materialize_store(
-        t2, m2, str(tmp_path / "store"), n_buckets=8))
-    pre = local_bulk_extract_prebucketed(
-        st.drop("object_lang", "object_datatype"),
-        shapes_graph=shapes, shape=shape, columns=cols)
-    assert {tuple(r) for r in pre.collect()} == bset
-
-
-def test_vec_cross_store_isolation_same_bucket(spark):
+def test_vec_cross_store_isolation_same_bucket(spark, sink_extract):
     """Two stores in ONE kernel bucket sharing node names (same blank
     label, same downstream IRI) must not leak quads across stores (the
     CSR kernel keys nodes by (store, value, kind)); vectorized ==
     interpreter on both the default and cbd_default_graph traversals."""
+    # s3 and s5 hash to the same materialize_store bucket
+    bucket = F.pmod(F.xxhash64(F.col("k")), F.lit(32))
+    assert spark.createDataFrame([("s3",), ("s5",)], "k string").select(
+        bucket).distinct().count() == 1
     rows = []
-    for store, member in (("s1", "http://x/A1"), ("s2", "http://x/A2")):
+    for store, member in (("s3", "http://x/A1"), ("s5", "http://x/A2")):
         rows += [
             (member, 0, "http://x/child", "b0", 1,
              None, None, None, None, store),
@@ -907,21 +815,21 @@ def test_vec_cross_store_isolation_same_bucket(spark):
     tdf = spark.createDataFrame(
         rows, _QUAD_SCHEMA + ", store_key string")
     mem = spark.createDataFrame(
-        [("http://x/A1", "s1"), ("http://x/A2", "s2")],
+        [("http://x/A1", "s3"), ("http://x/A2", "s5")],
         "entity string, store_key string")
     for cbd_dg in (False, True):
-        kw = dict(bulk=False, cbd_default_graph=cbd_dg, n_buckets=1)
+        kw = dict(bulk=False, cbd_default_graph=cbd_dg)
         vec = {tuple(r) for r in
-               local_bulk_extract(tdf, mem, vectorize=True, **kw).collect()}
+               sink_extract(tdf, mem, vectorize=True, **kw).collect()}
         loop = {tuple(r) for r in
-                local_bulk_extract(tdf, mem, vectorize=False, **kw).collect()}
+                sink_extract(tdf, mem, vectorize=False, **kw).collect()}
         assert vec == loop
         # A1 reaches b0 via blank closure: must see ONLY s1's street
         a1_streets = {r[4] for r in vec
                       if r[0] == "http://x/A1" and r[3] == "http://x/street"}
-        assert a1_streets == {"st-s1"}
+        assert a1_streets == {"st-s3"}
         a2_streets = {r[4] for r in vec
                       if r[0] == "http://x/A2" and r[3] == "http://x/street"}
-        assert a2_streets == {"st-s2"}
+        assert a2_streets == {"st-s5"}
         n_graph_quads = sum(1 for r in vec if r[3] == "http://x/extra")
         assert n_graph_quads == (0 if cbd_dg else 2)

@@ -1,4 +1,5 @@
-"""Unit tests for training-data operators on tiny hand-built inputs."""
+"""Unit tests for the closure, linking and similarity operators on tiny
+hand-built inputs."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -6,12 +7,6 @@ from pyspark.sql import functions as F
 from extract_cbd_shape_spark.operators.closure import (
     connected_components,
     transitive_closure,
-)
-from extract_cbd_shape_spark.operators.dedup import (
-    exact_dedup_groups,
-    minhash_lsh_dups,
-    ngram_jaccard_dups,
-    simhash,
 )
 from extract_cbd_shape_spark.operators.linking import link_mentions, mentions_from_docs
 from extract_cbd_shape_spark.operators.similarity import (
@@ -32,34 +27,6 @@ def docs(spark):
         [(1, TEXT_A), (2, TEXT_B), (3, TEXT_C), (4, TEXT_A)],
         "doc_id long, text string",
     )
-
-
-def test_exact_dedup(spark, docs):
-    groups = exact_dedup_groups(docs).collect()
-    assert len(groups) == 1
-    assert groups[0].n_docs == 2 and groups[0].representative == 1
-
-
-def test_minhash_lsh_finds_near_dups(spark, docs):
-    pairs = {(r.doc_a, r.doc_b): r.jaccard for r in
-             minhash_lsh_dups(docs, threshold=0.5).collect()}
-    assert (1, 4) in pairs and pairs[(1, 4)] == 1.0
-    assert (1, 2) in pairs and 0.5 <= pairs[(1, 2)] < 1.0
-    assert not any({a, b} == {1, 3} for a, b in pairs)
-
-
-def test_ngram_jaccard(spark, docs):
-    pairs = {(r.doc_a, r.doc_b) for r in
-             ngram_jaccard_dups(docs, threshold=0.5).collect()}
-    assert (1, 4) in pairs and (1, 2) in pairs
-
-
-def test_simhash_similar_docs_close(spark, docs):
-    sh = {r.doc_id: r.simhash for r in simhash(docs).collect()}
-    assert sh[1] == sh[4]
-    ham_near = bin(sh[1] ^ sh[2]).count("1")
-    ham_far = bin(sh[1] ^ sh[3]).count("1")
-    assert ham_near <= ham_far
 
 
 def test_transitive_closure_cycle(spark):

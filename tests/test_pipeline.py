@@ -335,3 +335,86 @@ def test_incremental_rerun_updates_derived_triples(spark, tmp_path):
         spark, os.path.join(wh_full, "derived_triples"))
         .select("subject", "predicate", "object_value").collect()}
     assert got == want
+
+
+@pytest.fixture(scope="module")
+def clean_warehouse(spark, tmp_path_factory):
+    """One clean pipeline run over a fixed page subset: (pages, warehouse)."""
+    pages = synth_pages(spark, SF).orderBy("url").limit(20).cache()
+    wh = str(tmp_path_factory.mktemp("clean") / "wh")
+    KGConstructionPipeline(spark, wh).run(pages, resume=False)
+    return pages, wh
+
+
+def _table_rows(spark, wh, table, cols):
+    return sorted(tuple(r) for r in read_latest_snapshot(
+        spark, os.path.join(wh, table)).select(*cols).collect())
+
+
+def test_leftover_sink_tmp_file_is_not_read(
+        spark, clean_warehouse, tmp_path, monkeypatch):
+    """A sink task killed between its result write and the rename, then
+    retried, leaves a complete temp copy next to the committed file;
+    readers must not count it, so the snapshot reads back exactly the
+    manifest rows."""
+    import glob
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from extract_cbd_shape_spark.operators import local_extract
+
+    class Killed(Exception):
+        pass
+
+    def killed(src, dst):
+        raise Killed()
+
+    _pages, clean = clean_warehouse
+    wh = str(tmp_path / "wh")
+    shutil.copytree(clean, wh)
+    table = os.path.join(wh, "entity_triples")
+    data = latest_snapshot_paths(table)[0]
+    victim = sorted(glob.glob(os.path.join(data, "*.parquet")))[0]
+    with monkeypatch.context() as m:
+        m.setattr(local_extract.os, "replace", killed)
+        with pytest.raises(Killed):
+            local_extract._write_atomic(pq.read_table(victim), victim)
+    leftovers = [f for f in os.listdir(data) if f.endswith(".tmp")]
+    assert len(leftovers) == 1  # the killed attempt's complete copy
+    assert read_latest_snapshot(spark, table).count() == \
+        latest_manifest(table)["rows"]
+
+
+def test_resume_reparses_snapshot_without_giant_stores(
+        spark, clean_warehouse, tmp_path):
+    """A raw_triples snapshot written before ingest-time skew detection
+    has no ``giant_stores``: resume re-parses it instead of trusting it,
+    and the final tables equal a clean run."""
+    import shutil
+
+    pages, clean = clean_warehouse
+    wh = str(tmp_path / "wh")
+    shutil.copytree(clean, wh)
+    raw = os.path.join(wh, "raw_triples")
+    path = os.path.join(raw, "snap-0000", "manifest.json")
+    with open(path) as f:
+        m = json.load(f)
+    for key in ("giant_stores", "giant_threshold", "delta_giant_stores"):
+        m.pop(key, None)
+    with open(path, "w") as f:
+        json.dump(m, f)
+
+    manifests = KGConstructionPipeline(spark, wh).run(pages, resume=True)
+    assert manifests["raw_triples"]["snapshot"] == 1  # re-parsed
+    assert "giant_stores" in latest_manifest(raw)
+    for table, cols in (
+            ("raw_triples", ["page_url", "subject", "predicate",
+                             "object_value"]),
+            ("entity_triples", ["entity", "subject", "predicate",
+                                "object_value"]),
+            ("links", ["subject", "predicate", "object_value"]),
+            ("entities", ["entity_iri", "canonical_id"]),
+            ("triples", ["subject", "predicate", "object_value"])):
+        assert _table_rows(spark, wh, table, cols) == \
+            _table_rows(spark, clean, table, cols), table

@@ -1,5 +1,6 @@
 """Randomized THREE-engine parity: global fixpoint engine vs store-local
-per-member interpreter vs CSR bucket kernel on seeded-random corpora.
+per-member interpreter vs CSR bucket kernel on seeded-random corpora
+(both store-local kernels run through the sink-fused path).
 
 Extends the store-agnostic parity idea of the reference
 (tests/08 - store agnostic/store-agnostic.test.ts:27-78 runs the same
@@ -25,7 +26,6 @@ from pyspark.sql import functions as F
 
 from extract_cbd_shape_spark.model import BLANK, IRI, LITERAL, QUAD_COLS, Term
 from extract_cbd_shape_spark.operators import BulkCBDShapeExtractor
-from extract_cbd_shape_spark.operators.local_extract import local_bulk_extract
 from extract_cbd_shape_spark.rdf import parse_trig
 from extract_cbd_shape_spark.shapes import ShapesGraph
 
@@ -67,7 +67,7 @@ def _random_store(rng: random.Random, si: int):
 
 
 @pytest.mark.parametrize("seed", range(5))
-def test_three_engine_parity_random_corpus(spark, seed):
+def test_three_engine_parity_random_corpus(spark, sink_extract, seed):
     rng = random.Random(1000 + seed)
     n_stores = 12
     rows, mem_rows, ignore = [], [], []
@@ -94,9 +94,9 @@ def test_three_engine_parity_random_corpus(spark, seed):
     cols = ["entity", *QUAD_COLS]
     out = {}
     for vec in (True, False):
-        df = local_bulk_extract(
+        df = sink_extract(
             tdf, mdf, shapes_graph=sg, shape=shape, bulk=bulk,
-            graphs_to_ignore=ignore, n_buckets=3, vectorize=vec)
+            graphs_to_ignore=ignore, vectorize=vec)
         out["vec" if vec else "interp"] = {
             tuple(r) for r in df.select(*cols).collect()}
 

@@ -1,0 +1,167 @@
+"""Paper semantics on hand-written fixtures (tests/fixtures/semantics),
+checked on every engine: the per-member interpreter (``extract_store``),
+the sink-fused store-local path with the CSR kernel and with the
+interpreter, and the global fixpoint engine (``BulkCBDShapeExtractor``).
+
+Every expected quad set below is written by hand from the CBD and
+named-graph rules, never produced by an engine:
+
+* CBD(n) = every quad with subject n, in any graph the run admits, plus
+  CBD(b) for every blank object b (visited nodes are not re-entered,
+  so blank cycles terminate). IRI objects are not expanded.
+* Named-graph pickup: every quad in the graph named after the member is
+  added, with no graph filter.
+* A graph is not admitted to a CBD when it is in graphs_to_ignore, or,
+  in a bulk run, when it is another member's named graph.
+
+Quads are compared as (entity, subject, predicate, object_value, graph);
+blank labels are the TriG labels without ``_:``, the default graph is
+None.
+"""
+
+import os
+
+import pytest
+
+from extract_cbd_shape_spark.model import IRI, QUAD_COLS, Term, quad_to_row
+from extract_cbd_shape_spark.operators import BulkCBDShapeExtractor
+from extract_cbd_shape_spark.operators.local_extract import extract_store
+from extract_cbd_shape_spark.rdf import parse_trig
+
+FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "semantics")
+EX = "http://example.org/"
+
+
+def _ex(*names):
+    return tuple(EX + n for n in names)
+
+
+A, B, M, X, G, M1, M2, IGN, KEEP = _ex(
+    "A", "B", "M", "X", "G", "M1", "M2", "Ign", "Keep")
+NAME, ADDR, KNOWS, STREET, GEO, LAT, BACK, SELF, NEXT = _ex(
+    "name", "addr", "knows", "street", "geo", "lat", "back", "self", "next")
+P, Q, R, S, V, W, OWN, LEAK = _ex("p", "q", "r", "s", "v", "w", "own", "leak")
+
+
+CASES = {
+    "cbd_blank_closure": dict(
+        members=[A, B], bulk=False, ignore=(),
+        expected={
+            # A's star (3 quads); ex:B is an IRI object, so B's star is
+            # not part of A's CBD. _:a1 is a blank object: its star (2)
+            # joins; _:a2 likewise (2). _:a2 ex:back _:a1 closes a
+            # cycle: _:a1 is already visited, so the walk stops. The
+            # incoming _:orphan ex:about ex:A is not an outgoing quad.
+            A: {(A, NAME, "A", None), (A, ADDR, "a1", None),
+                (A, KNOWS, B, None),
+                ("a1", STREET, "Main", None), ("a1", GEO, "a2", None),
+                ("a2", LAT, "51", None), ("a2", BACK, "a1", None)},
+            # B's star (2) plus the self-looping blank _:c1 (1), entered
+            # once.
+            B: {(B, NAME, "B", None), (B, SELF, "c1", None),
+                ("c1", NEXT, "c1", None)},
+        }),
+    "named_graph_pickup": dict(
+        members=[M], bulk=False, ignore=(),
+        expected={
+            # CBD(M): M's quads in the default graph and in ex:G (CBD
+            # spans graphs). Pickup: both quads of graph ex:M, whatever
+            # their subject. ex:X's default-graph quad is in neither.
+            M: {(M, P, "m-default", None), (M, Q, "m-in-G", G),
+                (X, R, "x-in-M", M), ("b", S, "blank-in-M", M)},
+        }),
+    "bulk_isolation": dict(
+        members=[M1, M2], bulk=True, ignore=(),
+        expected={
+            # CBD(M1) admits the default graph and M1's own graph; the
+            # ex:leak quad sits in M2's graph, another member's, so it
+            # is skipped. Pickup of graph ex:M1 adds nothing new.
+            M1: {(M1, P, "m1", None), (M1, OWN, "m1-own-graph", M1)},
+            # CBD(M2) = its two quads; pickup of graph ex:M2 adds the
+            # ex:leak quad (pickup has no graph filter).
+            M2: {(M2, P, "m2", None), (M2, OWN, "m2-own-graph", M2),
+                 (M1, LEAK, "m1-in-m2-graph", M2)},
+        }),
+    "bulk_off_no_isolation": dict(
+        fixture="bulk_isolation", members=[M1, M2], bulk=False, ignore=(),
+        expected={
+            # Without bulk no graph is another member's: CBD(M1) now
+            # takes the ex:leak quad from graph ex:M2 as well.
+            M1: {(M1, P, "m1", None), (M1, OWN, "m1-own-graph", M1),
+                 (M1, LEAK, "m1-in-m2-graph", M2)},
+            M2: {(M2, P, "m2", None), (M2, OWN, "m2-own-graph", M2),
+                 (M1, LEAK, "m1-in-m2-graph", M2)},
+        }),
+    "graphs_to_ignore": dict(
+        members=[A], bulk=False, ignore=(IGN,),
+        expected={
+            # CBD(A): the default-graph quad and the ex:Keep quad; the
+            # ex:Ign quad is ignored. Blank closure into _:k takes its
+            # default-graph quad but not its ex:Ign quad. Pickup adds
+            # graph ex:A's quad.
+            A: {(A, P, "default", None), (A, S, "k", KEEP),
+                ("k", V, "k-default", None), (A, OWN, "pickup", A)},
+        }),
+}
+
+
+def _load(name):
+    with open(os.path.join(FIXTURES, name + ".trig")) as f:
+        return parse_trig(f.read())
+
+
+def _want(case):
+    return {(e, *q) for e, qs in case["expected"].items() for q in qs}
+
+
+def _key(entity, row):
+    """(entity, subject, predicate, object_value, graph) of an output
+    row laid out as QUAD_COLS."""
+    q = dict(zip(QUAD_COLS, row))
+    return (entity, q["subject"], q["predicate"], q["object_value"],
+            q["graph"])
+
+
+@pytest.mark.parametrize("name", sorted(CASES))
+def test_interpreter(name):
+    case = CASES[name]
+    rows = [quad_to_row(q) for q in _load(case.get("fixture", name))]
+    got = {_key(e, q) for e, *q in extract_store(
+        rows, [(IRI, m) for m in case["members"]], None, None,
+        bulk=case["bulk"],
+        graphs_to_ignore=tuple((IRI, g) for g in case["ignore"]))}
+    assert got == _want(case)
+
+
+@pytest.mark.parametrize("vectorize", [True, False])
+@pytest.mark.parametrize("name", sorted(CASES))
+def test_store_local_sink(spark, sink_extract, name, vectorize):
+    from pyspark.sql import functions as F
+
+    from extract_cbd_shape_spark.sources import quads_to_df
+
+    case = CASES[name]
+    triples = quads_to_df(spark, _load(case.get("fixture", name))).withColumn(
+        "store_key", F.lit("s"))
+    members = spark.createDataFrame(
+        [(m, "s") for m in case["members"]], "entity string, store_key string")
+    out = sink_extract(
+        triples, members, bulk=case["bulk"], vectorize=vectorize,
+        graphs_to_ignore=tuple(Term(IRI, g) for g in case["ignore"]))
+    got = {_key(r["entity"], [r[c] for c in QUAD_COLS]) for r in out.collect()}
+    assert got == _want(case)
+
+
+@pytest.mark.parametrize("name", sorted(CASES))
+def test_global_engine(spark, name):
+    from extract_cbd_shape_spark.sources import quads_to_df
+
+    case = CASES[name]
+    triples = quads_to_df(spark, _load(case.get("fixture", name)))
+    res, _ = BulkCBDShapeExtractor(spark).extract(
+        triples, [Term(IRI, m) for m in case["members"]],
+        bulk=case["bulk"],
+        graphs_to_ignore=[Term(IRI, g) for g in case["ignore"]])
+    got = {_key(r["entity"], [r[c] for c in QUAD_COLS])
+           for r in res.select("entity", *QUAD_COLS).collect()}
+    assert got == _want(case)

@@ -1,5 +1,5 @@
 """Incremental (Structured Streaming) ingestion: exactly-once snapshot
-commits per micro-batch, and watermarked windowed aggregation."""
+commits per micro-batch, and epoch-replay idempotence."""
 
 import os
 
@@ -12,10 +12,8 @@ from extract_cbd_shape_spark.sinks.materialize import (
 )
 from extract_cbd_shape_spark.sources.pages import synth_pages
 from extract_cbd_shape_spark.streaming import (
-    pages_stream,
     stream_pages_to_triples,
     streaming_kg_construction,
-    streaming_page_metrics,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -137,233 +135,3 @@ def test_run_incremental_epoch_replay_idempotent(spark, tmp_path):
     assert dirs1 == dirs2
     assert m2["raw_triples"]["rows"] == m1["raw_triples"]["rows"]
     assert m2["entity_triples"]["rows"] == m1["entity_triples"]["rows"]
-
-
-def test_windowed_metrics_with_watermark(spark, waves):
-    root, pages, w1, _ = waves
-    pages_dir = str(root / "pages")  # written by previous test
-    stream = pages_stream(spark, pages_dir)
-    agg = streaming_page_metrics(stream, watermark="1 hour", window="1 hour")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("page_metrics")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.window_start, r.lang): r.n_pages
-        for r in spark.sql("SELECT * FROM page_metrics").collect()
-    }
-    want = {
-        (r.window_start, r.lang): r.n_pages
-        for r in (
-            pages.groupBy(
-                F.window("warc_ts", "1 hour").alias("w"), "lang"
-            )
-            .agg(F.count("*").alias("n_pages"))
-            .select(F.col("w.start").alias("window_start"), "lang", "n_pages")
-            .collect()
-        )
-    }
-    assert got == want
-
-
-def test_stateful_sessions_gap_and_timeout(spark, tmp_path):
-    """applyInPandasWithState sessionization: a session closes either
-    when a later same-key page exceeds the gap (wave 2) or when the
-    watermark passes its end + gap with no new data for the key
-    (wave 3 advances the watermark via another key -> event-time
-    timeout fires for 'en')."""
-    from datetime import datetime, timedelta
-
-    from extract_cbd_shape_spark.streaming import (
-        pages_stream,
-        streaming_lang_sessions,
-    )
-
-    pages_dir = str(tmp_path / "pages")
-    out = str(tmp_path / "sessions")
-    ckpt = str(tmp_path / "ckpt")
-    base = datetime(2024, 1, 1)
-
-    def page(lang, ts):
-        return (f"https://t/{lang}/{ts}", base + timedelta(seconds=ts),
-                b"<html></html>", "x", lang)
-
-    cols = "url string, warc_ts timestamp, html binary, text string, lang string"
-
-    def drain(rows):
-        spark.createDataFrame(rows, cols).coalesce(1).write.mode(
-            "append"
-        ).parquet(pages_dir)
-        q = (
-            streaming_lang_sessions(
-                pages_stream(spark, pages_dir), gap_seconds=10,
-                watermark="0 seconds",
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return {
-            (r.lang, int((r.session_start - base).total_seconds()),
-             int((r.session_end - base).total_seconds()), r.n_pages)
-            for r in spark.read.parquet(out).collect()
-        }
-
-    # wave 1: en has two gap-separated sessions in ONE batch — the
-    # first closes inside the function, the second stays open in state
-    got = drain([page("en", 1), page("en", 3), page("en", 30)])
-    assert got == {("en", 1, 3, 2)}
-
-    # wave 2: an en page 25s after the open session's end -> gap close
-    got = drain([page("en", 55)])
-    assert got == {("en", 1, 3, 2), ("en", 30, 30, 1)}
-
-    # wave 3 twice: de pages far ahead advance the watermark past the
-    # open en session's end + gap; its eviction needs a batch AFTER the
-    # watermark update, hence the second drain -> hasTimedOut path
-    drain([page("de", 120)])
-    got = drain([page("de", 125)])
-    assert ("en", 55, 55, 1) in got
-
-
-def test_stateful_sessions_out_of_order_batches(spark, tmp_path):
-    """Out-of-order arrivals across micro-batches (legal under a lagging
-    watermark) must sessionize as the UNION of carried state and batch
-    rows (ADVICE r2, medium): (a) batch rows older than the carried
-    session and outside the gap must NOT merge into it; (b) a carried
-    session bridging two batch sessions merges all three; (c) batch rows
-    older than the carried session must not displace it as the open
-    session."""
-    from datetime import datetime, timedelta
-
-    from extract_cbd_shape_spark.streaming import (
-        pages_stream,
-        streaming_lang_sessions,
-    )
-
-    base = datetime(2024, 1, 1)
-    cols = "url string, warc_ts timestamp, html binary, text string, lang string"
-
-    def page(lang, ts, tag=""):
-        return (f"https://t/{lang}/{ts}{tag}", base + timedelta(seconds=ts),
-                b"<html></html>", "x", lang)
-
-    def run(name, waves):
-        pages_dir = str(tmp_path / name / "pages")
-        out = str(tmp_path / name / "sessions")
-        ckpt = str(tmp_path / name / "ckpt")
-        got = set()
-        for i, rows in enumerate(waves):
-            spark.createDataFrame(rows, cols).coalesce(1).write.mode(
-                "append").parquet(pages_dir)
-            q = (
-                streaming_lang_sessions(
-                    pages_stream(spark, pages_dir), gap_seconds=10,
-                    # lagging watermark so old rows are still admitted
-                    watermark="1 hour",
-                )
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            got = {
-                (r.lang, int((r.session_start - base).total_seconds()),
-                 int((r.session_end - base).total_seconds()), r.n_pages)
-                for r in spark.read.parquet(out).collect()
-            }
-        return got
-
-    # (a) carried open session at t=100; late batch rows at t=5,7 are
-    # 93s BEFORE it — a separate session, closed, not a blind merge
-    got = run("older", [[page("en", 100)], [page("en", 5), page("en", 7)],
-                        [page("en", 200)]])
-    assert ("en", 5, 7, 2) in got
-    assert ("en", 100, 100, 1) in got  # carried session stayed intact
-
-    # (b) carried session at t=50 bridges late rows at t=42 and t=57:
-    # one merged session 42..57 of 3 pages, closed by t=200
-    got = run("bridge", [[page("en", 50)],
-                         [page("en", 42), page("en", 57)],
-                         [page("en", 200)]])
-    assert ("en", 42, 57, 3) in got
-
-    # (c) carried session at t=100 is NEWER than the whole late batch
-    # (t=5): the open session must remain t=100 (merging with t=200
-    # later), and t=5 closes as its own session
-    got = run("newer", [[page("en", 100)], [page("en", 5)],
-                        [page("en", 105)], [page("en", 300)]])
-    assert ("en", 5, 5, 1) in got
-    assert ("en", 100, 105, 2) in got
-
-
-def test_streaming_corpus_dedup_two_waves_and_replay(spark, tmp_path):
-    """Two availableNow drains dedup wave 2 against wave 1's index;
-    replaying a batch (the foreachBatch at-least-once contract) leaves
-    the output unchanged (dynamic epoch overwrite + epoch<batch index
-    read)."""
-    from extract_cbd_shape_spark.streaming.incremental import (
-        streaming_corpus_dedup,
-    )
-
-    docs_dir = str(tmp_path / "docs_in")
-    out = str(tmp_path / "dedup_out")
-    ckpt = str(tmp_path / "ckpt_dedup")
-    ddl = ("doc_id long, text string, lang string, source string, "
-           "n_chars long")
-
-    w1 = spark.createDataFrame(
-        [(1, "alpha", "en", "s", 5), (2, "beta", "en", "s", 4),
-         (3, "alpha", "en", "s", 5)],  # within-batch dup of 1
-        ddl)
-    w1.coalesce(1).write.mode("append").parquet(docs_dir)
-    q = streaming_corpus_dedup(spark, docs_dir, out, ckpt)
-    q.awaitTermination()
-
-    docs = spark.read.parquet(out + "/docs")
-    assert {r.doc_id for r in docs.collect()} == {1, 2}
-
-    w2 = spark.createDataFrame(
-        [(10, "beta", "en", "s", 4),     # dup of wave-1 doc 2
-         (11, "gamma", "en", "s", 5),    # novel
-         (12, "gamma", "en", "s", 5)],   # within-batch dup of 11
-        ddl)
-    w2.coalesce(1).write.mode("append").parquet(docs_dir)
-    q = streaming_corpus_dedup(spark, docs_dir, out, ckpt)
-    q.awaitTermination()
-
-    docs = spark.read.parquet(out + "/docs")
-    assert {r.doc_id for r in docs.collect()} == {1, 2, 11}
-    index = spark.read.parquet(out + "/index")
-    assert index.count() == 3  # alpha, beta, gamma
-
-    # replay wave 2's micro-batch directly: same epoch, same input —
-    # output identical (not doubled, not erased)
-    from extract_cbd_shape_spark.operators.dedup import (
-        dedup_new_against_index,
-    )
-    epochs = sorted(r.epoch for r in index.select("epoch").distinct().collect())
-    last_epoch = epochs[-1]
-    idx_before = {tuple(r) for r in index.collect()}
-    # re-enter the foreachBatch body by reconstructing it: read index
-    # below the replayed epoch, dedup, dynamic-overwrite the epoch
-    prior = (spark.read.parquet(out + "/index")
-             .filter(F.col("epoch") < last_epoch).select("text_hash"))
-    survivors = dedup_new_against_index(w2, prior)
-    assert {r.doc_id for r in survivors.collect()} == {11}
-    (survivors.select("text_hash").withColumn("epoch", F.lit(last_epoch))
-     .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-     .partitionBy("epoch").parquet(out + "/index"))
-    idx_after = {tuple(r) for r in spark.read.parquet(out + "/index").collect()}
-    assert idx_after == idx_before

@@ -12,13 +12,10 @@ Jobs (sized so executor work dominates fixed driver overhead):
 * extract_global — bulk shape extraction, global DataFrame fixpoint
   engine, KBO corpus at the sf (150k members / 2.1M quads at sf0.1).
 * extract_local  — same extraction via the store-local engine over a
-  PRE-BUCKETED store (materialize_store at ingest, untimed; the timed
-  job is the zero-shuffle scan -> Arrow kernel -> count).
+  store bucketed at ingest (materialize_store, untimed; the timed job
+  is the sink-fused worker-side read -> kernel -> write).
 * pipeline       — end-to-end KG construction over a replicated pages
   corpus.
-* minhash        — MinHash-LSH near-dup dedup over a replicated,
-  per-copy-decorrelated corpus (vowel rotation so copies are NOT
-  near-duplicates of each other; candidate pairs stay linear).
 
 Usage: python tools/bench_scaling.py [sf_dir] [lo_cpus] [hi_cpus] [job ...]
 (with job names given, only those rows are measured and printed;
@@ -50,13 +47,10 @@ kbo_rep = {"extract_global": replicate,
            "extract_global_ctrl": replicate,
            "sparkjoin": replicate,
            "extract_local": replicate,
-           "extract_files": replicate,
-           "extract_sink": replicate,
            # interpreter kernel is ~8x the CPU per quad: quarter corpus
            # keeps the cell wall-clock comparable
            "extract_local_interp": max(1, replicate // 4)}.get(job, 1)
 pipe_rep = replicate * 8
-mh_rep = replicate * 4
 from bench import build_spark
 spark = build_spark(cpus)
 spark.sparkContext.setLogLevel("ERROR")
@@ -70,7 +64,6 @@ from pyspark.sql import functions as F
 from extract_cbd_shape_spark.operators.kgtriples import (
     kbo_members, with_store_key, KBO_SHAPE_TTL, KBO_SHAPE_IRI)
 from extract_cbd_shape_spark.operators import BulkCBDShapeExtractor
-from extract_cbd_shape_spark.operators.local_extract import local_bulk_extract
 from extract_cbd_shape_spark.rdf import parse_trig
 from extract_cbd_shape_spark.shapes import ShapesGraph
 from extract_cbd_shape_spark.model import Term, IRI
@@ -121,60 +114,31 @@ if job in ("extract_global", "extract_global_mat"):
         store_distinct=True)
     n = ex.extract(triples, members, shape=shape)[0].count()
     out = dict(sec=time.time() - t0, units=n)
-elif job in ("extract_files", "extract_sink"):
-    # Python-native scan paths (BENCH_LAYERS.md): tasks read their
-    # complete bucket parquet with pyarrow inside the worker; for
-    # extract_sink the result parquet is written worker-side too, so
-    # no quad bytes cross the JVM in either direction.
+elif job in ("extract_local", "extract_local_interp"):
+    # Store-local engine as the pipeline runs it: sink-fused, tasks
+    # read their complete bucket parquet with pyarrow inside the worker
+    # and write the result parquet worker-side too, so no quad bytes
+    # cross the JVM in either direction (BENCH_LAYERS.md).
+    vectorize = job == "extract_local"
     from extract_cbd_shape_spark.operators.local_extract import (
-        extract_store_files_to_store, local_bulk_extract_files,
-        materialize_store)
+        extract_store_files_to_store, materialize_store)
     wt, wm = kbo_members(spark, "/root/testdata/sf0.001")
     wt, wm = with_store_key(wt, wm)
     wsp = materialize_store(wt, wm, work + "/wstore")
-    local_bulk_extract_files(
-        spark, wsp, shapes_graph=shapes, shape=shape).count()  # warm
-    tl, ml = kbo_members(spark, sf_dir, replicate=kbo_rep)
-    tl, ml = with_store_key(tl, ml)
-    sp = materialize_store(tl, ml, work + "/store", n_buckets=256)
-    if job == "extract_files":
-        t0 = time.time()
-        n = local_bulk_extract_files(
-            spark, sp, shapes_graph=shapes, shape=shape,
-            store_distinct=True).count()
-    else:
-        t0 = time.time()
-        n = extract_store_files_to_store(
-            spark, sp, work + "/out", shapes_graph=shapes, shape=shape,
-            store_distinct=True,
-        ).agg(F.sum("rows")).collect()[0][0]
-    out = dict(sec=time.time() - t0, units=n)
-elif job in ("extract_local", "extract_local_interp"):
-    vectorize = job == "extract_local"
-    from extract_cbd_shape_spark.operators.local_extract import (
-        local_bulk_extract_prebucketed, materialize_store, read_store)
-    wt, wm = kbo_members(spark, "/root/testdata/sf0.001")
-    wt, wm = with_store_key(wt, wm)
-    wst = read_store(spark, materialize_store(wt, wm, work + "/wstore"))
-    local_bulk_extract_prebucketed(
-        wst, shapes_graph=shapes, shape=shape,
-        vectorize=vectorize).count()  # warm
+    extract_store_files_to_store(
+        spark, wsp, work + "/wout", shapes_graph=shapes, shape=shape,
+        vectorize=vectorize).collect()  # warm
     # Ingest-time bucketing (materialize_store) is untimed: a corpus is
     # bucketed once when it lands, extractions run many times. The
-    # timed job is the steady state: zero-shuffle scan -> kernel.
+    # timed job is the steady state: read -> kernel -> write.
     tl, ml = kbo_members(spark, sf_dir, replicate=kbo_rep)
     tl, ml = with_store_key(tl, ml)
-    # Fixed bucket count at BOTH levels: identical input bytes, and
-    # enough tasks per core (256/8 = 32 waves at the hi level) that
-    # last-wave stragglers don't distort the efficiency ratio — the
-    # default (2x parallelism, min 64) left only 8 tasks/core at hi.
-    st = read_store(
-        spark, materialize_store(tl, ml, work + "/store", n_buckets=256)
-    )
+    sp = materialize_store(tl, ml, work + "/store")
     t0 = time.time()
-    n = local_bulk_extract_prebucketed(
-        st, shapes_graph=shapes, shape=shape, vectorize=vectorize,
-        store_distinct=True).count()
+    n = extract_store_files_to_store(
+        spark, sp, work + "/out", shapes_graph=shapes, shape=shape,
+        vectorize=vectorize, store_distinct=True,
+    ).agg(F.sum("rows")).collect()[0][0]
     out = dict(sec=time.time() - t0, units=n)
 elif job == "pipeline":
     from extract_cbd_shape_spark.plans.pipeline import KGConstructionPipeline
@@ -212,40 +176,6 @@ elif job == "sparkjoin":
         (fr.node == tt.subject) & (fr.node_kind == tt.subject_kind),
     ).count()
     out = dict(sec=time.time() - t0, units=n)
-elif job == "minhash":
-    from extract_cbd_shape_spark.operators.dedup import minhash_lsh_dups
-    docs = spark.read.parquet(sf_dir + "/documents.parquet").select(
-        "doc_id", "text")
-    # Decorrelate copies (rotate a 16-letter band per copy, period >=
-    # replicate) so copies are not near-duplicates of each other; one
-    # exact dup per doc inside each copy gives the verify stage work.
-    alpha = "abcdefghijklmnop"
-    digits = "0123456789"
-    parts = []
-    for i in range(mh_rep):
-        # combined rotation period 160 (letters x digits) >= mh_rep so
-        # no two copies share a mapping and become near-duplicates
-        k = i % len(alpha)
-        d = (i // len(alpha)) % len(digits)
-        rot = alpha[k:] + alpha[:k]
-        drot = digits[d:] + digits[:d]
-        di = docs.select(
-            (F.col("doc_id") + i * 10_000_000).alias("doc_id"),
-            F.translate(F.translate(
-                F.concat(F.lit("c%d " % i), F.col("text")), alpha, rot),
-                digits, drot).alias("text"))
-        parts.append(di)
-        parts.append(di.select((F.col("doc_id") + 1_000_000).alias("doc_id"),
-                               "text"))
-    corpus = parts[0]
-    for p_ in parts[1:]:
-        corpus = corpus.unionByName(p_)
-    corpus.write.mode("overwrite").parquet(work + "/corpus")
-    corpus = spark.read.parquet(work + "/corpus")
-    minhash_lsh_dups(corpus.limit(500), threshold=0.5).count()  # warm
-    t0 = time.time()
-    pairs = minhash_lsh_dups(corpus, threshold=0.5).count()
-    out = dict(sec=time.time() - t0, units=corpus.count(), pairs=pairs)
 else:
     raise SystemExit("unknown job " + job)
 
@@ -286,19 +216,13 @@ JOBS = [
     ("extract_global_ctrl",
      "global engine, codegen off (CPU-bound control) (quads/s)"),
     ("extract_local",
-     "bulk shape extraction, pre-bucketed store, zero-shuffle (quads/s)"),
+     "bulk shape extraction, store-local sink-fused (worker-side read "
+     "AND write; no quad bytes through the JVM) (quads/s)"),
     ("extract_local_interp",
      "same dataflow, interpreter kernel (CPU-bound control) (quads/s)"),
-    ("extract_files",
-     "pre-bucketed store, python-native scan (worker-side pyarrow "
-     "read) (quads/s)"),
-    ("extract_sink",
-     "pre-bucketed store, sink-fused (worker-side read AND write; no "
-     "quad bytes through the JVM) (quads/s)"),
     ("pipeline", "KG pipeline e2e (triples/s)"),
     ("pipeline_ctrl",
      "KG pipeline e2e, codegen off (CPU-bound control) (triples/s)"),
-    ("minhash", "MinHash-LSH dedup (docs/s)"),
     ("sparkjoin",
      "BARE-SPARK CONTROL: one shuffle_hash join, same corpus, no "
      "engine code (rows/s)"),
@@ -317,10 +241,9 @@ JOBS = [
 # spark.executor.pyspark.memory split; locally we pin the JVM to a fixed
 # 48g at BOTH levels (equal resources, only parallelism varies) and let
 # the OS give the rest to the workers. JVM-heavy jobs (fixpoint engine,
-# pipeline, minhash) keep the per-core heap model from bench.build_spark
+# pipeline) keep the per-core heap model from bench.build_spark
 # (N -> 4N executors brings 4x heap on a cluster).
-KERNEL_JOBS = {"extract_local", "extract_local_interp", "extract_files",
-               "extract_sink"}
+KERNEL_JOBS = {"extract_local", "extract_local_interp"}
 
 
 def _run_once(job: str, cpus: int) -> dict:
@@ -386,7 +309,7 @@ def main():
     table = "\n".join(rows)
     md = f"""# BENCH — scaling evidence (N vs 4N parallelism)
 
-Same input ({SF_DIR}; pipeline/minhash corpora replicated x{REPLICATE}),
+Same input ({SF_DIR}; pipeline corpus replicated x{REPLICATE}),
 same jobs, ONE FRESH JVM PER (job, level) so cached state never leaks
 between measurements, warm-up inside each JVM excluded from timing.
 Parallelism levels: local[{LO}] (N) vs local[{HI}] (4N) per the
@@ -409,8 +332,8 @@ shuffle, zero JVM — and its efficiency is what the shared bus gives ANY
 data-streaming job at these two parallelism levels on this box. Rows
 should be read against that ceiling, not against 1.0; per-row CPU-bound
 controls (codegen off / interpreter kernel) isolate the same artifact
-per plan. The store-local engine (one shuffle + embarrassingly parallel
-per-store extraction) is the architecture's scale path and the closest
+per plan. The store-local engine (bucket by store once, then
+embarrassingly parallel per-bucket extraction) is the architecture's scale path and the closest
 in-sandbox proxy for cluster behavior.
 
 Raw: {json.dumps(dict(results=results, replicate=REPLICATE))}

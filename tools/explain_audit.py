@@ -172,6 +172,31 @@ def main() -> int:
     else:
         print("OK  bm25_search: term-IN pushed to index scan, JVM-only")
 
+    # Store-local sink: one task per bucket file, no Exchange and no
+    # row-Python anywhere in the plan (the kernel runs in mapInArrow).
+    from extract_cbd_shape_spark.operators.kgtriples import with_store_key
+    from extract_cbd_shape_spark.operators.local_extract import (
+        extract_store_files_to_store,
+        materialize_store,
+    )
+    root = tempfile.mkdtemp(prefix="sink_audit_")
+    store = materialize_store(*with_store_key(triples, members),
+                              os.path.join(root, "store"))
+    plan = plan_of(extract_store_files_to_store(
+        spark, store, os.path.join(root, "out")))
+    probs = []
+    if re.search(r"Exchange", plan):
+        probs.append("exchange in store-local path")
+    if re.search(r"BatchEvalPython", plan):
+        probs.append("row-Python in store-local path")
+    if not re.search(r"MapInArrow", plan):
+        probs.append("kernel not a mapInArrow")
+    if probs:
+        failures.append("store_local_sink")
+        print(f"FAIL store_local_sink: {', '.join(probs)}")
+    else:
+        print("OK  store_local_sink: zero-exchange mapInArrow, JVM-free quads")
+
     print("FAILURES:", failures if failures else "none")
     return 1 if failures else 0
 

@@ -16,8 +16,8 @@ reference's own mocha suites:
    DFS order, per-path-position trie, closed-shape re-matching) is the
    emission standard; the two production engines — the global DataFrame
    fixpoint engine (operators/extract.py) and the vectorized CSR kernel
-   (local_bulk_extract, vectorize=True, where its gate accepts the
-   shape) — are scored quad-level precision/recall against it per case,
+   (run through the sink-fused store-local path, vectorize=True,
+   where its gate accepts the shape) — are scored quad-level precision/recall against it per case,
    then micro-averaged.
 
 Run: python tools/fixture_pr.py            (prints the table + summary)
@@ -27,7 +27,9 @@ The BENCH.md "Fixture P/R" section records the committed result.
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -147,7 +149,8 @@ def main() -> int:
     from extract_cbd_shape_spark.operators.local_extract import (
         compile_single_hop_links,
         extract_store,
-        local_bulk_extract,
+        extract_store_files_to_store,
+        materialize_store,
     )
     from extract_cbd_shape_spark.rdf import parse_trig
     from extract_cbd_shape_spark.shapes import ShapesGraph
@@ -224,11 +227,16 @@ def main() -> int:
             mem = spark.createDataFrame(
                 [(entity,)], "entity string").withColumn(
                     "store_key", F.lit("s"))
-            vres = local_bulk_extract(
-                tdf, mem, shapes_graph=sg, shape=shape, bulk=False,
-                n_buckets=1, vectorize=True,
-                graphs_to_ignore=tuple(ignore or ()))
-            got_v = {tuple(r) for r in vres.select(*QUAD_COLS).collect()}
+            root = tempfile.mkdtemp(prefix="fixture_pr_")
+            out = os.path.join(root, "out")
+            extract_store_files_to_store(
+                spark, materialize_store(tdf, mem, os.path.join(root, "store")),
+                out, shapes_graph=sg, shape=shape, bulk=False,
+                vectorize=True, graphs_to_ignore=tuple(ignore or ()),
+            ).collect()
+            got_v = {tuple(r) for r in
+                     spark.read.parquet(out).select(*QUAD_COLS).collect()}
+            shutil.rmtree(root, ignore_errors=True)
             tp_v += len(got_v & std)
             fp_v += len(got_v - std)
             fn_v += len(std - got_v)
