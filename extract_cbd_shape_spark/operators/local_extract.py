@@ -40,6 +40,7 @@ import os
 from typing import Dict, Iterable, List, Optional, Sequence, Set, Tuple
 
 import pandas as pd
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,6 +58,7 @@ from extract_cbd_shape_spark.shapes.ast import (
 from extract_cbd_shape_spark.shapes.compiler import ShapesGraph
 from extract_cbd_shape_spark.sinks.materialize import (
     _data_dirs,
+    data_files,
     materialize_table,
 )
 
@@ -1560,16 +1562,6 @@ def materialize_store(
     return os.path.join(path, _data_dirs(m)[0])
 
 
-def _store_files(path: str) -> List[str]:
-    """All bucket data files under one data dir."""
-    files: List[str] = []
-    for root, _dirs, fns in os.walk(path):
-        for fn in fns:
-            if fn.endswith(".parquet"):
-                files.append(os.path.join(root, fn))
-    return sorted(files)
-
-
 def _write_atomic(tbl, dest: str) -> None:
     """Write the Arrow table ``tbl`` to ``dest`` through a hidden temp
     file (leading ``.``, which Spark and pyarrow readers skip) and an
@@ -1585,17 +1577,23 @@ def _write_atomic(tbl, dest: str) -> None:
     os.replace(tmp, dest)
 
 
-def _file_manifest(spark: SparkSession, files: List[str]) -> DataFrame:
-    """One bucket file per task. Each bucket file is a complete set of
+def _file_manifest(spark: SparkSession, files: List[str]
+                   ) -> Tuple[Broadcast, DataFrame]:
+    """One task per bucket file. Each bucket file is a complete set of
     stores, so file granularity preserves the kernel's
-    store-completeness contract.
+    store-completeness contract. The bucket count is itself sized by
+    bytes (``materialize_table``), so this is one task per
+    ``spark.sql.files.maxPartitionBytes`` of store, at least one per
+    core.
 
-    Built as a parallelized RDD with one path per slice — no Exchange
-    anywhere in the plan (a ``repartition`` would insert a RoundRobin
-    exchange)."""
-    rdd = spark.sparkContext.parallelize(
-        [(p,) for p in files], max(1, len(files)))
-    return spark.createDataFrame(rdd, "path string")
+    Returns the file list as a broadcast and a ``spark.range`` with
+    exactly one row and one partition per file (the row is the file's
+    index). The range is a JVM source, so the plan has one Python stage
+    (the sink's mapInArrow) and no Exchange. The broadcast keeps the
+    sink's closure O(1): a reused Python worker loads the list once,
+    not once per task."""
+    n = len(files)
+    return spark.sparkContext.broadcast(files), spark.range(0, n, 1, max(1, n))
 
 
 def extract_store_files_to_store(
@@ -1629,7 +1627,7 @@ def extract_store_files_to_store(
     names through ``_write_atomic``, so a task killed mid-write or
     retried never leaves a torn or duplicate file in ``out_path``.
 
-    Returns the manifest DataFrame (cheap — one row per bucket);
+    Returns the manifest DataFrame (cheap — one row per bucket file);
     callers count/aggregate it without moving quads through the JVM."""
     os.makedirs(out_path, exist_ok=True)
     vec_plan = compile_single_hop_links(
@@ -1654,7 +1652,8 @@ def extract_store_files_to_store(
         import pyarrow.parquet as pq
 
         for b in batches:
-            for p in b.column("path").to_pylist():
+            for i in b.column("id").to_pylist():
+                p = files.value[i]
                 out_batches = list(runner(pq.read_table(p).to_batches()))
                 dest = None
                 rows = 0
@@ -1679,8 +1678,6 @@ def extract_store_files_to_store(
                     ]),
                 )
 
-    files: List[str] = []
-    for d in src_dirs:
-        files.extend(_store_files(d))
-    paths = _file_manifest(spark, files)
-    return paths.mapInArrow(sink_runner, "src string, file string, rows long")
+    files, ids = _file_manifest(
+        spark, [f for d in src_dirs for f in data_files(d)])
+    return ids.mapInArrow(sink_runner, "src string, file string, rows long")

@@ -243,9 +243,11 @@ class KGConstructionPipeline:
         # the worker, extracts (member seeds = distinct IRI subjects per
         # page, derived inside the kernel) and writes its result file
         # into the next entity_triples snapshot — no quad bytes through
-        # the JVM, no exchange, no driver fixpoint rounds. Skew guard:
-        # giant pages were identified at ingest (manifest giant_stores)
-        # and route to the global engine.
+        # the JVM, no exchange, no driver fixpoint rounds. The bucket
+        # count follows the bytes (sinks/materialize.py::
+        # parts_for_bytes), so a small corpus runs one task per core.
+        # Skew guard: giant pages were identified at ingest (manifest
+        # giant_stores) and route to the global engine.
         if not (resume and self._stage_done("entity_triples", "extract_entities")):
             resume = False
             with self._timed("extract"):

@@ -21,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 from typing import List, Optional
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +36,49 @@ def _snapshots(path: str) -> List[str]:
         d for d in os.listdir(path)
         if d.startswith("snap-") and os.path.exists(os.path.join(path, d, MANIFEST))
     )
+
+
+def parts_for_bytes(spark: SparkSession, nbytes: int) -> int:
+    """How many buckets or tasks ``nbytes`` of input gets: one per
+    ``spark.sql.files.maxPartitionBytes`` (the split size Spark's own
+    file scans use), never fewer than ``defaultParallelism`` so small
+    inputs still use every core. Work is sized by bytes, never by a key
+    or file count; the skew that bytes cannot see (one giant store) is
+    the giant-store guard's job.
+
+    That setting therefore also fixes the persisted layout: the bucket
+    count of every ``materialize_table`` write with ``n_buckets=None``,
+    and through it the store-local sink's task count (one per bucket
+    file). Changing it to tune scan splits changes how later snapshots
+    are written; appends keep their parent's count."""
+    max_bytes = (spark._jsparkSession.sessionState().conf()
+                 .filesMaxPartitionBytes())
+    return max(spark.sparkContext.defaultParallelism, -(-nbytes // max_bytes))
+
+
+def _input_bytes(df: DataFrame) -> int:
+    """Bytes of the files ``df`` reads. ``inputFiles()`` comes from the
+    driver-side file index: no Spark job. A DataFrame built from local
+    data or an RDD lists no files and counts 0.
+
+    An upper-bound proxy for the size of ``df``: it ignores filters,
+    projections and aggregation, so a narrow derived table (``links``
+    is a filter plus a groupBy over ``entity_triples``) is sized like
+    its whole input. Only the ``defaultParallelism`` floor has been
+    exercised by a benchmark so far."""
+    return sum(os.path.getsize(unquote(urlparse(u).path))
+               for u in df.inputFiles())
+
+
+def data_files(path: str) -> List[str]:
+    """All parquet data files under one data dir (hive partition
+    subdirs included), sorted."""
+    files: List[str] = []
+    for root, _dirs, fns in os.walk(path):
+        for fn in fns:
+            if fn.endswith(".parquet"):
+                files.append(os.path.join(root, fn))
+    return sorted(files)
 
 
 def _data_dirs(manifest: dict) -> List[str]:
@@ -52,7 +96,7 @@ def materialize_table(
     path: str,
     stage: str,
     bucket_by: Optional[str] = "subject",
-    n_buckets: int = 32,
+    n_buckets: Optional[int] = None,
     giant_threshold: Optional[int] = None,
     append: bool = False,
     manifest_extra: Optional[dict] = None,
@@ -62,10 +106,16 @@ def materialize_table(
 
     A bucketed write lands each bucket as ONE file, so every
     ``bucket_by`` group lives whole inside one file — the precondition
-    for store-local extraction, which runs one task per file
+    for store-local extraction, whose tasks each take whole bucket files
     (``operators.local_extract.extract_store_files_to_store``). This is
     the parquet stand-in for Iceberg's ``partitionedBy(bucket(N, col))``
     write distribution.
+
+    ``n_buckets=None`` sizes the table from its input:
+    ``parts_for_bytes`` of the bytes of ``df.inputFiles()`` (listed on
+    the driver, no Spark job), so a small table is written in
+    ``defaultParallelism`` files, not in a fixed count of tiny ones. A
+    DataFrame that reads no files gets that floor.
 
     ``giant_threshold`` records in the manifest the ``bucket_by`` values
     with more than that many rows (``giant_stores``). Skew detection is
@@ -79,7 +129,9 @@ def materialize_table(
     table is never rewritten to ingest a day of crawl). Caller contract
     for append tables read by store-local extraction: the delta
     contains only NEW ``bucket_by`` groups (re-crawled pages go through url_dedup first),
-    so every group still lives whole inside one file. Manifest carries
+    so every group still lives whole inside one file. With
+    ``n_buckets=None`` the delta inherits the parent's bucket count; an
+    explicit count that differs from it is rejected. Manifest carries
     merged ``giant_stores`` plus delta-scoped ``delta_giant_stores`` /
     ``delta_rows`` so incremental consumers process only the delta."""
     snaps = _snapshots(path)
@@ -89,6 +141,8 @@ def materialize_table(
     if append and snaps:
         with open(os.path.join(path, snaps[-1], MANIFEST)) as f:
             parent = json.load(f)
+        if n_buckets is None:
+            n_buckets = parent.get("n_buckets")
         if parent.get("bucket_by") != bucket_by or (
             bucket_by and parent.get("n_buckets") != n_buckets
         ):
@@ -101,6 +155,8 @@ def materialize_table(
 
     out = df
     if bucket_by is not None:
+        if n_buckets is None:
+            n_buckets = parts_for_bytes(df.sparkSession, _input_bytes(df))
         out = out.withColumn(
             "bucket", F.pmod(F.xxhash64(F.col(bucket_by)), F.lit(n_buckets)).cast("int")
         )
@@ -128,16 +184,13 @@ def materialize_table(
     spark = df.sparkSession
     bucket_rows: dict = {}
     rows = 0
-    for root, _dirs, files in os.walk(snap_dir + "/data"):
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            n = pq.read_metadata(os.path.join(root, fn)).num_rows
-            rows += n
-            base = os.path.basename(root)
-            if base.startswith("bucket="):
-                b = int(base.split("=", 1)[1])
-                bucket_rows[b] = bucket_rows.get(b, 0) + n
+    for fp in data_files(snap_dir + "/data"):
+        n = pq.read_metadata(fp).num_rows
+        rows += n
+        base = os.path.basename(os.path.dirname(fp))
+        if base.startswith("bucket="):
+            b = int(base.split("=", 1)[1])
+            bucket_rows[b] = bucket_rows.get(b, 0) + n
     per_partition = [
         {"bucket": b, "rows": n} for b, n in sorted(bucket_rows.items())
     ]
@@ -241,7 +294,13 @@ def read_data_dirs(spark: SparkSession, dirs: List[str]) -> DataFrame:
     partition root (`bucket=K` subdirs), and Spark's partition discovery
     refuses multiple roots in one read. The union is a plan-level
     concat — no shuffle, and each branch still prunes partitions and
-    columns independently."""
+    columns independently.
+
+    Dirs holding no data file are skipped: an empty delta batch commits
+    a snapshot with an empty data dir, and Spark cannot infer a schema
+    from it. A table empty in every dir has no schema to read; Spark
+    reports that on the first dir."""
+    dirs = [d for d in dirs if data_files(d)] or dirs[:1]
     df = spark.read.parquet(dirs[0])
     for d in dirs[1:]:
         df = df.unionByName(spark.read.parquet(d))

@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -33,6 +34,20 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@contextmanager
+def max_partition_bytes(spark, nbytes):
+    """Run the block with ``spark.sql.files.maxPartitionBytes`` set to
+    ``nbytes`` (the split size that sizes buckets and sink tasks), then
+    restore it."""
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(nbytes))
+    try:
+        yield
+    finally:
+        spark.conf.set(conf, old)
 
 
 def load_fixture(relpath: str) -> str:

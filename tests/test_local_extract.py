@@ -706,7 +706,8 @@ def test_file_scan_and_sink_fused_parity(spark, sink_extract, tmp_path):
     from extract_cbd_shape_spark.operators.kgtriples import (
         KBO_SHAPE_IRI, KBO_SHAPE_TTL, kbo_members)
     from extract_cbd_shape_spark.operators.local_extract import (
-        _store_files, extract_store_files_to_store, materialize_store)
+        extract_store_files_to_store, materialize_store)
+    from extract_cbd_shape_spark.sinks.materialize import data_files
 
     triples, members = kbo_members(spark, "/root/testdata/sf0.001")
     shapes = ShapesGraph.from_quads(parse_trig(KBO_SHAPE_TTL))
@@ -722,12 +723,71 @@ def test_file_scan_and_sink_fused_parity(spark, sink_extract, tmp_path):
         rows = extract_store_files_to_store(
             spark, store_path, out, shapes_graph=shapes, shape=shape,
         ).collect()
-        assert len(rows) == len(_store_files(store_path))
+        assert len(rows) == len(data_files(store_path))
         landed = spark.read.parquet(out)
         assert sum(r["rows"] for r in rows) == landed.count()
         got = {tuple(r) for r in landed.select(*cols).collect()}
         assert got and (first is None or got == first)
         first = got
+
+
+def test_sink_runs_one_task_per_bucket_file(spark, tmp_path):
+    """A store with more bucket files than cores: the sink runs one task
+    per file over a JVM source (no Exchange, no Python-RDD scan) and
+    returns one lineage row per source file. The file list reaches the
+    tasks through a broadcast, so the pickled kernel command does not
+    grow with the number of files."""
+    from extract_cbd_shape_spark.operators.local_extract import (
+        extract_store_files_to_store)
+    from extract_cbd_shape_spark.sinks.materialize import (
+        data_files, latest_snapshot_path, materialize_table)
+
+    # 500 stores of 6 quads each: every one of 12 buckets is non-empty
+    store = (F.col("id") % 500).cast("string")
+    t2 = spark.range(3000).select(
+        F.concat(F.lit("http://x/e"), store).alias("subject"),
+        F.lit(0).cast("tinyint").alias("subject_kind"),
+        F.lit("http://x/p").alias("predicate"),
+        F.col("id").cast("string").alias("object_value"),
+        F.lit(2).cast("tinyint").alias("object_kind"),
+        *[F.lit(None).cast(t).alias(c) for c, t in (
+            ("object_lang", "string"), ("object_datatype", "string"),
+            ("graph", "string"), ("graph_kind", "tinyint"))],
+        store.alias("store_key"))
+    sc = spark.sparkContext
+
+    def run(tag, n_buckets):
+        materialize_table(t2, str(tmp_path / f"q{tag}"), "quads",
+                          bucket_by="store_key", n_buckets=n_buckets)
+        store = latest_snapshot_path(str(tmp_path / f"q{tag}"))
+        df = extract_store_files_to_store(
+            spark, store, str(tmp_path / f"o{tag}"),
+            members_from_subjects=True)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        command = (df._jdf.queryExecution().analyzed().functionExpr()
+                   .func().command().length())
+        sc.setJobGroup(tag, tag)
+        try:
+            rows = df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        st = sc.statusTracker()
+        tasks = sum(st.getStageInfo(s).numTasks
+                    for j in st.getJobIdsForGroup(tag)
+                    for s in st.getJobInfo(j).stageIds)
+        landed = spark.read.parquet(str(tmp_path / f"o{tag}")).count()
+        return data_files(store), rows, plan, command, tasks, landed
+
+    files, rows, plan, command, tasks, landed = run("a", 12)
+    assert len(files) > sc.defaultParallelism
+    assert tasks == len(files)
+    assert "Exchange" not in plan and "Scan ExistingRDD" not in plan
+    assert sorted(r["src"] for r in rows) == files
+    assert sum(r["rows"] for r in rows) == landed == 3000
+
+    few, _rows, _plan, few_command, _tasks, few_landed = run("b", 2)
+    assert len(few) < len(files) and few_landed == landed
+    assert abs(command - few_command) < 64
 
 
 def test_deep_nodelink_chain_no_recursion_error():
@@ -788,48 +848,76 @@ def test_vec_deep_chain_linear_growth():
     assert t8k < t2k * 10  # linear is ~4x; quadratic ~16x
 
 
-def test_vec_cross_store_isolation_same_bucket(spark, sink_extract):
+def test_vec_cross_store_isolation_same_bucket(spark, tmp_path):
     """Two stores in ONE kernel bucket sharing node names (same blank
     label, same downstream IRI) must not leak quads across stores (the
     CSR kernel keys nodes by (store, value, kind)); vectorized ==
     interpreter on both the default and cbd_default_graph traversals."""
-    # s3 and s5 hash to the same materialize_store bucket
-    bucket = F.pmod(F.xxhash64(F.col("k")), F.lit(32))
-    assert spark.createDataFrame([("s3",), ("s5",)], "k string").select(
-        bucket).distinct().count() == 1
-    rows = []
-    for store, member in (("s3", "http://x/A1"), ("s5", "http://x/A2")):
-        rows += [
-            (member, 0, "http://x/child", "b0", 1,
-             None, None, None, None, store),
-            # same blank label b0 in BOTH stores, different payloads
-            ("b0", 1, "http://x/street", f"st-{store}", 2,
-             None, None, None, None, store),
-            # same downstream IRI subject in both stores
-            (member, 0, "http://x/link", "http://x/shared", 0,
-             None, None, None, None, store),
-            # a named-graph quad: dropped under cbd_default_graph
-            (member, 0, "http://x/extra", f"x-{store}", 2,
-             None, None, "http://x/G", 0, store),
-        ]
-    tdf = spark.createDataFrame(
-        rows, _QUAD_SCHEMA + ", store_key string")
-    mem = spark.createDataFrame(
-        [("http://x/A1", "s3"), ("http://x/A2", "s5")],
-        "entity string, store_key string")
+    import pyarrow.parquet as pq
+
+    from extract_cbd_shape_spark.operators.local_extract import (
+        extract_store_files_to_store, materialize_store)
+    from extract_cbd_shape_spark.sinks.materialize import (
+        data_files, latest_manifest)
+
+    def frames(sa, sb):
+        rows = []
+        for store, member in ((sa, "http://x/A1"), (sb, "http://x/A2")):
+            rows += [
+                (member, 0, "http://x/child", "b0", 1,
+                 None, None, None, None, store),
+                # same blank label b0 in BOTH stores, different payloads
+                ("b0", 1, "http://x/street", f"st-{store}", 2,
+                 None, None, None, None, store),
+                # same downstream IRI subject in both stores
+                (member, 0, "http://x/link", "http://x/shared", 0,
+                 None, None, None, None, store),
+                # a named-graph quad: dropped under cbd_default_graph
+                (member, 0, "http://x/extra", f"x-{store}", 2,
+                 None, None, "http://x/G", 0, store),
+            ]
+        tdf = spark.createDataFrame(
+            rows, _QUAD_SCHEMA + ", store_key string")
+        mem = spark.createDataFrame(
+            [("http://x/A1", sa), ("http://x/A2", sb)],
+            "entity string, store_key string")
+        return tdf, mem
+
+    # The bucket count is sized by the data: read it from a first
+    # snapshot, then pick two store names that collide under it.
+    materialize_store(*frames("s3", "s5"), str(tmp_path / "probe"))
+    n = latest_manifest(str(tmp_path / "probe"))["n_buckets"]
+    names = [f"s{i}" for i in range(64)]
+    by_bucket = {}
+    for k, b in spark.createDataFrame([(k,) for k in names], "k string").select(
+            "k", F.pmod(F.xxhash64("k"), F.lit(n))).collect():
+        by_bucket.setdefault(b, []).append(k)
+    sa, sb = next(ks for ks in by_bucket.values() if len(ks) > 1)[:2]
+
+    path = str(tmp_path / "store")
+    store = materialize_store(*frames(sa, sb), path)
+    assert latest_manifest(path)["n_buckets"] == n
+    # both stores really share one bucket file
+    assert any({sa, sb} <= set(pq.read_table(f, columns=["store_key"])
+                               .column(0).to_pylist())
+               for f in data_files(store))
+
+    def extract(tag, **kw):
+        out = str(tmp_path / tag)
+        extract_store_files_to_store(spark, store, out, **kw).collect()
+        return {tuple(r) for r in spark.read.parquet(out).collect()}
+
     for cbd_dg in (False, True):
         kw = dict(bulk=False, cbd_default_graph=cbd_dg)
-        vec = {tuple(r) for r in
-               sink_extract(tdf, mem, vectorize=True, **kw).collect()}
-        loop = {tuple(r) for r in
-                sink_extract(tdf, mem, vectorize=False, **kw).collect()}
+        vec = extract(f"vec{cbd_dg}", vectorize=True, **kw)
+        loop = extract(f"loop{cbd_dg}", vectorize=False, **kw)
         assert vec == loop
-        # A1 reaches b0 via blank closure: must see ONLY s1's street
+        # A1 reaches b0 via blank closure: must see ONLY its store's street
         a1_streets = {r[4] for r in vec
                       if r[0] == "http://x/A1" and r[3] == "http://x/street"}
-        assert a1_streets == {"st-s3"}
+        assert a1_streets == {f"st-{sa}"}
         a2_streets = {r[4] for r in vec
                       if r[0] == "http://x/A2" and r[3] == "http://x/street"}
-        assert a2_streets == {"st-s5"}
+        assert a2_streets == {f"st-{sb}"}
         n_graph_quads = sum(1 for r in vec if r[3] == "http://x/extra")
         assert n_graph_quads == (0 if cbd_dg else 2)

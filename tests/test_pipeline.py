@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from extract_cbd_shape_spark.plans.pipeline import KGConstructionPipeline
 from extract_cbd_shape_spark.sinks.materialize import (
+    data_files,
     latest_manifest,
     latest_snapshot_paths,
     materialize_table,
@@ -18,6 +19,8 @@ from extract_cbd_shape_spark.sources.pages import (
     extract_page_text,
     synth_pages,
 )
+
+from conftest import max_partition_bytes
 
 SF = "/root/testdata/sf0.001"
 
@@ -98,6 +101,49 @@ def test_materialize_append_snapshot(spark, tmp_path):
     m3 = materialize_table(df1, path, "rebuild", n_buckets=4)
     assert m3["rows"] == 60
     assert read_latest_snapshot(spark, path).count() == 60
+
+
+def _subjects_parquet(spark, path, lo, hi):
+    spark.range(lo, hi).select(
+        F.concat(F.lit("s"), F.col("id")).alias("subject"),
+        F.lit("p").alias("predicate"),
+    ).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_materialize_buckets_sized_by_input_bytes(spark, tmp_path):
+    """n_buckets=None: one bucket per spark.sql.files.maxPartitionBytes
+    of input files, floored at defaultParallelism."""
+    src = str(tmp_path / "src")
+    df = _subjects_parquet(spark, src, 0, 2000)
+    nbytes = sum(os.path.getsize(f) for f in data_files(src))
+    floor = spark.sparkContext.defaultParallelism
+    small = materialize_table(df, str(tmp_path / "small"), "s")
+    assert small["n_buckets"] == floor
+    split = nbytes // (3 * floor)
+    with max_partition_bytes(spark, split):
+        many = materialize_table(df, str(tmp_path / "many"), "s")
+    assert many["n_buckets"] == -(-nbytes // split) > floor
+    assert len(many["partitions"]) > floor
+    assert small["rows"] == many["rows"] == 2000
+
+
+def test_materialize_append_inherits_bucket_count(spark, tmp_path):
+    """An append with n_buckets=None keeps the parent's bucket count
+    even when the delta's own bytes would choose another; an explicit
+    count that differs from the parent's is rejected."""
+    base = _subjects_parquet(spark, str(tmp_path / "a"), 0, 2000)
+    delta = _subjects_parquet(spark, str(tmp_path / "b"), 2000, 2100)
+    floor = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "tbl")
+    with max_partition_bytes(spark, 1024):
+        m1 = materialize_table(base, path, "ingest")
+    assert m1["n_buckets"] > floor
+    m2 = materialize_table(delta, path, "ingest", append=True)
+    assert m2["n_buckets"] == m1["n_buckets"]
+    assert m2["rows"] == 2100
+    with pytest.raises(ValueError):
+        materialize_table(delta, path, "ingest", n_buckets=floor, append=True)
 
 
 def test_pipeline_incremental_matches_full(spark, tmp_path):
@@ -384,6 +430,36 @@ def test_leftover_sink_tmp_file_is_not_read(
     assert len(leftovers) == 1  # the killed attempt's complete copy
     assert read_latest_snapshot(spark, table).count() == \
         latest_manifest(table)["rows"]
+
+
+def test_empty_incremental_batch(spark, clean_warehouse, tmp_path):
+    """An empty batch commits empty delta snapshots and leaves the graph
+    as it was; the next non-empty batch still matches a clean run over
+    every page ingested."""
+    import shutil
+
+    pages, clean = clean_warehouse
+    wh = str(tmp_path / "wh")
+    shutil.copytree(clean, wh)
+    before = latest_manifest(os.path.join(wh, "triples"))["rows"]
+    pipe = KGConstructionPipeline(spark, wh)
+    m = pipe.run_incremental(pages.limit(0), epoch=2)
+    assert m["entity_triples"]["delta_rows"] == 0
+    assert m["triples"]["rows"] == before
+
+    batch = synth_pages(spark, SF).orderBy("url").limit(30).subtract(pages)
+    pipe.run_incremental(batch, epoch=3)
+    full = str(tmp_path / "full")
+    KGConstructionPipeline(spark, full).run(
+        pages.unionByName(batch), resume=False)
+    for table, cols in (
+            ("raw_triples", ["page_url", "subject", "predicate",
+                             "object_value"]),
+            ("entity_triples", ["entity", "subject", "predicate",
+                                "object_value"]),
+            ("triples", ["subject", "predicate", "object_value"])):
+        assert _table_rows(spark, wh, table, cols) == \
+            _table_rows(spark, full, table, cols), table
 
 
 def test_resume_reparses_snapshot_without_giant_stores(

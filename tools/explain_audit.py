@@ -172,8 +172,10 @@ def main() -> int:
     else:
         print("OK  bm25_search: term-IN pushed to index scan, JVM-only")
 
-    # Store-local sink: one task per bucket file, no Exchange and no
-    # row-Python anywhere in the plan (the kernel runs in mapInArrow).
+    # Store-local sink: one task per bucket file over a JVM source. No
+    # Exchange, no Python-RDD scan, and exactly one Python operator, the
+    # kernel's mapInArrow (a Python-RDD manifest would add a second
+    # Python stage and its per-task cost).
     from extract_cbd_shape_spark.operators.kgtriples import with_store_key
     from extract_cbd_shape_spark.operators.local_extract import (
         extract_store_files_to_store,
@@ -187,15 +189,18 @@ def main() -> int:
     probs = []
     if re.search(r"Exchange", plan):
         probs.append("exchange in store-local path")
-    if re.search(r"BatchEvalPython", plan):
-        probs.append("row-Python in store-local path")
-    if not re.search(r"MapInArrow", plan):
-        probs.append("kernel not a mapInArrow")
+    if re.search(r"Scan ExistingRDD", plan):
+        probs.append("RDD-backed manifest in store-local path")
+    python_ops = re.findall(
+        r"^\(\d+\) (\w*(?:Python|InArrow|InPandas)\w*)", plan, re.M)
+    if python_ops != ["MapInArrow"]:
+        probs.append(f"Python operators {python_ops}, want one MapInArrow")
     if probs:
         failures.append("store_local_sink")
         print(f"FAIL store_local_sink: {', '.join(probs)}")
     else:
-        print("OK  store_local_sink: zero-exchange mapInArrow, JVM-free quads")
+        print("OK  store_local_sink: zero-exchange single mapInArrow over "
+              "a JVM source, JVM-free quads")
 
     print("FAILURES:", failures if failures else "none")
     return 1 if failures else 0
