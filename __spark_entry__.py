@@ -44,20 +44,6 @@ from extract_cbd_shape_spark.operators.pii import (
     PII_PATTERNS,
     redact_documents,
 )
-from extract_cbd_shape_spark.operators.similarity import (
-    cosine_near_dups,
-    cosine_topk,
-    ivf_topk,
-    lsh_topk,
-    sign_lsh_buckets,
-)
-from extract_cbd_shape_spark.functions.multimodal import (
-    decode_media,
-    frame_sample,
-    media_features,
-    resize_media,
-    synth_media,
-)
 from extract_cbd_shape_spark.functions.text import (
     LANG_STOPWORDS,
     lang_id_column,
@@ -577,27 +563,6 @@ def _q_connected_components(spark, sf_dir):
     return connected_components(edges).orderBy("node")
 
 
-def _q_cosine_topk(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    return cosine_topk(e, q, k=5)
-
-
-def _q_lsh_buckets_topk(spark, sf_dir):
-    """sign-LSH bucket assignment AND bucketed top-k in one driver pair
-    (merged round 4 to stay inside the driver's 50-row artifact cap):
-    every top-k neighbor row carries its neighbor's bucket id, so both
-    operators' outputs flow into the value hash."""
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    topk = lsh_topk(e, q, k=5, n_planes=8)
-    buckets = sign_lsh_buckets(e).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("bucket").alias("neighbor_bucket"),
-    )
-    return topk.join(buckets, "neighbor_id")
-
-
 def _q_shacl_report(spark, sf_dir):
     """Per-member SHACL conformance report over the KBO corpus with a
     planted non-conforming slice: orderkeys divisible by 7 lose their
@@ -613,70 +578,6 @@ def _q_shacl_report(spark, sf_dir):
     rep = shacl_report(ex, triples, members,
                        shape=Term(IRI, KBO_SHAPE_IRI))
     return rep.select("entity", "conforms", "missing")
-
-
-def _q_ivf_topk(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    return ivf_topk(e, q, k=5, centroid_stride=16, nprobe=2)
-
-
-def _q_embedding_dups(spark, sf_dir):
-    """Embedding-cosine near-dup over a corpus with known duplicates:
-    the raw embeddings table is near-orthogonal (max pairwise cosine
-    ~0.51 at sf0.01), so — like the connected_components query
-    synthesizes sameAs edges — every 5th vector gets a deterministic
-    perturbed copy (+0.05 per component, cosine 0.92-0.95 vs the
-    original, id offset 1e6). The operator must recover those pairs
-    via banded sign-LSH candidates + exact cosine verify >= 0.9."""
-    e = _t(spark, sf_dir, "embeddings")
-    base = e.select(
-        "vec_id",
-        F.transform("embedding", lambda y: y.cast("double")).alias("embedding"),
-    )
-    copies = e.filter(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.transform(
-            "embedding", lambda y: y.cast("double") + F.lit(0.05)
-        ).alias("embedding"),
-    )
-    return cosine_near_dups(base.unionByName(copies), threshold=0.9)
-
-
-def _q_media_pipeline(spark, sf_dir):
-    """The full multimodal surface in one verified result (merged r4
-    from media_decode / media_frames / media_resize / media_features):
-    decode metadata + checksum, resize dims/payload, per-video frame
-    sampling (aggregated to n_frames/last_ts_ms, LEFT-joined — images
-    and audio keep NULLs) and the 8-dim feature digest. All four ops
-    run their real Arrow-batched mapInPandas plumbing over the binary
-    column; codecs are the documented sandbox stubs."""
-    syn = synth_media(spark, sf_dir)
-    dec = decode_media(syn).select(
-        "media_id", "kind", "width", "height", "payload_len", "checksum"
-    )
-    rs = resize_media(syn, max_w=32, max_h=32).select(
-        "media_id",
-        F.col("width").alias("rs_width"),
-        F.col("height").alias("rs_height"),
-        F.length("payload").alias("rs_payload_len"),
-    )
-    fr = frame_sample(syn).groupBy("media_id").agg(
-        F.count(F.lit(1)).alias("n_frames"),
-        F.max("ts_ms").alias("last_ts_ms"),
-    )
-    ft = media_features(syn, dim=8).select(
-        "media_id",
-        F.array_join(
-            F.transform(F.col("feature"), lambda x: x.cast("int").cast("string")),
-            ",",
-        ).alias("feat"),
-    )
-    return (
-        dec.join(rs, "media_id")
-        .join(fr, "media_id", "left")
-        .join(ft, "media_id")
-    )
 
 
 def _q_bgp_union_values_topk(spark, sf_dir):
@@ -930,7 +831,8 @@ def _q_bgp_path(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """36 query/oracle pairs, ordered cheap-to-expensive so a
+    """The query/oracle pairs (oracle_sql() has one per key), ordered
+    cheap-to-expensive so a
     time-capped run drops the heavy extraction-engine variants last."""
     return {
         # -- relational core (cheap scans/aggs/windows) -------------------
@@ -950,13 +852,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- linking, canonicalization -------------------------------------
         "entity_link": _q_entity_link,
         "connected_components": _q_connected_components,
-        # -- similarity search ---------------------------------------------
-        "cosine_topk": _q_cosine_topk,
-        "lsh_buckets_topk": _q_lsh_buckets_topk,
-        "ivf_topk": _q_ivf_topk,
-        "embedding_cosine_dups": _q_embedding_dups,
-        # -- multimodal ----------------------------------------------------
-        "media_pipeline": _q_media_pipeline,
         # -- sources/sinks: pages, N-Quads, Turtle -------------------------
         "pages_extract_triples": _q_pages_triples,
         "pages_text_identity": _q_pages_text_identity,
@@ -1068,96 +963,6 @@ def _pii_oracle_sql() -> str:
         f"       md5({redacted}) AS clean_md5\nFROM c"
     )
 
-_MEDIA_CTE = """
-media AS (
-  SELECT doc_id AS media_id,
-         ['image','audio','video'][(doc_id % 3) + 1] AS kind,
-         repeat(md5(doc_id::VARCHAR), (1 + doc_id % 4)::INT) AS payload_str,
-         CASE WHEN doc_id % 3 <> 1 THEN (16 + doc_id % 64)::INT END AS width,
-         CASE WHEN doc_id % 3 <> 1 THEN (16 + doc_id % 48)::INT END AS height,
-         CASE WHEN doc_id % 3 <> 0
-              THEN (1000 + (doc_id % 10) * 500)::INT END AS duration_ms
-  FROM documents
-)
-"""
-
-
-def _cos_sql(a: str, b: str) -> str:
-    return (
-        f"((SELECT sum(x * y) FROM (SELECT unnest({a})::DOUBLE AS x, "
-        f"unnest({b})::DOUBLE AS y))"
-        f" / (sqrt((SELECT sum(x * x) FROM (SELECT unnest({a})::DOUBLE AS x)))"
-        f" * sqrt((SELECT sum(y * y) FROM (SELECT unnest({b})::DOUBLE AS y)))))"
-    )
-
-
-# k-means mirror: 2 unrolled Lloyd's iterations (stride-16 seed,
-# DECIMAL(38,20)-exact means rounded to 8dp — bit-identical to the
-# Spark kmeans_centroids by order-independence of exact sums)
-_KMEANS_CENTS_CTE = f"""cents0 AS (
-  SELECT vec_id AS centroid_id, list_transform(embedding, x -> x::DOUBLE) AS cv
-  FROM embeddings WHERE vec_id % 16 = 0
-),
-a0 AS (
-  SELECT e.vec_id, c.centroid_id, e.embedding,
-         row_number() OVER (PARTITION BY e.vec_id
-           ORDER BY {_cos_sql('e.embedding', 'c.cv')} DESC, c.centroid_id) rn
-  FROM embeddings e CROSS JOIN cents0 c
-),
-m1 AS (
-  SELECT centroid_id, i,
-         round(sum(x::DOUBLE::DECIMAL(38,20))/count(*), 8)::DOUBLE AS val
-  FROM (SELECT centroid_id, unnest(embedding) AS x,
-               generate_subscripts(embedding,1) AS i
-        FROM a0 WHERE rn = 1)
-  GROUP BY centroid_id, i
-),
-cents1 AS (SELECT centroid_id, list(val ORDER BY i) AS cv
-           FROM m1 GROUP BY centroid_id),
-a1 AS (
-  SELECT e.vec_id, c.centroid_id, e.embedding,
-         row_number() OVER (PARTITION BY e.vec_id
-           ORDER BY {_cos_sql('e.embedding', 'c.cv')} DESC, c.centroid_id) rn
-  FROM embeddings e CROSS JOIN cents1 c
-),
-m2 AS (
-  SELECT centroid_id, i,
-         round(sum(x::DOUBLE::DECIMAL(38,20))/count(*), 8)::DOUBLE AS val
-  FROM (SELECT centroid_id, unnest(embedding) AS x,
-               generate_subscripts(embedding,1) AS i
-        FROM a1 WHERE rn = 1)
-  GROUP BY centroid_id, i
-),
-cents AS (SELECT centroid_id, list(val ORDER BY i) AS cv
-          FROM m2 GROUP BY centroid_id)"""
-
-_IVF_ORACLE = f"""
-WITH {_KMEANS_CENTS_CTE},
-assign AS (
-  SELECT e.vec_id, c.centroid_id,
-         row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY {_cos_sql('e.embedding', 'c.cv')} DESC, c.centroid_id) AS rn
-  FROM embeddings e CROSS JOIN cents c
-),
-lists AS (SELECT vec_id AS neighbor_id, centroid_id FROM assign WHERE rn = 1),
-probes AS (SELECT vec_id AS query_id, centroid_id FROM assign
-           WHERE vec_id < 8 AND rn <= 2),
-scored AS (
-  SELECT p.query_id, l.neighbor_id,
-         {_cos_sql('q.embedding', 'e.embedding')} AS score
-  FROM probes p
-  JOIN lists l ON l.centroid_id = p.centroid_id
-  JOIN embeddings q ON q.vec_id = p.query_id
-  JOIN embeddings e ON e.vec_id = l.neighbor_id
-  WHERE l.neighbor_id <> p.query_id
-)
-SELECT query_id, neighbor_id, round(score, 4) AS score, rank
-FROM (SELECT *, row_number() OVER (
-          PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rank
-      FROM scored)
-WHERE rank <= 5
-"""
-
 
 def _split_case_sql() -> str:
     """SQL CASE mirroring split_assign's boundaries exactly (both sides
@@ -1171,104 +976,47 @@ def _split_case_sql() -> str:
     return f"CASE {whens} ELSE '{bounds[-1][0]}' END"
 
 
+# Expected quads of the KBO shape over kgtriples.kbo_members: every
+# member's own quads plus its blank address's two quads.
+_KBO_ROWS = """\
+  SELECT k, 'm:'||k AS subject, 'rdf:type' AS predicate,
+         'kbo:legalEntity' AS object_value FROM m
+  UNION ALL SELECT k, 'm:'||k, 'rdf:type', 'kbo:Enterprise' FROM m
+  UNION ALL SELECT k, 'm:'||k, 'kbo:isVersionOf', 'v:'||k FROM m
+  UNION ALL SELECT k, 'm:'||k, 'kbo:companyStatus',
+            'kbo:JuridicalSituation_000' FROM m
+  UNION ALL SELECT k, 'm:'||k, 'kbo:companyType',
+            'kbo:JuridicalForm_014' FROM m
+  UNION ALL SELECT k, 'm:'||k, 'kbo:legalName', 'Company '||k FROM m
+  UNION ALL SELECT k, 'm:'||k, 'kbo:registeredAddress', 'a:'||k FROM m
+  UNION ALL SELECT k, 'm:'||k, 'kbo:activity', 'act:'||(k % 50) FROM m
+  UNION ALL SELECT k, 'm:'||k, 'kbo:activity', 'act:'||((k + 7) % 50) FROM m
+  UNION ALL SELECT k, 'm:'||k, 'kbo:activity', 'act:'||((k + 13) % 50) FROM m
+  UNION ALL SELECT k, 'm:'||k, 'kbo:establishment', 'e:'||k FROM m
+  UNION ALL SELECT k, 'm:'||k, 'kbo:status', 'kbo:Status_AC' FROM m
+  UNION ALL SELECT k, 'a:'||k, 'kbo:fullAddress', 'Street '||k FROM m
+  UNION ALL SELECT k, 'a:'||k, 'kbo:postCode', (k % 9999)::VARCHAR FROM m
+"""
+_KBO_HEAD = """
+WITH m AS (SELECT o_orderkey AS k FROM orders)
+SELECT 'm:'||k AS entity, subject, predicate, object_value FROM (
+"""
+_KBO_ORACLE = _KBO_HEAD + _KBO_ROWS + ")\n"
+# inverse shape: the same quads plus the member's two incoming
+# kbo:memberOf edges (the ^kbo:memberOf match witnesses)
+_KBO_INVERSE_ORACLE = _KBO_HEAD + _KBO_ROWS + """\
+  UNION ALL SELECT k, 'p:'||k||':0', 'kbo:memberOf', 'm:'||k FROM m
+  UNION ALL SELECT k, 'p:'||k||':1', 'kbo:memberOf', 'm:'||k FROM m
+)
+"""
+
+
 def oracle_sql() -> dict[str, str]:
     out = {
         "cbd_blank_closure": _CBD_ORACLE,
         "shape_extract_order": _SHAPE_ORACLE,
-        "kbo_bulk_extract": """
-WITH m AS (SELECT o_orderkey AS k FROM orders)
-SELECT 'm:'||k AS entity, subject, predicate, object_value FROM (
-  SELECT k, 'm:'||k AS subject, 'rdf:type' AS predicate,
-         'kbo:legalEntity' AS object_value FROM m
-  UNION ALL SELECT k, 'm:'||k, 'rdf:type', 'kbo:Enterprise' FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:isVersionOf', 'v:'||k FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:companyStatus',
-            'kbo:JuridicalSituation_000' FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:companyType',
-            'kbo:JuridicalForm_014' FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:legalName', 'Company '||k FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:registeredAddress', 'a:'||k FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:activity', 'act:'||(k % 50) FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:activity', 'act:'||((k + 7) % 50) FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:activity', 'act:'||((k + 13) % 50) FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:establishment', 'e:'||k FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:status', 'kbo:Status_AC' FROM m
-  UNION ALL SELECT k, 'a:'||k, 'kbo:fullAddress', 'Street '||k FROM m
-  UNION ALL SELECT k, 'a:'||k, 'kbo:postCode', (k % 9999)::VARCHAR FROM m
-)
-""",
-        "kbo_bulk_extract_local": """
-WITH m AS (SELECT o_orderkey AS k FROM orders)
-SELECT 'm:'||k AS entity, subject, predicate, object_value FROM (
-  SELECT k, 'm:'||k AS subject, 'rdf:type' AS predicate,
-         'kbo:legalEntity' AS object_value FROM m
-  UNION ALL SELECT k, 'm:'||k, 'rdf:type', 'kbo:Enterprise' FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:isVersionOf', 'v:'||k FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:companyStatus',
-            'kbo:JuridicalSituation_000' FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:companyType',
-            'kbo:JuridicalForm_014' FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:legalName', 'Company '||k FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:registeredAddress', 'a:'||k FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:activity', 'act:'||(k % 50) FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:activity', 'act:'||((k + 7) % 50) FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:activity', 'act:'||((k + 13) % 50) FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:establishment', 'e:'||k FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:status', 'kbo:Status_AC' FROM m
-  UNION ALL SELECT k, 'a:'||k, 'kbo:fullAddress', 'Street '||k FROM m
-  UNION ALL SELECT k, 'a:'||k, 'kbo:postCode', (k % 9999)::VARCHAR FROM m
-)
-""",
-        # inverse shape: base quad set plus the member's two incoming
-        # kbo:memberOf edges (the ^kbo:memberOf match witnesses)
-        "kbo_bulk_extract_inverse": """
-WITH m AS (SELECT o_orderkey AS k FROM orders)
-SELECT 'm:'||k AS entity, subject, predicate, object_value FROM (
-  SELECT k, 'm:'||k AS subject, 'rdf:type' AS predicate,
-         'kbo:legalEntity' AS object_value FROM m
-  UNION ALL SELECT k, 'm:'||k, 'rdf:type', 'kbo:Enterprise' FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:isVersionOf', 'v:'||k FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:companyStatus',
-            'kbo:JuridicalSituation_000' FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:companyType',
-            'kbo:JuridicalForm_014' FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:legalName', 'Company '||k FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:registeredAddress', 'a:'||k FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:activity', 'act:'||(k % 50) FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:activity', 'act:'||((k + 7) % 50) FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:activity', 'act:'||((k + 13) % 50) FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:establishment', 'e:'||k FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:status', 'kbo:Status_AC' FROM m
-  UNION ALL SELECT k, 'a:'||k, 'kbo:fullAddress', 'Street '||k FROM m
-  UNION ALL SELECT k, 'a:'||k, 'kbo:postCode', (k % 9999)::VARCHAR FROM m
-  UNION ALL SELECT k, 'p:'||k||':0', 'kbo:memberOf', 'm:'||k FROM m
-  UNION ALL SELECT k, 'p:'||k||':1', 'kbo:memberOf', 'm:'||k FROM m
-)
-""",
-        # extended shape (sequence + alternative): the chain witnesses
-        # are quads the base extraction already emits, so same oracle
-        "kbo_bulk_extract_local_ext": """
-WITH m AS (SELECT o_orderkey AS k FROM orders)
-SELECT 'm:'||k AS entity, subject, predicate, object_value FROM (
-  SELECT k, 'm:'||k AS subject, 'rdf:type' AS predicate,
-         'kbo:legalEntity' AS object_value FROM m
-  UNION ALL SELECT k, 'm:'||k, 'rdf:type', 'kbo:Enterprise' FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:isVersionOf', 'v:'||k FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:companyStatus',
-            'kbo:JuridicalSituation_000' FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:companyType',
-            'kbo:JuridicalForm_014' FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:legalName', 'Company '||k FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:registeredAddress', 'a:'||k FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:activity', 'act:'||(k % 50) FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:activity', 'act:'||((k + 7) % 50) FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:activity', 'act:'||((k + 13) % 50) FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:establishment', 'e:'||k FROM m
-  UNION ALL SELECT k, 'm:'||k, 'kbo:status', 'kbo:Status_AC' FROM m
-  UNION ALL SELECT k, 'a:'||k, 'kbo:fullAddress', 'Street '||k FROM m
-  UNION ALL SELECT k, 'a:'||k, 'kbo:postCode', (k % 9999)::VARCHAR FROM m
-)
-""",
+        "kbo_bulk_extract": _KBO_ORACLE,
+        "kbo_bulk_extract_inverse": _KBO_INVERSE_ORACLE,
         "path_closure": """
 WITH RECURSIVE edges AS (
   SELECT o_orderkey AS src,
@@ -1418,126 +1166,11 @@ SELECT DISTINCT node,
             ELSE (node // 50) * 50 END AS component
 FROM nodes ORDER BY node
 """,
-        "cosine_topk": """
-WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings
-           WHERE vec_id < 8),
-scored AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         (SELECT sum(a * b) FROM (
-             SELECT unnest(q.qe)::DOUBLE AS a, unnest(e.embedding)::DOUBLE AS b))
-         / (sqrt((SELECT sum(a * a) FROM (SELECT unnest(q.qe)::DOUBLE AS a)))
-          * sqrt((SELECT sum(b * b) FROM (SELECT unnest(e.embedding)::DOUBLE AS b))))
-         AS score
-  FROM embeddings e CROSS JOIN q
-  WHERE e.vec_id <> q.query_id
-)
-SELECT query_id, neighbor_id, round(score, 4) AS score, rank
-FROM (SELECT *, row_number() OVER (
-          PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rank
-      FROM scored)
-WHERE rank <= 5
-""",
-        "ivf_topk": _IVF_ORACLE,
-        "lsh_buckets_topk": f"""
-WITH proj AS (
-  SELECT vec_id, j,
-         sum(x * (((i * 37 + j * 101) % 11) - 5)) AS p
-  FROM (SELECT vec_id,
-               unnest(list_transform(embedding, y -> y::DOUBLE)) AS x,
-               generate_subscripts(embedding, 1) - 1 AS i
-        FROM embeddings)
-  CROSS JOIN range(0, 8) r(j)
-  GROUP BY vec_id, j
-),
-buck AS (
-  SELECT vec_id,
-         sum(CASE WHEN p > 0 THEN 1 << j ELSE 0 END)::BIGINT AS bucket
-  FROM proj GROUP BY vec_id
-),
-scored AS (
-  SELECT bq.vec_id AS query_id, be.vec_id AS neighbor_id,
-         {_cos_sql('q.embedding', 'e.embedding')} AS score
-  FROM buck bq
-  JOIN buck be ON be.bucket = bq.bucket AND be.vec_id <> bq.vec_id
-  JOIN embeddings q ON q.vec_id = bq.vec_id
-  JOIN embeddings e ON e.vec_id = be.vec_id
-  WHERE bq.vec_id < 8
-)
-SELECT query_id, neighbor_id, round(score, 4) AS score, rank,
-       nb.bucket AS neighbor_bucket
-FROM (SELECT *, row_number() OVER (
-          PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rank
-      FROM scored) t
-JOIN buck nb ON nb.vec_id = t.neighbor_id
-WHERE rank <= 5
-""",
         "shacl_report": """
 SELECT 'm:'||o_orderkey AS entity,
        (o_orderkey % 7 <> 0) AS conforms,
        CASE WHEN o_orderkey % 7 = 0 THEN '<kbo:status>' END AS missing
 FROM orders
-""",
-        "embedding_cosine_dups": """
-WITH corpus AS (
-  SELECT vec_id, list_transform(embedding, y -> y::DOUBLE) AS e FROM embeddings
-  UNION ALL
-  SELECT vec_id + 1000000, list_transform(embedding, y -> y::DOUBLE + 0.05)
-  FROM embeddings WHERE vec_id % 5 = 0
-),
-proj AS (
-  SELECT vec_id, j, sum(x * (((i * 37 + j * 101) % 11) - 5)) AS p
-  FROM (SELECT vec_id, unnest(e) AS x, generate_subscripts(e, 1) - 1 AS i
-        FROM corpus)
-  CROSS JOIN range(0, 16) r(j)
-  GROUP BY vec_id, j
-),
-buck AS (
-  SELECT vec_id, j // 2 AS band,
-         sum(CASE WHEN p > 0 THEN 1 << (j % 2) ELSE 0 END)::BIGINT AS bucket
-  FROM proj GROUP BY vec_id, j // 2
-),
-cand AS (
-  SELECT DISTINCT a.vec_id AS left_id, b.vec_id AS right_id
-  FROM buck a
-  JOIN buck b ON a.band = b.band AND a.bucket = b.bucket
-             AND a.vec_id < b.vec_id
-),
-scored AS (
-  SELECT left_id, right_id,
-         round((SELECT sum(a * b)
-                FROM (SELECT unnest(x.e) AS a, unnest(y.e) AS b))
-             / (sqrt((SELECT sum(a * a) FROM (SELECT unnest(x.e) AS a)))
-              * sqrt((SELECT sum(b * b) FROM (SELECT unnest(y.e) AS b)))),
-               4) AS score
-  FROM cand
-  JOIN corpus x ON x.vec_id = left_id
-  JOIN corpus y ON y.vec_id = right_id
-)
-SELECT left_id, right_id, score FROM scored WHERE score >= 0.9
-""",
-        "media_pipeline": f"""
-WITH {_MEDIA_CTE.strip()},
-fr AS (SELECT media_id, count(*) AS n_frames, max((i * 500)::INT) AS last_ts_ms
-       FROM (SELECT media_id, unnest(range(0, duration_ms // 500)) AS i
-             FROM media WHERE kind = 'video')
-       GROUP BY media_id)
-SELECT m.media_id, m.kind, m.width, m.height,
-       length(payload_str) AS payload_len,
-       md5(payload_str) AS checksum,
-       CASE WHEN m.width IS NULL THEN NULL
-            ELSE least(m.width, 32) END AS rs_width,
-       CASE WHEN m.height IS NULL THEN NULL
-            ELSE least(m.height, 32) END AS rs_height,
-       (CASE WHEN m.width IS NULL THEN length(payload_str)
-             ELSE greatest(1, (length(payload_str)
-                  * least(m.width, 32) * least(m.height, 32))
-                  // (m.width * m.height))
-        END)::INT AS rs_payload_len,
-       fr.n_frames AS n_frames,
-       fr.last_ts_ms AS last_ts_ms,
-       array_to_string(list_transform(range(1, 9),
-           j -> ascii(substr(payload_str, j::INT, 1))), ',') AS feat
-FROM media m LEFT JOIN fr USING (media_id)
 """,
         "rdfs_entail_kbo": """
 WITH m AS (SELECT o_orderkey AS k FROM orders)
@@ -1726,7 +1359,10 @@ FROM acts JOIN reach USING (a)
 GROUP BY 1
 """,
     }
-    # store-local inverse extraction: identical expected quad set as the
-    # global-engine inverse query (same corpus, same shape)
+    # The store-local engine and the extended shape (sequence +
+    # alternative: its chain witnesses are quads the base extraction
+    # already emits) expect the same quad sets as the global engine.
+    out["kbo_bulk_extract_local"] = out["kbo_bulk_extract"]
+    out["kbo_bulk_extract_local_ext"] = out["kbo_bulk_extract"]
     out["kbo_bulk_extract_local_inv"] = out["kbo_bulk_extract_inverse"]
     return out

@@ -50,7 +50,6 @@ HEADLINE = [
     "shape_extract_order",   # engine: CBD + blank closure + nodeLinks
     "path_closure",          # iterative transitive closure
     "connected_components",  # large-star/small-star canonicalization
-    "cosine_topk",           # similarity search baseline
     "q1_pricing",            # scan-heavy aggregation
     "top_orders_per_customer",  # window top-k
 ]

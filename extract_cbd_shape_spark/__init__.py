@@ -17,9 +17,9 @@ Plus the web-scale KG-construction stages the reference doesn't have:
 vectorized page->triples extraction, store-local bulk extraction
 (bucket by page once, then one sink-fused task per bucket file), entity
 linking, connected-components canonicalization, and snapshot
-materialization. Corpus operators outside the pipeline (sampling,
-similarity search, PII redaction, packing, span dedup, BM25, PageRank,
-multimodal columns) sit beside them in `operators/` and `functions/`.
+materialization. Corpus operators outside the pipeline (sampling, PII
+redaction, packing, span dedup, PageRank) sit beside them in
+`operators/`.
 """
 
 __version__ = "0.1.0"

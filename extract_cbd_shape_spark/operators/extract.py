@@ -42,7 +42,6 @@ sets (bounded by extraction size), never the quad stream.
 
 from __future__ import annotations
 
-import itertools
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional, Sequence, Tuple, Union
 
@@ -171,31 +170,10 @@ class BulkCBDShapeExtractor:
         resolver: Optional[Dict[str, List[Quad]]] = None,
         max_rounds: int = 32,
         max_deref_rounds: int = 8,
-        materialize_waves: bool = False,
         store_distinct: bool = False,
         broadcast_members_max: int = 2_000_000,
     ):
-        """``materialize_waves`` picks the CBD wave-loop physical
-        strategy — a genuine cost tradeoff, like exchange reuse vs
-        recompute:
-
-        * False (default): each wave checkpoints only a NARROW
-          bookkeeping slice (blank frontier + nodeLink-target rows);
-          result quads stay lazy and the star joins re-execute ONCE
-          inside the caller's final action. Write traffic scales with
-          bookkeeping, not output — measured faster at every
-          parallelism level tried (2/8/32 cores, BENCH.md), since the
-          recompute is one extra probe of an already-clustered store
-          while the full-width checkpoint is an output-sized write.
-        * True: each wave's star join is checkpointed at full quad
-          width; result quads, path targets, trie words and the blank
-          frontier are projections of it, and the final dedup reads
-          checkpoints instead of re-running joins. Candidate when the
-          downstream action is much wider than the bookkeeping slice
-          (e.g. several separate actions re-consume the waves) or
-          executor-local NVMe makes output-sized writes cheap.
-
-        ``store_distinct`` is a caller contract: the triples input has
+        """``store_distinct`` is a caller contract: the triples input has
         no duplicate rows (true for snapshots this package writes —
         materialize_table output is deduplicated — and for any store
         ingested through a distinct). Under that contract the engine's
@@ -243,7 +221,6 @@ class BulkCBDShapeExtractor:
         self.resolver = resolver or {}
         self.max_rounds = max_rounds
         self.max_deref_rounds = max_deref_rounds
-        self.materialize_waves = materialize_waves
         self.store_distinct = store_distinct
         self.broadcast_members_max = broadcast_members_max
         # persisted store copies / trie caches created by runs of this
@@ -256,9 +233,9 @@ class BulkCBDShapeExtractor:
         parts). Call once the returned result/flags DataFrames have been
         fully consumed — long-lived drivers that extract repeatedly
         would otherwise accumulate corpus-sized cache entries per run.
-        Results stay CORRECT after release (with ``materialize_waves=
-        False`` a later action re-runs its star joins against the
-        un-cached store — slower, never wrong). Unpersisting an
+        Results stay CORRECT after release (result quads are lazy, so a
+        later action re-runs its star joins against the un-cached store
+        — slower, never wrong). Unpersisting an
         already-released DataFrame is a no-op, so calling this between
         every extraction is safe."""
         for df in self._persisted:
@@ -551,6 +528,8 @@ class _Run:
         self.trie_parts: List[DataFrame] = [
             self.members_df.select("member_id", F.lit(ROOT_WORD).alias("word"))
         ]
+        # Cached trie checkpoints still alive (see _checkpoint_trie).
+        self._trie_persisted: List[DataFrame] = []
         # visited set = lazy union of already-checkpointed frontier
         # parts: anti-joins are duplicate-insensitive, so no per-wave
         # distinct/checkpoint job is needed to maintain it. An empty
@@ -562,7 +541,7 @@ class _Run:
         # both sides per probe. None = unknown (scale mode).
         self._visited_cbd_n: Optional[int] = 0 if self.latency else None
         self.processed_parts: List[DataFrame] = []  # for deref flagging
-        # Lean-mode CBD emission: per-wave star joins are NOT appended
+        # CBD emission: per-wave star joins are NOT appended
         # to result_parts individually — their (disjoint) frontiers
         # accumulate here and ONE fused (union-of-frontiers x store)
         # join emits every CBD quad in the final action (see execute).
@@ -651,15 +630,6 @@ class _Run:
             out = out.unionByName(p)
         return out
 
-    def _visited_build(self, df: DataFrame) -> DataFrame:
-        """Build side of a visited anti/semi-join. Deliberately NOT
-        broadcast: both sides are bookkeeping-sized, the ABAB-measured
-        win over a small shuffle join was nil, and the visited set is
-        rebuilt per wave — per-wave broadcasts of a growing set pinned
-        O(waves) hash-relation pages in the driver until the final
-        action (OOM on deep recursions; see _LATENCY_BCAST_BUDGET)."""
-        return df
-
     def _visited_cbd_add(self, part: DataFrame,
                          n: Optional[int] = None) -> None:
         self._visited_cbd_parts.append(part)
@@ -695,15 +665,9 @@ class _Run:
         new = self._trie_df().distinct().persist()
         self.ex._persisted.append(new)
         self.trie_parts = [new]
-        pending = getattr(self, "_trie_persisted", [])
-        pending.append(new)
-        if len(pending) > 2:
-            pending.pop(0).unpersist(blocking=False)
-        self._trie_persisted = pending
-
-    @staticmethod
-    def _empty(df: DataFrame) -> bool:
-        return df.isEmpty()
+        self._trie_persisted.append(new)
+        if len(self._trie_persisted) > 2:
+            self._trie_persisted.pop(0).unpersist(blocking=False)
 
     # ------------------------------------------------------------------ CBD
 
@@ -711,19 +675,18 @@ class _Run:
              target_preds: frozenset = frozenset()) -> Optional[DataFrame]:
         """CBD star + blank-node closure (lib/CBDShapeExtractor.ts:472-508).
 
-        Emits quads into result_parts and words into trie_parts; maintains
-        the global per-member blank-visited set. Returns the wave-0 star
+        Records each wave's frontier in _cbd_emit_frontiers (execute()
+        emits their quads) and words into trie_parts; maintains the
+        global per-member blank-visited set. Returns the wave-0 star
         rows projected to the nodeLink-target columns, so the simple-path
         stage and nodeLink target derivation reuse the wave join instead
         of re-running the same (frontier x store) join (VERDICT r2 #1:
         one materialization per wave).
 
-        Physical strategy per ``materialize_waves`` (see the extractor
-        ctor): the wave join is either checkpointed at full quad width
-        (results/targets/frontier read it back) or kept lazy with only a
-        narrow (blank frontier + rows matching ``target_preds``)
-        bookkeeping checkpoint, results re-executing once in the final
-        action.
+        Each wave join stays lazy; only a narrow bookkeeping slice
+        (blank frontier + rows matching ``target_preds``) is
+        checkpointed, so write traffic scales with bookkeeping, not
+        output.
 
         Memo-revisited wave-0 nodes (reference: extractRecursively always
         re-runs the star; only the BLANK recursion is guarded,
@@ -744,7 +707,13 @@ class _Run:
             frontier = base
             skipped = None
         else:
-            visited = self._visited_build(self._visited_cbd_df())
+            # Visited build side deliberately NOT broadcast: both sides
+            # are bookkeeping-sized, the ABAB-measured win over a small
+            # shuffle join was nil, and the set grows per wave —
+            # per-wave broadcasts pinned O(waves) hash-relation pages in
+            # the driver until the final action (OOM on deep
+            # recursions; see _LATENCY_BCAST_BUDGET).
+            visited = self._visited_cbd_df()
             frontier = base.join(
                 visited, ["member_id", "node", "node_kind"], "left_anti"
             )
@@ -806,7 +775,6 @@ class _Run:
             return out
 
         star_parts: List[DataFrame] = []
-        materialize = self.ex.materialize_waves
         # Wave frontier row count (latency mode): wave 0 is bounded by
         # the round's work set; later waves by the blank-children count
         # taken at the wave checkpoint (it doubles as emptiness probe).
@@ -820,37 +788,25 @@ class _Run:
             # closure already walked): nothing fresh to star, so skip
             # the eager wave loop entirely — one cheap anti-join
             # emptiness probe instead of a full store-probe join.
-            if self._empty(frontier):
+            if frontier.isEmpty():
                 return star0()
         wave = 0
         while True:
             joined = star_join(frontier, extra if wave == 0 else [], f_count)
-            if materialize:
-                # ONE materialization per wave, at full quad width:
-                # result quads, trie words, blank frontier and (wave 0)
-                # the path targets are projections of this checkpoint;
-                # the join never re-executes — the final dedup reads it.
-                joined = joined.localCheckpoint()
-                if wave == 0:
-                    star_parts.append(tproj(joined))
-                self.result_parts.append(
-                    joined.select("member_id", *QUAD_COLS))
-            else:
-                # Lean mode: don't emit this wave's join as its own lazy
-                # result part (the final action would then re-probe the
-                # persisted store once PER WAVE — k corpus streams).
-                # Record the frontier instead; execute() emits all CBD
-                # quads with ONE fused join over the union of frontiers.
-                # Equivalent because frontiers are globally disjoint on
-                # (member, node) (visited_cbd) and every wave applies
-                # the same row filters.
-                self._cbd_emit_frontiers.append(
-                    frontier.select(
-                        "member_id", "entity", "entity_kind",
-                        "node", "node_kind",
-                    )
+            # Don't emit this wave's join as its own lazy result part
+            # (the final action would then re-probe the persisted store
+            # once PER WAVE — k corpus streams). Record the frontier
+            # instead; execute() emits all CBD quads with ONE fused join
+            # over the union of frontiers. Equivalent because frontiers
+            # are globally disjoint on (member, node) (visited_cbd) and
+            # every wave applies the same row filters.
+            self._cbd_emit_frontiers.append(
+                frontier.select(
+                    "member_id", "entity", "entity_kind",
+                    "node", "node_kind",
                 )
-                self._cbd_emit_counts.append(f_count)
+            )
+            self._cbd_emit_counts.append(f_count)
             self.trie_parts.append(words(joined))
             blank_children = (
                 joined.filter(F.col("object_kind") == BLANK)
@@ -860,8 +816,9 @@ class _Run:
                     F.col("object_kind").alias("node_kind"),
                     F.col("_new_pos").alias("pos"),
                 )
+                # never broadcast: see the visited anti-join above
                 .join(
-                    self._visited_build(self._visited_cbd_df()),
+                    self._visited_cbd_df(),
                     ["member_id", "node", "node_kind"],
                     "left_anti",
                 )
@@ -873,54 +830,49 @@ class _Run:
                     F.first("entity_kind").alias("entity_kind"),
                 )
             )
-            if materialize:
-                # tiny; several consumers (emptiness probe, next wave's
-                # join, visited anti-joins) — one small write wins
-                nxt = blank_children.localCheckpoint()
+            # ONE fused job per wave — the star join, the
+            # blank-children anti-join AND the next-frontier claim
+            # aggregate all run inside a single checkpoint; the
+            # emptiness probe and every later consumer (next wave's
+            # join, visited anti-joins) read materialized rows
+            # instead of re-running the aggregate (r2 profile: the
+            # probe-and-recompute pattern cost ~0.6s of fixed serial
+            # time per wave at 4 cores). Results and trie words stay
+            # lazy on ``joined`` and re-execute once in the caller's
+            # final action.
+            tp = sorted(target_preds) if wave == 0 else []
+            if tp:
+                # Wave-0 additionally needs the nodeLink-target rows:
+                # they share the SAME checkpoint as the frontier,
+                # told apart by a NULL predicate (impossible for a
+                # real quad; the frontier marker rows carry the
+                # claimed node in the object columns).
+                markers = blank_children.select(
+                    "member_id", "entity", "entity_kind",
+                    *[F.lit(None).cast("string").alias(c) for c in extra],
+                    F.lit(None).cast("string").alias("predicate"),
+                    F.col("node").alias("object_value"),
+                    F.col("node_kind").alias("object_kind"),
+                    F.lit(None).cast("string").alias("object_lang"),
+                    F.lit(None).cast("string").alias("object_datatype"),
+                    F.col("pos").alias("_new_pos"),
+                )
+                combined = (
+                    joined.filter(F.col("predicate").isin(tp))
+                    .select(*target_cols)
+                    .unionByName(markers)
+                    .localCheckpoint()
+                )
+                star_parts.append(
+                    combined.filter(F.col("predicate").isNotNull()))
+                nxt = combined.filter(F.col("predicate").isNull()).select(
+                    "member_id", "entity", "entity_kind",
+                    F.col("object_value").alias("node"),
+                    F.col("object_kind").alias("node_kind"),
+                    F.col("_new_pos").alias("pos"),
+                )
             else:
-                # Lean mode: ONE fused job per wave — the star join, the
-                # blank-children anti-join AND the next-frontier claim
-                # aggregate all run inside a single checkpoint; the
-                # emptiness probe and every later consumer (next wave's
-                # join, visited anti-joins) read materialized rows
-                # instead of re-running the aggregate (r2 profile: the
-                # probe-and-recompute pattern cost ~0.6s of fixed serial
-                # time per wave at 4 cores). Results and trie words stay
-                # lazy on ``joined`` and re-execute once in the caller's
-                # final action — the lean-mode contract.
-                tp = sorted(target_preds) if wave == 0 else []
-                if tp:
-                    # Wave-0 additionally needs the nodeLink-target rows:
-                    # they share the SAME checkpoint as the frontier,
-                    # told apart by a NULL predicate (impossible for a
-                    # real quad; the frontier marker rows carry the
-                    # claimed node in the object columns).
-                    markers = blank_children.select(
-                        "member_id", "entity", "entity_kind",
-                        *[F.lit(None).cast("string").alias(c) for c in extra],
-                        F.lit(None).cast("string").alias("predicate"),
-                        F.col("node").alias("object_value"),
-                        F.col("node_kind").alias("object_kind"),
-                        F.lit(None).cast("string").alias("object_lang"),
-                        F.lit(None).cast("string").alias("object_datatype"),
-                        F.col("pos").alias("_new_pos"),
-                    )
-                    combined = (
-                        joined.filter(F.col("predicate").isin(tp))
-                        .select(*target_cols)
-                        .unionByName(markers)
-                        .localCheckpoint()
-                    )
-                    star_parts.append(
-                        combined.filter(F.col("predicate").isNotNull()))
-                    nxt = combined.filter(F.col("predicate").isNull()).select(
-                        "member_id", "entity", "entity_kind",
-                        F.col("object_value").alias("node"),
-                        F.col("object_kind").alias("node_kind"),
-                        F.col("_new_pos").alias("pos"),
-                    )
-                else:
-                    nxt = blank_children.localCheckpoint()
+                nxt = blank_children.localCheckpoint()
             if self.latency:
                 # Latency mode: the emptiness probe is a count over the
                 # just-checkpointed rows — same single cheap job, and
@@ -929,7 +881,7 @@ class _Run:
                 if f_count == 0:
                     return star0()
             else:
-                if self._empty(nxt):
+                if nxt.isEmpty():
                     return star0()
                 f_count = None
             self._visited_cbd_add(nxt.select("member_id", "node", "node_kind"),
@@ -1043,7 +995,7 @@ class _Run:
         out_parts: List[DataFrame] = []
         i = 0
         while True:
-            if self._empty(targets):
+            if targets.isEmpty():
                 break
             if path.admits(i):
                 out_parts.append(targets)
@@ -1149,7 +1101,7 @@ class _Run:
         ]
         def _visited_shape() -> DataFrame:
             # small x small anti-join build side — never broadcast (the
-            # memo is rebuilt per round; see _visited_build's rationale)
+            # memo is rebuilt per round; see the visited anti-join in _cbd)
             out = visited_parts[0]
             for p in visited_parts[1:]:
                 out = out.unionByName(p)
@@ -1171,7 +1123,7 @@ class _Run:
                 # emptiness probe costs no extra job in this mode.
                 if self._round_count == 0:
                     break
-            elif self._empty(work):
+            elif work.isEmpty():
                 break
             rounds += 1
             if candidates is not None and len(candidates) == 1:
@@ -1297,7 +1249,7 @@ class _Run:
             )
 
         # Wide mode: when CBD emission runs as the ONE fused
-        # (union-of-frontiers x store) join (lean mode), the member
+        # (union-of-frontiers x store) join, the member
         # attribute columns are attached to the SMALL side (the
         # frontier union / the pickup's member side) before the store
         # join, so the final action never joins the corpus-sized output
@@ -1307,19 +1259,20 @@ class _Run:
         # and reconciled against the CBD emission on its own (small)
         # slice, so the corpus-sized CBD bulk STREAMS with no
         # full-output exchange at all (see the witness handling below).
-        # Duplicated stores and materializing-wave runs keep the legacy
-        # narrow layout + full-output dedup.
-        lean = bool(self._cbd_emit_frontiers)
+        # Two cases keep the narrow layout + full-output dedup: runs
+        # with no CBD frontier (every shape closed), and witness-emitting
+        # runs over a store without the store_distinct contract.
+        fused = bool(self._cbd_emit_frontiers)
         witness_parts = list(self.result_parts)
-        small_witness = lean and self.ex.store_distinct and bool(witness_parts)
-        wide = lean and (not witness_parts or small_witness)
+        small_witness = fused and self.ex.store_distinct and bool(witness_parts)
+        wide = fused and (not witness_parts or small_witness)
         if small_witness:
             # Witness parts leave result_parts: they re-enter below on
             # their own deduplicated, visited-reconciled slice.
             self.result_parts = []
         attr_cols = ["entity", "entity_kind", "shape_key", "input_idx"]
 
-        # Lean-mode fused CBD emission: one (union-of-frontiers x store)
+        # Fused CBD emission: one (union-of-frontiers x store)
         # join replaces k per-wave lazy joins in the final action — the
         # persisted store streams ONCE instead of once per wave. The
         # filters mirror _cbd.star_join exactly; results never need the
@@ -1410,7 +1363,7 @@ class _Run:
             anti_keys = ["member_id", "subject", "subject_kind"]
             # ONE end-of-run anti-join: a single budget-counted
             # broadcast here is safe (released right after the final
-            # action), unlike the per-wave visited probes (_visited_build)
+            # action), unlike the per-wave visited probes in _cbd
             visited = self._seed(visited, self._visited_cbd_n)
             if self.ex.cbd_default_graph:
                 wit = (
@@ -1585,7 +1538,7 @@ class _Run:
                 fallback_rows = None
             else:
                 fallback_rows = focus_base
-            if fallback_rows is not None and not self._empty(fallback_rows):
+            if fallback_rows is not None and not fallback_rows.isEmpty():
                 # nodeLink fallback match: trie pushes happen, but matched
                 # quads are NOT added to the result
                 # (lib/CBDShapeExtractor.ts:421-428 uses only match.target).

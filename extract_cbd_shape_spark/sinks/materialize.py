@@ -38,6 +38,16 @@ def _snapshots(path: str) -> List[str]:
     )
 
 
+def _write_manifest(snap_dir: str, manifest: dict) -> None:
+    """Commit a snapshot: write its manifest to a hidden temp file, then
+    rename it into place. The rename is atomic, so a crash mid-write
+    leaves no manifest and the snapshot stays invisible."""
+    tmp = os.path.join(snap_dir, f".{MANIFEST}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(manifest, f, indent=1, sort_keys=True)
+    os.replace(tmp, os.path.join(snap_dir, MANIFEST))
+
+
 def parts_for_bytes(spark: SparkSession, nbytes: int) -> int:
     """How many buckets or tasks ``nbytes`` of input gets: one per
     ``spark.sql.files.maxPartitionBytes`` (the split size Spark's own
@@ -134,13 +144,10 @@ def materialize_table(
     explicit count that differs from it is rejected. Manifest carries
     merged ``giant_stores`` plus delta-scoped ``delta_giant_stores`` /
     ``delta_rows`` so incremental consumers process only the delta."""
-    snaps = _snapshots(path)
-    snap_id = len(snaps)
+    snap_id = len(_snapshots(path))
     snap_dir = os.path.join(path, f"snap-{snap_id:04d}")
-    parent: Optional[dict] = None
-    if append and snaps:
-        with open(os.path.join(path, snaps[-1], MANIFEST)) as f:
-            parent = json.load(f)
+    parent = latest_manifest(path) if append else None
+    if parent is not None:
         if n_buckets is None:
             n_buckets = parent.get("n_buckets")
         if parent.get("bucket_by") != bucket_by or (
@@ -238,8 +245,7 @@ def materialize_table(
     if manifest_extra:
         manifest.update(manifest_extra)
     os.makedirs(snap_dir, exist_ok=True)
-    with open(os.path.join(snap_dir, MANIFEST), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    _write_manifest(snap_dir, manifest)
     return manifest
 
 
@@ -277,8 +283,7 @@ def commit_snapshot(
         "partitions": partitions,
         **extra,
     }
-    with open(os.path.join(snap_dir, MANIFEST), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    _write_manifest(snap_dir, manifest)
     return manifest
 
 
@@ -321,11 +326,9 @@ def latest_snapshot_path(path: str) -> Optional[str]:
 def latest_snapshot_paths(path: str) -> List[str]:
     """All data dirs (absolute) of the latest snapshot, parent files
     included for append snapshots."""
-    snaps = _snapshots(path)
-    if not snaps:
+    m = latest_manifest(path)
+    if m is None:
         return []
-    with open(os.path.join(path, snaps[-1], MANIFEST)) as f:
-        m = json.load(f)
     return [os.path.join(path, d) for d in _data_dirs(m)]
 
 

@@ -1,23 +1,17 @@
-"""Unit tests for the closure, linking and similarity operators on tiny
+"""Unit tests for the closure and linking operators on tiny
 hand-built inputs."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from extract_cbd_shape_spark.operators.closure import (
     connected_components,
     transitive_closure,
 )
 from extract_cbd_shape_spark.operators.linking import link_mentions, mentions_from_docs
-from extract_cbd_shape_spark.operators.similarity import (
-    cosine_near_dups,
-    cosine_topk,
-    sign_lsh_buckets,
-)
 
 
 TEXT_A = "the quick brown fox jumps over the lazy dog again and again today"
-TEXT_B = "the quick brown fox jumps over the lazy dog again and again"  # near-dup
+TEXT_B = "the quick brown fox jumps over the lazy dog again and again"
 TEXT_C = "completely different words about spark query engines and shuffles"
 
 
@@ -103,188 +97,6 @@ def test_entity_linking_salted(spark, docs):
     assert (1, "ent:fox") in links and (2, "ent:fox") in links
     assert (3, "ent:spark") in links
     assert not any(d == 3 and e == "ent:fox" for d, e in links)
-
-
-def test_cosine_topk_exact(spark):
-    vecs = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0, 0.0]),
-            (1, [0.9, 0.1, 0.0]),
-            (2, [0.0, 1.0, 0.0]),
-            (3, [-1.0, 0.0, 0.0]),
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    queries = vecs.filter(F.col("vec_id") == 0)
-    got = [(r.neighbor_id, r.rank) for r in
-           cosine_topk(vecs, queries, k=3).orderBy("rank").collect()]
-    assert got[0] == (1, 1)
-    assert got[1] == (2, 2)
-    assert got[2] == (3, 3)
-
-
-def test_sign_lsh_buckets_deterministic(spark):
-    vecs = spark.createDataFrame(
-        [(0, [1.0] * 8), (1, [1.0] * 8), (2, [-1.0] * 8)],
-        "vec_id long, embedding array<float>",
-    )
-    b = {r.vec_id: r.bucket for r in sign_lsh_buckets(vecs).collect()}
-    assert b[0] == b[1]
-    assert b[0] != b[2]
-
-
-def test_cosine_near_dups_planted_pairs(spark):
-    """Banded sign-LSH + exact verify recovers planted near-duplicates
-    (a slightly perturbed copy of each base vector) and emits no pair
-    below the cosine threshold."""
-    import random
-
-    rng = random.Random(7)
-    rows = []
-    for i in range(40):
-        v = [rng.uniform(-1, 1) for _ in range(16)]
-        rows.append((i, v))
-        if i % 4 == 0:  # planted near-dup: tiny additive perturbation
-            rows.append((i + 1000, [x + 0.02 for x in v]))
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = cosine_near_dups(vecs, threshold=0.95).collect()
-    pairs = {(r.left_id, r.right_id) for r in got}
-    assert {(i, i + 1000) for i in range(0, 40, 4)} <= pairs
-    assert all(r.score >= 0.95 for r in got)
-
-
-def test_ivf_kmeans_recall_vs_exact(spark):
-    """IVF with Lloyd's k-means centroids (r3): recall@5 against the
-    cosine_topk exactness baseline is reported and must rise
-    monotonically with nprobe, reaching >= 0.8 at nprobe=16 (half the
-    centroid count). Also pins determinism: two kmeans_centroids runs
-    are bit-identical (decimal-exact means — the property the DuckDB
-    oracle mirror relies on)."""
-    from pyspark.sql import functions as F
-
-    from extract_cbd_shape_spark.operators.similarity import (
-        cosine_topk,
-        ivf_topk,
-        kmeans_centroids,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 8)
-    exact = {(r.query_id, r.neighbor_id)
-             for r in cosine_topk(emb, q, k=5).collect()}
-    recalls = []
-    for nprobe in (2, 8, 16):
-        approx = {(r.query_id, r.neighbor_id)
-                  for r in ivf_topk(emb, q, k=5, nprobe=nprobe).collect()}
-        recalls.append(len(exact & approx) / len(exact))
-    print(f"ivf recall@5 by nprobe(2,8,16): {recalls}")
-    assert recalls == sorted(recalls)  # more probes never lose recall
-    assert recalls[-1] >= 0.8
-
-    c1 = sorted(map(tuple, ((r.centroid_id, tuple(r.cv))
-                for r in kmeans_centroids(emb).collect())))
-    c2 = sorted(map(tuple, ((r.centroid_id, tuple(r.cv))
-                for r in kmeans_centroids(emb).collect())))
-    assert c1 == c2
-
-
-def test_semantic_dedup_groups_and_reps(spark):
-    """SemDeDup composition: planted duplicate CHAINS collapse to one
-    representative (min id) via connected components; singletons keep
-    themselves."""
-    import random
-
-    from extract_cbd_shape_spark.operators.similarity import semantic_dedup
-
-    rng = random.Random(11)
-    rows = []
-    for i in range(24):
-        v = [rng.uniform(-1, 1) for _ in range(16)]
-        rows.append((i, v))
-        if i % 6 == 0:  # chain: i ~ i+100 ~ i+200 (two perturbations)
-            rows.append((i + 100, [x + 0.015 for x in v]))
-            rows.append((i + 200, [x + 0.03 for x in v]))
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = {r.vec_id: r for r in semantic_dedup(
-        vecs, threshold=0.95, stride=8, n_iter=1).collect()}
-    assert len(out) == len(rows)
-    for i in range(0, 24, 6):
-        group = [i, i + 100, i + 200]
-        reps = {out[g].rep_id for g in group}
-        # the chain must collapse to ONE representative: the min id
-        assert reps == {i}, (i, reps)
-        assert out[i].keep and not out[i + 100].keep and not out[i + 200].keep
-    # untouched singletons keep themselves
-    for i in range(24):
-        if i % 6 != 0:
-            assert out[i].keep and out[i].rep_id == i
-    # keep-filtered corpus has exactly one row per duplicate group
-    kept = [k for k, r in out.items() if r.keep]
-    assert len(kept) == 24
-
-
-def test_cell_assignment_is_map_side(spark):
-    """VERDICT r4 #5: cell assignment must not exchange the embedding
-    side — the old crossJoin+window plan hash-partitioned n x k rows
-    carrying full vectors just to rank <= nprobe scores per id. The
-    vectorized plan's only exchange is the tiny SinglePartition
-    centroid-array aggregate (broadcast side)."""
-    from pyspark.sql import functions as F
-
-    from extract_cbd_shape_spark.operators.similarity import (
-        _assign_cells,
-        kmeans_centroids,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    # checkpoint the centroids so their OWN build lineage (kmeans mean
-    # aggregates legitimately shuffle) doesn't appear in the plan under
-    # assertion — the claim is about the ASSIGNMENT subplan
-    cents = kmeans_centroids(emb, stride=8, n_iter=1).localCheckpoint()
-    e = emb.select(F.col("vec_id").alias("_id"),
-                   F.col("embedding").alias("_v"))
-    member = _assign_cells(e, cents, 2, "_id", "_v")
-    assert member.count() > 0
-    plan = member._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan
-    assert "Window" not in plan
-
-
-def test_kmeans_empty_seed_fallback(spark):
-    """ADVICE r4: N on the order of stride can leave zero
-    id % stride == 0 seeds; the fallback must still produce >= 1
-    centroid so semantic_dedup keeps finding duplicates instead of
-    silently keeping everything."""
-    from extract_cbd_shape_spark.operators.similarity import (
-        kmeans_centroids,
-        semantic_dedup,
-    )
-
-    rows = [(i, [float(i + 1)] * 8) for i in (1, 2, 3, 5, 7)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    assert kmeans_centroids(vecs, stride=64, n_iter=1).count() >= 1
-
-    # planted exact-direction duplicate must collapse even when the
-    # mod-stride seed set is empty (all parallel vectors here: cosine 1)
-    out = {r.vec_id: r for r in semantic_dedup(
-        vecs, threshold=0.999, stride=64, n_iter=1).collect()}
-    assert not out[2].keep and out[2].rep_id == 1
-    assert out[1].keep
-
-
-def test_semantic_dedup_string_ids(spark):
-    """ids keep their native type: string ids (doc URLs) must dedup —
-    the earlier long-cast silently kept every duplicate."""
-    from extract_cbd_shape_spark.operators.similarity import semantic_dedup
-
-    vecs = spark.createDataFrame(
-        [("doc:a", [1.0] * 8), ("doc:b", [1.01] * 8), ("doc:z", [-1.0] * 8)],
-        "vec_id string, embedding array<double>")
-    out = {r.vec_id: r for r in semantic_dedup(
-        vecs, threshold=0.99, stride=1, n_iter=1).collect()}
-    assert out["doc:a"].keep and out["doc:a"].rep_id == "doc:a"
-    assert not out["doc:b"].keep and out["doc:b"].rep_id == "doc:a"
-    assert out["doc:z"].keep
 
 
 def test_connected_components_driver_parity(spark):

@@ -103,6 +103,45 @@ def test_materialize_append_snapshot(spark, tmp_path):
     assert read_latest_snapshot(spark, path).count() == 60
 
 
+def test_torn_manifest_write_is_invisible(spark, tmp_path, monkeypatch):
+    """A crash while the manifest is being written leaves the snapshot
+    uncommitted: readers still see the previous snapshot, and a retried
+    append commits the same manifest as a clean run."""
+    def subjects(lo, hi):
+        return spark.range(lo, hi).select(
+            F.concat(F.lit("s"), F.col("id")).alias("subject"),
+            F.lit("p").alias("predicate"),
+        )
+
+    clean = str(tmp_path / "clean")
+    materialize_table(subjects(0, 60), clean, "ingest", n_buckets=4)
+    want = materialize_table(subjects(60, 100), clean, "ingest",
+                             n_buckets=4, append=True)
+
+    path = str(tmp_path / "tbl")
+    materialize_table(subjects(0, 60), path, "ingest", n_buckets=4)
+
+    def torn_dump(obj, f, **kwargs):
+        text = json.dumps(obj, **kwargs)
+        f.write(text[: len(text) // 2])
+        raise OSError("disk full")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(json, "dump", torn_dump)
+        with pytest.raises(OSError):
+            materialize_table(subjects(60, 100), path, "ingest",
+                              n_buckets=4, append=True)
+    assert latest_manifest(path)["snapshot"] == 0
+    assert len(latest_snapshot_paths(path)) == 1
+
+    got = materialize_table(subjects(60, 100), path, "ingest",
+                            n_buckets=4, append=True)
+    assert got["snapshot"] == want["snapshot"] == 1
+    assert got["rows"] == want["rows"] == 100
+    assert latest_manifest(path)["rows"] == 100
+    assert read_latest_snapshot(spark, path).count() == 100
+
+
 def _subjects_parquet(spark, path, lo, hi):
     spark.range(lo, hi).select(
         F.concat(F.lit("s"), F.col("id")).alias("subject"),

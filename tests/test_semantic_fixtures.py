@@ -14,6 +14,22 @@ named-graph rules, never produced by an engine:
 * A graph is not admitted to a CBD when it is in graphs_to_ignore, or,
   in a bulk run, when it is another member's named graph.
 
+Cases with ``shapes`` extract their members under the shape ``shape``,
+by the shape rules of SURVEY.md §2:
+
+* A focus node of an open shape gets its CBD; a focus node of a closed
+  shape gets none (O15), only the witness quads of its property paths.
+* A path's witness quads are the quads it traverses from the focus
+  (O7-O11, paths parsed as O19): a sequence chains its steps, an
+  inverse step follows a quad from object to subject, ``p*`` walks
+  ``p`` breadth-first from the focus (zero hops admit the focus) and
+  does not expand a node it has already reached. In an open shape a
+  path already witnessed by the CBD is not matched again, and ``p*``
+  always counts as witnessed (zero hops suffice).
+* An ``sh:node`` link extracts every target of its path under the
+  linked shape, whether or not the path's quads were added; each node
+  is extracted once per member (O13).
+
 Quads are compared as (entity, subject, predicate, object_value, graph);
 blank labels are the TriG labels without ``_:``, the default graph is
 None.
@@ -27,6 +43,7 @@ from extract_cbd_shape_spark.model import IRI, QUAD_COLS, Term, quad_to_row
 from extract_cbd_shape_spark.operators import BulkCBDShapeExtractor
 from extract_cbd_shape_spark.operators.local_extract import extract_store
 from extract_cbd_shape_spark.rdf import parse_trig
+from extract_cbd_shape_spark.shapes import ShapesGraph
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "semantics")
 EX = "http://example.org/"
@@ -41,6 +58,13 @@ A, B, M, X, G, M1, M2, IGN, KEEP = _ex(
 NAME, ADDR, KNOWS, STREET, GEO, LAT, BACK, SELF, NEXT = _ex(
     "name", "addr", "knows", "street", "geo", "lat", "back", "self", "next")
 P, Q, R, S, V, W, OWN, LEAK = _ex("p", "q", "r", "s", "v", "w", "own", "leak")
+F, NX, NS, T, U, N1, N2, N3, OUT, LINK = _ex(
+    "F", "X", "S", "T", "U", "N1", "N2", "N3", "Out", "link")
+
+SHAPES_PREFIXES = """
+@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix ex: <http://example.org/> .
+"""
 
 
 CASES = {
@@ -102,12 +126,76 @@ CASES = {
             A: {(A, P, "default", None), (A, S, "k", KEEP),
                 ("k", V, "k-default", None), (A, OWN, "pickup", A)},
         }),
+    "closed_shape_nodelink": dict(
+        members=[F], bulk=False, ignore=(),
+        shapes=SHAPES_PREFIXES + """
+ex:Closed a sh:NodeShape ;
+    sh:closed true ;
+    sh:property [ sh:path ( ex:p ex:q ) ] ,
+                [ sh:path [ sh:inversePath ex:r ] ] ,
+                [ sh:path ex:link ; sh:node ex:Open ] .
+ex:Open a sh:NodeShape ;
+    sh:property [ sh:path ex:name ] .
+""",
+        shape=EX + "Closed",
+        expected={
+            # ex:Closed is closed: no CBD of ex:F, so ex:F ex:name "F"
+            # is out. (ex:p ex:q): step ex:p reaches ex:X and _:pb (2
+            # quads), step ex:q from each adds one quad; the other
+            # quads of ex:X and _:pb are not on the path.
+            # ^ex:r: the one quad with object ex:F and predicate ex:r;
+            # ex:S's name is out. ex:link: its quad, and its target
+            # ex:T is extracted under the open ex:Open: CBD(ex:T) (3)
+            # plus the blank closure _:t1 (2) and _:t2 (1). ex:U is an
+            # IRI object, not expanded. ex:Open's ex:name path is
+            # already witnessed by CBD(ex:T). No graph is named ex:F.
+            F: {(F, P, NX, None), (F, P, "pb", None),
+                (NX, Q, "xq", None), ("pb", Q, "bq", None),
+                (NS, R, F, None),
+                (F, LINK, T, None),
+                (T, NAME, "T", None), (T, ADDR, "t1", None),
+                (T, KNOWS, U, None),
+                ("t1", STREET, "Main", None), ("t1", GEO, "t2", None),
+                ("t2", LAT, "51", None)},
+        }),
+    "zero_or_more_cycle": dict(
+        members=[N1], bulk=False, ignore=(),
+        shapes=SHAPES_PREFIXES + """
+ex:Chain a sh:NodeShape ;
+    sh:property [ sh:path [ sh:zeroOrMorePath ex:next ] ;
+                  sh:node ex:Item ] .
+ex:Item a sh:NodeShape .
+""",
+        shape=EX + "Chain",
+        expected={
+            # ex:Chain is open: CBD(ex:N1) (2). ex:next* is satisfied
+            # by zero hops, so it adds no quads itself, but its link
+            # targets are walked: ex:N1 (zero hops), ex:N2, ex:N3, then
+            # ex:N1 again, already reached, so the walk stops. Each
+            # target is extracted under the open ex:Item: ex:N1 was
+            # already extracted, CBD(ex:N2) (2), CBD(ex:N3) (3). ex:Out
+            # is an IRI object, not expanded; ex:N0's quad points at
+            # ex:N1 and is not outgoing from any extracted node.
+            N1: {(N1, NEXT, N2, None), (N1, NAME, "N1", None),
+                 (N2, NEXT, N3, None), (N2, NAME, "N2", None),
+                 (N3, NEXT, N1, None), (N3, NAME, "N3", None),
+                 (N3, KNOWS, OUT, None)},
+        }),
 }
 
 
 def _load(name):
     with open(os.path.join(FIXTURES, name + ".trig")) as f:
         return parse_trig(f.read())
+
+
+def _shapes(case):
+    """(compiled shapes graph, shape term) of a case; (None, None) for
+    plain CBD."""
+    if "shapes" not in case:
+        return None, None
+    return (ShapesGraph.from_quads(parse_trig(case["shapes"])),
+            Term(IRI, case["shape"]))
 
 
 def _want(case):
@@ -126,8 +214,9 @@ def _key(entity, row):
 def test_interpreter(name):
     case = CASES[name]
     rows = [quad_to_row(q) for q in _load(case.get("fixture", name))]
+    shapes, shape = _shapes(case)
     got = {_key(e, q) for e, *q in extract_store(
-        rows, [(IRI, m) for m in case["members"]], None, None,
+        rows, [(IRI, m) for m in case["members"]], shapes, shape,
         bulk=case["bulk"],
         graphs_to_ignore=tuple((IRI, g) for g in case["ignore"]))}
     assert got == _want(case)
@@ -145,8 +234,10 @@ def test_store_local_sink(spark, sink_extract, name, vectorize):
         "store_key", F.lit("s"))
     members = spark.createDataFrame(
         [(m, "s") for m in case["members"]], "entity string, store_key string")
+    shapes, shape = _shapes(case)
     out = sink_extract(
-        triples, members, bulk=case["bulk"], vectorize=vectorize,
+        triples, members, shapes_graph=shapes, shape=shape,
+        bulk=case["bulk"], vectorize=vectorize,
         graphs_to_ignore=tuple(Term(IRI, g) for g in case["ignore"]))
     got = {_key(r["entity"], [r[c] for c in QUAD_COLS]) for r in out.collect()}
     assert got == _want(case)
@@ -158,8 +249,9 @@ def test_global_engine(spark, name):
 
     case = CASES[name]
     triples = quads_to_df(spark, _load(case.get("fixture", name)))
-    res, _ = BulkCBDShapeExtractor(spark).extract(
-        triples, [Term(IRI, m) for m in case["members"]],
+    shapes, shape = _shapes(case)
+    res, _ = BulkCBDShapeExtractor(spark, shapes_graph=shapes).extract(
+        triples, [Term(IRI, m) for m in case["members"]], shape=shape,
         bulk=case["bulk"],
         graphs_to_ignore=[Term(IRI, g) for g in case["ignore"]])
     got = {_key(r["entity"], [r[c] for c in QUAD_COLS])

@@ -43,7 +43,6 @@ sys.path.insert(0, REPO_PATH)
 job = sys.argv[1]; cpus = int(sys.argv[2]); sf_dir = sys.argv[3]
 replicate = int(sys.argv[4])
 kbo_rep = {"extract_global": replicate,
-           "extract_global_mat": replicate,
            "extract_global_ctrl": replicate,
            "sparkjoin": replicate,
            "extract_local": replicate,
@@ -91,17 +90,12 @@ def kbo_input(rep, with_store):
     m.write.mode("overwrite").parquet(work + "/m")
     return spark.read.parquet(work + "/t"), spark.read.parquet(work + "/m")
 
-if job in ("extract_global", "extract_global_mat"):
-    # default = lean waves (materialize_waves=False): wave joins keep
-    # only a narrow bookkeeping checkpoint and results recompute once
-    # in the final count. _mat measures the materializing variant
-    # (full-width wave checkpoints) as evidence of the cost tradeoff
-    # the knob exposes.
-    mat = job == "extract_global_mat"
+if job == "extract_global":
+    # wave joins keep only a narrow bookkeeping checkpoint and results
+    # recompute once in the final count.
     wt, wm = kbo_members(spark, "/root/testdata/sf0.001")
     BulkCBDShapeExtractor(
-        spark, shapes_graph=shapes, materialize_waves=mat,
-        store_distinct=True).extract(
+        spark, shapes_graph=shapes, store_distinct=True).extract(
         wt, wm, shape=shape)[0].count()  # warm
     triples, members = kbo_input(kbo_rep, with_store=False)
     t0 = time.time()
@@ -110,8 +104,7 @@ if job in ("extract_global", "extract_global_mat"):
     # output path is shuffle-free — the production contract for
     # snapshots materialize_table writes.
     ex = BulkCBDShapeExtractor(
-        spark, shapes_graph=shapes, materialize_waves=mat,
-        store_distinct=True)
+        spark, shapes_graph=shapes, store_distinct=True)
     n = ex.extract(triples, members, shape=shape)[0].count()
     out = dict(sec=time.time() - t0, units=n)
 elif job in ("extract_local", "extract_local_interp"):
@@ -212,7 +205,7 @@ if __name__ == "__main__":
 
 JOBS = [
     ("extract_global",
-     "bulk shape extraction, global engine (lean waves, default) (quads/s)"),
+     "bulk shape extraction, global engine (quads/s)"),
     ("extract_global_ctrl",
      "global engine, codegen off (CPU-bound control) (quads/s)"),
     ("extract_local",

@@ -20,6 +20,7 @@ import io
 import os
 import re
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -151,26 +152,6 @@ def main() -> int:
         print(f"FAIL repeated_spans: {', '.join(probs)}")
     else:
         print("OK  repeated_spans: pruned scan, combined df agg, JVM-only")
-
-    # BM25: a query's term-IN filter must reach the parquet index scan
-    # (PushedFilters In(term,...)) so row groups prune before compute.
-    import tempfile
-
-    from extract_cbd_shape_spark.operators.search import bm25_index, bm25_search
-    idx_dir = tempfile.mkdtemp(prefix="bm25_audit_")
-    bm25_index(docs).write.mode("overwrite").parquet(idx_dir)
-    idx = spark.read.parquet(idx_dir)
-    plan = plan_of(bm25_search(idx, "alpha beta", k=5))
-    probs = []
-    if not re.search(r"PushedFilters: \[.*In\(term, \[alpha,beta\]", plan):
-        probs.append("term IN filter not pushed to index scan")
-    if re.search(r"BatchEvalPython", plan):
-        probs.append("row-Python in search path")
-    if probs:
-        failures.append("bm25_search")
-        print(f"FAIL bm25_search: {', '.join(probs)}")
-    else:
-        print("OK  bm25_search: term-IN pushed to index scan, JVM-only")
 
     # Store-local sink: one task per bucket file over a JVM source. No
     # Exchange, no Python-RDD scan, and exactly one Python operator, the
