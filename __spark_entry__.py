@@ -36,14 +36,6 @@ from extract_cbd_shape_spark.operators.kgtriples import (
     with_store_key,
 )
 from extract_cbd_shape_spark.operators.linking import link_mentions
-from extract_cbd_shape_spark.operators.packing import (
-    pack_offsets,
-    pack_sequences,
-)
-from extract_cbd_shape_spark.operators.pii import (
-    PII_PATTERNS,
-    redact_documents,
-)
 from extract_cbd_shape_spark.functions.text import (
     LANG_STOPWORDS,
     lang_id_column,
@@ -445,88 +437,6 @@ def _q_text_metrics(spark, sf_dir):
     )
 
 
-_SPLIT_WEIGHTS = {"train": 0.8, "val": 0.1, "test": 0.1}
-
-
-def _q_train_split(spark, sf_dir):
-    """Deterministic train/val/test assignment (md5 of doc_id) —
-    map-side only; result = per-(split, lang) doc counts."""
-    from extract_cbd_shape_spark.operators.sampling import split_assign
-
-    d = _t(spark, sf_dir, "documents")
-    return (
-        split_assign(d, "doc_id", _SPLIT_WEIGHTS)
-        .groupBy("split", "lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-
-
-def _q_stratified_sample(spark, sf_dir):
-    """Exactly 5 docs per language, chosen by md5(doc_id) order —
-    reproducible across partitionings and cluster sizes."""
-    from extract_cbd_shape_spark.operators.sampling import stratified_sample
-
-    d = _t(spark, sf_dir, "documents")
-    return stratified_sample(d, ["lang"], 5, "doc_id").select("doc_id", "lang")
-
-
-def _q_domain_quota(spark, sf_dir):
-    """Per-site quota (cap docs per registered host) — composition of
-    url_host (functions/urls.py) as the stratum with
-    stratified_sample's deterministic md5-order top-k. The standard
-    head-domain guard in web-corpus curation: one shuffle on the host
-    key, rank filter pushed map-side (WindowGroupLimit)."""
-    from extract_cbd_shape_spark.functions.urls import url_host
-    from extract_cbd_shape_spark.operators.sampling import stratified_sample
-
-    d = _t(spark, sf_dir, "documents")
-    # deterministic crawl-url synthesis: ~10 docs per host at any sf
-    pages = d.select(
-        "doc_id",
-        F.concat(
-            F.lit("http://WWW."), F.col("source"), F.lit(".example.com/d/"),
-            F.col("doc_id").cast("string"),
-        ).alias("url"),
-    ).withColumn("host", url_host(F.col("url")))
-    return stratified_sample(pages, ["host"], 4, "doc_id").select(
-        "doc_id", "host"
-    )
-
-
-def _pii_corpus(spark, sf_dir):
-    """documents with deterministic PII appended (mirrored in SQL):
-    mod-4 on doc_id picks an email / phone / IPv4 / all-three suffix."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    email = F.concat(F.lit(" user"), F.col("doc_id").cast("string"),
-                     F.lit("@example.com"))
-    phone = F.concat(
-        F.lit(" +1 555-"),
-        F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"))
-    ip = F.concat(F.lit(" 10.0."), (F.col("doc_id") % 256).cast("string"),
-                  F.lit(".7"))
-    m = F.col("doc_id") % 4
-    extra = (
-        F.when(m == 0, email).when(m == 1, phone).when(m == 2, ip)
-        .otherwise(F.concat(email, phone, ip))
-    )
-    return d.select("doc_id", F.concat(F.col("text"), extra).alias("text"))
-
-
-def _q_pii_redact(spark, sf_dir):
-    """PII counts + md5 of the redacted text (map-side only)."""
-    out = redact_documents(_pii_corpus(spark, sf_dir))
-    return out.select(
-        "doc_id", "n_email", "n_ipv4", "n_phone",
-        F.md5(F.col("clean_text")).alias("clean_md5"),
-    )
-
-
-def _q_pack_sequences(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    wt = d.select("doc_id", F.size(tokens(F.col("text"))).alias("n_tokens"))
-    return pack_sequences(pack_offsets(wt, n_buckets=32), seq_len=512)
-
-
 def _q_entity_link(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     toks = (
@@ -841,14 +751,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "top_orders_per_customer": _q_top_orders_per_customer,
         "events_hourly": _q_events_hourly,
         "events_sessions": _q_events_sessions,
-        # -- curation: text/url/sampling ----------------------------------
+        # -- curation: text/url -------------------------------------------
         "url_canonical_dedup": _q_url_canonical_dedup,
         "text_metrics": _q_text_metrics,
-        "train_split": _q_train_split,
-        "stratified_sample": _q_stratified_sample,
-        "domain_quota": _q_domain_quota,
-        "pii_redact": _q_pii_redact,
-        "pack_sequences": _q_pack_sequences,
         # -- linking, canonicalization -------------------------------------
         "entity_link": _q_entity_link,
         "connected_components": _q_connected_components,
@@ -931,49 +836,6 @@ def _lang_scores_sql():
             f"len(list_filter(t, x -> list_contains([{arr}], x))) AS s_{lang}"
         )
     return ", ".join(out)
-
-
-# PII corpus: same mod-4 suffix injection as _pii_corpus().
-_PII_CORPUS_CTE = """
-c AS (SELECT doc_id, text || CASE
-    WHEN doc_id % 4 = 0 THEN ' user' || doc_id || '@example.com'
-    WHEN doc_id % 4 = 1
-        THEN ' +1 555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-    WHEN doc_id % 4 = 2 THEN ' 10.0.' || (doc_id % 256) || '.7'
-    ELSE ' user' || doc_id || '@example.com'
-         || ' +1 555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-         || ' 10.0.' || (doc_id % 256) || '.7'
-    END AS text FROM documents)
-"""
-
-
-def _pii_oracle_sql() -> str:
-    """Counts + redacted-text md5 from the shared PII_PATTERNS (the
-    patterns live in one place so the mirror can't drift)."""
-    counts = ",\n       ".join(
-        f"len(regexp_extract_all(text, '{pat}')) AS n_{kind}"
-        for kind, pat, _ in PII_PATTERNS
-    )
-    redacted = "text"
-    for _, pat, tok in PII_PATTERNS:
-        redacted = f"regexp_replace({redacted}, '{pat}', '{tok}', 'g')"
-    return (
-        f"WITH {_PII_CORPUS_CTE.strip()}\n"
-        f"SELECT doc_id,\n       {counts},\n"
-        f"       md5({redacted}) AS clean_md5\nFROM c"
-    )
-
-
-def _split_case_sql() -> str:
-    """SQL CASE mirroring split_assign's boundaries exactly (both sides
-    compute bounds with operators.sampling.split_bounds)."""
-    from extract_cbd_shape_spark.operators.sampling import split_bounds
-
-    bounds = split_bounds(_SPLIT_WEIGHTS)
-    whens = " ".join(
-        f"WHEN b < {bound} THEN '{name}'" for name, bound in bounds[:-1]
-    )
-    return f"CASE {whens} ELSE '{bounds[-1][0]}' END"
 
 
 # Expected quads of the KBO shape over kgtriples.kbo_members: every
@@ -1100,47 +962,6 @@ SELECT b.doc_id,
              / greatest(len(b.t), 1), 4) AS stopword_ratio,
        {_LANG_CASE} AS predicted_lang
 FROM b JOIN s USING (doc_id)
-""",
-        "pii_redact": _pii_oracle_sql(),
-        "pack_sequences": f"""
-WITH w AS (SELECT doc_id, len({_TOKS_SQL}) AS n FROM documents),
-o AS (SELECT doc_id, n,
-        CAST(SUM(n) OVER (ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-            AS tok_end
-      FROM w)
-SELECT doc_id, n AS weight, tok_end - n AS tok_start, tok_end,
-       CASE WHEN n > 0 THEN (tok_end - n) // 512 END AS first_seq,
-       CASE WHEN n > 0 THEN (tok_end - 1) // 512 END AS last_seq,
-       CASE WHEN n > 0
-            THEN (tok_end - 1) // 512 - (tok_end - n) // 512 + 1
-            ELSE 0 END AS n_seqs
-FROM o
-""",
-        "train_split": f"""
-WITH b AS (SELECT lang,
-    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS b
-    FROM documents)
-SELECT {_split_case_sql()} AS split, lang, count(*) AS n_docs
-FROM b GROUP BY 1, 2
-""",
-        "stratified_sample": """
-SELECT doc_id, lang FROM (
-  SELECT doc_id, lang, row_number() OVER (
-      PARTITION BY lang
-      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-  FROM documents) WHERE rk <= 5
-""",
-        "domain_quota": """
-WITH pages AS (
-  SELECT doc_id,
-         lower('www.' || source || '.example.com') AS host
-  FROM documents)
-SELECT doc_id, host FROM (
-  SELECT doc_id, host, row_number() OVER (
-      PARTITION BY host
-      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-  FROM pages) WHERE rk <= 4
 """,
         "entity_link": f"""
 WITH toks AS (SELECT DISTINCT doc_id, unnest({_TOKS_SQL}) AS mention

@@ -17,9 +17,9 @@ Plus the web-scale KG-construction stages the reference doesn't have:
 vectorized page->triples extraction, store-local bulk extraction
 (bucket by page once, then one sink-fused task per bucket file), entity
 linking, connected-components canonicalization, and snapshot
-materialization. Corpus operators outside the pipeline (sampling, PII
-redaction, packing, span dedup, PageRank) sit beside them in
-`operators/`.
+materialization. `functions/` holds the JVM-side text and URL column
+helpers those stages share. `operators/pii.py` (PII redaction) is the
+one corpus operator left outside the pipeline.
 """
 
 __version__ = "0.1.0"

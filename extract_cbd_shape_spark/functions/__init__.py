@@ -1,6 +1,5 @@
 from extract_cbd_shape_spark.functions.text import (  # noqa: F401
     tokens,
-    shingles,
     quality_columns,
     lang_id_column,
 )

@@ -27,26 +27,6 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), TOKEN_SPLIT_RE), lambda x: x != "")
 
 
-def shingles(toks: Column, k: int = 3) -> Column:
-    """k-token shingles joined by single spaces (order-preserving)."""
-    idx = F.sequence(F.lit(1), F.size(toks) - (k - 1))
-    sh = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + j) for j in range(k)]
-        ),
-    )
-    # sequence(1, n) descends when n < 1 — guard short texts explicitly.
-    return F.when(F.size(toks) >= k, sh).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def stop_hits(toks: Column, words) -> Column:
-    arr = ", ".join(f"'{w}'" for w in words)
-    return F.size(F.filter(toks, lambda x: x.isin(*words)))
-
-
 def _hits(toks: Column, ws) -> Column:
     # NB: bind ws via a factory — a 2-arg lambda would be read by
     # F.filter as (element, index).

@@ -40,7 +40,6 @@ def shacl_report(
     shape: Optional[Term] = None,
     graphs_to_ignore: Optional[Sequence[Term]] = None,
     bulk: bool = False,
-    store_partitioned: bool = False,
 ) -> DataFrame:
     """Run bulk extraction and return one report row per member:
 
@@ -66,7 +65,7 @@ def shacl_report(
         )
     _, flags = extractor.extract(
         triples, mdf, shape=shape, graphs_to_ignore=graphs_to_ignore,
-        bulk=bulk, store_partitioned=store_partitioned,
+        bulk=bulk,
     )
     agg = flags.groupBy("member_id").agg(
         F.array_join(

@@ -297,24 +297,26 @@ class KGConstructionPipeline:
         raw_tbl = self._table("raw_triples")
         m = latest_manifest(raw_tbl)
         if not (epoch is not None and m and m.get("epoch") == epoch):
-            m = materialize_table(
-                self._parse_pages(new_pages), raw_tbl,
-                "extract_pages", bucket_by="page_url",
-                giant_threshold=GIANT_PAGE_QUADS, append=True,
-                manifest_extra=(
-                    {"epoch": epoch} if epoch is not None else None
-                ),
-            )
+            with self._timed("parse"):
+                m = materialize_table(
+                    self._parse_pages(new_pages), raw_tbl,
+                    "extract_pages", bucket_by="page_url",
+                    giant_threshold=GIANT_PAGE_QUADS, append=True,
+                    manifest_extra=(
+                        {"epoch": epoch} if epoch is not None else None
+                    ),
+                )
         manifests["raw_triples"] = m
         delta_dir = os.path.join(raw_tbl, _data_dirs(m)[-1])
         me = latest_manifest(self._table("entity_triples"))
         if epoch is not None and me and me.get("epoch") == epoch:
             manifests["entity_triples"] = me
         else:
-            manifests["entity_triples"] = self._extract_entities_sink(
-                [delta_dir], m["delta_giant_stores"],
-                inherit=True, epoch=epoch,
-            )
+            with self._timed("extract"):
+                manifests["entity_triples"] = self._extract_entities_sink(
+                    [delta_dir], m["delta_giant_stores"],
+                    inherit=True, epoch=epoch,
+                )
         self._graph_stages(manifests, resume=False)
         return manifests
 
@@ -325,61 +327,59 @@ class KGConstructionPipeline:
         entity_triples = read_latest_snapshot(spark, self._table("entity_triples"))
 
         # Stage 3 — entity linking (salted broadcast dictionary join).
-        _t0 = time.time()
         if not (resume and self._stage_done("links", "entity_linking")):
-            mentions = (
-                entity_triples.filter(F.col("predicate") == "kg:mentions")
-                .select(F.col("entity").alias("doc_id"),
-                        F.col("object_value").alias("mention"))
-                .distinct()
-            )
-            dictionary = (
-                mentions.groupBy("mention")
-                .agg(F.count("*").alias("df"))
-                .orderBy(F.col("df").desc(), F.col("mention"))
-                .limit(self.dict_size)
-                .select(
-                    F.col("mention").alias("surface_form"),
-                    F.concat(F.lit("dict:"), F.col("mention")).alias("entity_id"),
+            with self._timed("link"):
+                mentions = (
+                    entity_triples.filter(F.col("predicate") == "kg:mentions")
+                    .select(F.col("entity").alias("doc_id"),
+                            F.col("object_value").alias("mention"))
+                    .distinct()
                 )
-            )
-            links = link_mentions(mentions, dictionary).select(
-                F.col("doc_id").alias("subject"),
-                F.lit("kg:linkedTo").alias("predicate"),
-                F.col("entity_id").alias("object_value"),
-            )
-            manifests["links"] = materialize_table(
-                links, self._table("links"), "entity_linking"
-            )
-            self.stage_seconds["link"] = round(time.time() - _t0, 3)
+                dictionary = (
+                    mentions.groupBy("mention")
+                    .agg(F.count("*").alias("df"))
+                    .orderBy(F.col("df").desc(), F.col("mention"))
+                    .limit(self.dict_size)
+                    .select(
+                        F.col("mention").alias("surface_form"),
+                        F.concat(F.lit("dict:"), F.col("mention")).alias("entity_id"),
+                    )
+                )
+                links = link_mentions(mentions, dictionary).select(
+                    F.col("doc_id").alias("subject"),
+                    F.lit("kg:linkedTo").alias("predicate"),
+                    F.col("entity_id").alias("object_value"),
+                )
+                manifests["links"] = materialize_table(
+                    links, self._table("links"), "entity_linking"
+                )
         links = read_latest_snapshot(spark, self._table("links"))
 
         # Stage 4 — canonicalization: connected components over link edges.
-        _t0 = time.time()
         if not (resume and self._stage_done("entities", "canonicalize")):
-            edges = links.select(
-                F.col("subject").alias("src"), F.col("object_value").alias("dst")
-            )
-            # The link graph is orders of magnitude smaller than the
-            # corpus; its row count is already in the snapshot manifest
-            # (zero probe jobs). Small graphs take the driver-side
-            # union-find — the distributed loop's per-iteration fixed
-            # costs (joins + checkpoints + probes) dominate there —
-            # while big graphs keep the large-star/small-star loop.
-            n_links = (latest_manifest(self._table("links")) or {}).get("rows")
-            if n_links is not None and n_links <= DRIVER_CC_MAX_EDGES:
-                comps = connected_components_driver(edges)
-            else:
-                comps = connected_components(edges)
-            entities = comps.select(
-                F.col("node").alias("entity_iri"),
-                F.xxhash64("component").alias("canonical_id"),
-            )
-            manifests["entities"] = materialize_table(
-                entities, self._table("entities"), "canonicalize",
-                bucket_by="entity_iri",
-            )
-            self.stage_seconds["canonicalize"] = round(time.time() - _t0, 3)
+            with self._timed("canonicalize"):
+                edges = links.select(
+                    F.col("subject").alias("src"), F.col("object_value").alias("dst")
+                )
+                # The link graph is orders of magnitude smaller than the
+                # corpus; its row count is already in the snapshot manifest
+                # (zero probe jobs). Small graphs take the driver-side
+                # union-find — the distributed loop's per-iteration fixed
+                # costs (joins + checkpoints + probes) dominate there —
+                # while big graphs keep the large-star/small-star loop.
+                n_links = (latest_manifest(self._table("links")) or {}).get("rows")
+                if n_links is not None and n_links <= DRIVER_CC_MAX_EDGES:
+                    comps = connected_components_driver(edges)
+                else:
+                    comps = connected_components(edges)
+                entities = comps.select(
+                    F.col("node").alias("entity_iri"),
+                    F.xxhash64("component").alias("canonical_id"),
+                )
+                manifests["entities"] = materialize_table(
+                    entities, self._table("entities"), "canonicalize",
+                    bucket_by="entity_iri",
+                )
 
         # Stage 4b — optional CONSTRUCT enrichment: each rule derives
         # new triples from the extracted graph (map-side template
@@ -389,52 +389,50 @@ class KGConstructionPipeline:
         # union can be rebuilt without re-running the rules.
         derived = None
         if self.construct_rules:
-            _t0 = time.time()
             if not (resume and self._stage_done("derived_triples",
                                                 "construct_enrich")):
-                from extract_cbd_shape_spark.operators.bgp import bgp_construct
+                with self._timed("enrich"):
+                    from extract_cbd_shape_spark.operators.bgp import bgp_construct
 
-                parts = [bgp_construct(entity_triples, **rule)
-                         for rule in self.construct_rules]
-                der = parts[0]
-                for p in parts[1:]:
-                    der = der.unionByName(p)
-                # Flattening to the kind-less 3-column layout must keep
-                # the value-space convention the BGP module documents
-                # ('_:' prefix = blank): template-introduced blanks
-                # carry bare labels + a kind column — re-prefix them
-                # here or they'd be indistinguishable from IRIs
-                # downstream (ADVICE r4).
-                def _flat(value_col: str, kind_col: str):
-                    return F.when(
-                        F.col(kind_col) == F.lit(int(BLANK)),
-                        F.concat(F.lit("_:"), F.col(value_col)),
-                    ).otherwise(F.col(value_col)).alias(value_col)
+                    parts = [bgp_construct(entity_triples, **rule)
+                             for rule in self.construct_rules]
+                    der = parts[0]
+                    for p in parts[1:]:
+                        der = der.unionByName(p)
+                    # Flattening to the kind-less 3-column layout must keep
+                    # the value-space convention the BGP module documents
+                    # ('_:' prefix = blank): template-introduced blanks
+                    # carry bare labels + a kind column — re-prefix them
+                    # here or they'd be indistinguishable from IRIs
+                    # downstream (ADVICE r4).
+                    def _flat(value_col: str, kind_col: str):
+                        return F.when(
+                            F.col(kind_col) == F.lit(int(BLANK)),
+                            F.concat(F.lit("_:"), F.col(value_col)),
+                        ).otherwise(F.col(value_col)).alias(value_col)
 
-                manifests["derived_triples"] = materialize_table(
-                    der.select(
-                        _flat("subject", "subject_kind"),
-                        F.col("predicate"),
-                        _flat("object_value", "object_kind"),
-                    ).dropDuplicates(),
-                    self._table("derived_triples"), "construct_enrich",
-                )
-                self.stage_seconds["enrich"] = round(time.time() - _t0, 3)
+                    manifests["derived_triples"] = materialize_table(
+                        der.select(
+                            _flat("subject", "subject_kind"),
+                            F.col("predicate"),
+                            _flat("object_value", "object_kind"),
+                        ).dropDuplicates(),
+                        self._table("derived_triples"), "construct_enrich",
+                    )
             derived = read_latest_snapshot(
                 spark, self._table("derived_triples"))
 
         # Stage 5 — final triples table = entity triples + link triples
         # (+ CONSTRUCT-derived triples), bucketed by subject for
         # co-located downstream joins.
-        _t0 = time.time()
         if not (resume and self._stage_done("triples", "materialize")):
-            final = entity_triples.select(
-                "subject", "predicate", "object_value"
-            ).unionByName(links.select("subject", "predicate", "object_value"))
-            if derived is not None:
-                final = final.unionByName(
-                    derived.select("subject", "predicate", "object_value"))
-            manifests["triples"] = materialize_table(
-                final, self._table("triples"), "materialize"
-            )
-            self.stage_seconds["materialize"] = round(time.time() - _t0, 3)
+            with self._timed("materialize"):
+                final = entity_triples.select(
+                    "subject", "predicate", "object_value"
+                ).unionByName(links.select("subject", "predicate", "object_value"))
+                if derived is not None:
+                    final = final.unionByName(
+                        derived.select("subject", "predicate", "object_value"))
+                manifests["triples"] = materialize_table(
+                    final, self._table("triples"), "materialize"
+                )

@@ -23,6 +23,9 @@ from extract_cbd_shape_spark.sources.pages import (
 from conftest import max_partition_bytes
 
 SF = "/root/testdata/sf0.001"
+# Stages a run without CONSTRUCT rules times (KGConstructionPipeline.
+# stage_seconds); only a skipped stage may be missing.
+STAGES = {"parse", "extract", "link", "canonicalize", "materialize"}
 
 
 def test_page_text_byte_identical(spark):
@@ -57,6 +60,7 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     pages = synth_pages(spark, SF).limit(50)
     pipe = KGConstructionPipeline(spark, wh)
     manifests = pipe.run(pages, resume=False)
+    assert set(pipe.stage_seconds) == STAGES
     assert manifests["raw_triples"]["rows"] > 0
     assert manifests["entity_triples"]["rows"] > 0
     assert manifests["links"]["rows"] > 0
@@ -198,6 +202,7 @@ def test_pipeline_incremental_matches_full(spark, tmp_path):
     pipe = KGConstructionPipeline(spark, wh_inc)
     m_a = pipe.run(pages_a, resume=False)
     m_inc = pipe.run_incremental(pages_b)
+    assert set(pipe.stage_seconds) == STAGES
 
     wh_full = str(tmp_path / "wh_full")
     m_full = KGConstructionPipeline(spark, wh_full).run(

@@ -23,9 +23,15 @@ by the shape rules of SURVEY.md §2:
   (O7-O11, paths parsed as O19): a sequence chains its steps, an
   inverse step follows a quad from object to subject, ``p*`` walks
   ``p`` breadth-first from the focus (zero hops admit the focus) and
-  does not expand a node it has already reached. In an open shape a
-  path already witnessed by the CBD is not matched again, and ``p*``
-  always counts as witnessed (zero hops suffice).
+  does not expand a node it has already reached. ``p+`` walks the
+  same way but admits only nodes reached in one or more hops (the
+  focus only when a cycle leads back to it); ``p?`` admits the focus
+  and the nodes one hop away, and stops. An alternative takes the
+  union of its branches. In an open shape a path already witnessed by
+  the CBD is not matched again, and ``p*`` always counts as witnessed
+  (zero hops suffice).
+* Paths in ``sh:xone`` / ``sh:or`` branches, at any nesting depth, are
+  matched unconditionally: extraction is not validation (O16).
 * An ``sh:node`` link extracts every target of its path under the
   linked shape, whether or not the path's quads were added; each node
   is extracted once per member (O13).
@@ -60,6 +66,9 @@ NAME, ADDR, KNOWS, STREET, GEO, LAT, BACK, SELF, NEXT = _ex(
 P, Q, R, S, V, W, OWN, LEAK = _ex("p", "q", "r", "s", "v", "w", "own", "leak")
 F, NX, NS, T, U, N1, N2, N3, OUT, LINK = _ex(
     "F", "X", "S", "T", "U", "N1", "N2", "N3", "Out", "link")
+ROOT, C1, C2, D1, D2, Q1, END_P, END_N, END_Q = _ex(
+    "Root", "C1", "C2", "D1", "D2", "Q1", "endP", "endN", "endQ")
+CH, L, PA, PB, PC = _ex("Ch", "L", "a", "b", "c")
 
 SHAPES_PREFIXES = """
 @prefix sh: <http://www.w3.org/ns/shacl#> .
@@ -181,6 +190,65 @@ ex:Item a sh:NodeShape .
                  (N3, NEXT, N1, None), (N3, NAME, "N3", None),
                  (N3, KNOWS, OUT, None)},
         }),
+    "multipath_bounds": dict(
+        members=[ROOT], bulk=False, ignore=(),
+        shapes=SHAPES_PREFIXES + """
+ex:Bounds a sh:NodeShape ;
+    sh:closed true ;
+    sh:property [ sh:path ( [ sh:oneOrMorePath ex:p ] ex:endP ) ] ,
+                [ sh:path ( [ sh:oneOrMorePath ex:next ] ex:endN ) ] ,
+                [ sh:path ( [ sh:zeroOrOnePath ex:q ] ex:endQ ) ] ,
+                [ sh:path [ sh:alternativePath ( ex:r ex:s ) ] ] .
+""",
+        shape=EX + "Bounds",
+        expected={
+            # ex:Bounds is closed: no CBD of ex:Root, so ex:v is out.
+            # ex:p+: hop 1 reaches ex:C1, hop 2 ex:C2, hop 3 ex:Root
+            # again (already reached: admitted, since it took >= 1 hop,
+            # but not expanded). All three p quads are traversed and
+            # ex:endP is matched from ex:C1, ex:C2 and ex:Root.
+            # ex:next+: ex:D1, then ex:D2, then nothing. ex:Root is
+            # never reached in >= 1 hop, so its ex:endN quad is out.
+            # ex:q?: ex:Root (zero hops) and ex:Q1 (one hop), then it
+            # stops: ex:Q1 ex:q ex:Q2 is not traversed and ex:Q2's
+            # ex:endQ is out. ex:r | ex:s: the union, one quad each.
+            ROOT: {(ROOT, P, C1, None), (C1, P, C2, None),
+                   (C2, P, ROOT, None),
+                   (C1, END_P, "c1", None), (C2, END_P, "c2", None),
+                   (ROOT, END_P, "root-p", None),
+                   (ROOT, NEXT, D1, None), (D1, NEXT, D2, None),
+                   (D1, END_N, "d1", None), (D2, END_N, "d2", None),
+                   (ROOT, Q, Q1, None),
+                   (ROOT, END_Q, "root-q", None), (Q1, END_Q, "q1", None),
+                   (ROOT, R, "r", None), (ROOT, S, "s", None)},
+        }),
+    "xone_or_branches": dict(
+        members=[CH], bulk=False, ignore=(),
+        shapes=SHAPES_PREFIXES + """
+ex:Choice a sh:NodeShape ;
+    sh:closed true ;
+    sh:xone ( [ sh:path ex:a ]
+              [ sh:or ( [ sh:path ex:b ] [ sh:path ex:c ] ) ] ) ;
+    sh:or ( [ sh:path ex:d ]
+            [ sh:property [ sh:path ex:link ; sh:node ex:Open ] ] ) .
+ex:Open a sh:NodeShape .
+""",
+        shape=EX + "Choice",
+        expected={
+            # Every path in an xone/or branch is matched, at any
+            # nesting depth, whether or not the branch is satisfied:
+            # ex:Ch has quads for both xone branches (it fails the
+            # xone), yet ex:a, ex:b and ex:c each give their quad.
+            # ex:d has no quad. The or branch's ex:link gives its quad
+            # and its target ex:L is extracted under the open ex:Open:
+            # CBD(ex:L) (2) plus the blank closure _:l1 (1). ex:Choice
+            # is closed, so ex:Ch ex:name is out; ex:Other is never
+            # reached.
+            CH: {(CH, PA, "a", None), (CH, PB, "b", None),
+                 (CH, PC, "c", None), (CH, LINK, L, None),
+                 (L, NAME, "L", None), (L, ADDR, "l1", None),
+                 ("l1", STREET, "Main", None)},
+        }),
 }
 
 
@@ -243,14 +311,22 @@ def test_store_local_sink(spark, sink_extract, name, vectorize):
     assert got == _want(case)
 
 
-@pytest.mark.parametrize("name", sorted(CASES))
-def test_global_engine(spark, name):
+# Every case under both join regimes of the global engine: the default
+# (these few members run in latency mode) and broadcast_members_max=0,
+# which pins scale mode. Default-regime ids are the bare case names.
+@pytest.mark.parametrize("name,regime", [
+    *[pytest.param(n, {}, id=n) for n in sorted(CASES)],
+    *[pytest.param(n, {"broadcast_members_max": 0}, id=f"{n}-scale")
+      for n in sorted(CASES)],
+])
+def test_global_engine(spark, name, regime):
     from extract_cbd_shape_spark.sources import quads_to_df
 
     case = CASES[name]
     triples = quads_to_df(spark, _load(case.get("fixture", name)))
     shapes, shape = _shapes(case)
-    res, _ = BulkCBDShapeExtractor(spark, shapes_graph=shapes).extract(
+    res, _ = BulkCBDShapeExtractor(
+        spark, shapes_graph=shapes, **regime).extract(
         triples, [Term(IRI, m) for m in case["members"]], shape=shape,
         bulk=case["bulk"],
         graphs_to_ignore=[Term(IRI, g) for g in case["ignore"]])

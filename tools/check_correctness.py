@@ -62,8 +62,18 @@ def main():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
+    # A half-deleted pair fails: a query without its oracle would
+    # otherwise pass unchecked, and an oracle without its query too.
+    for name in sorted(set(oracles) - set(qs)):
+        if not ONLY or name in ONLY:
+            failures.append(name)
+            print(f"FAIL {name}: oracle has no query")
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
+            continue
+        if name not in oracles:
+            failures.append(name)
+            print(f"FAIL {name}: query has no oracle")
             continue
         t0 = time.time()
         try:
@@ -73,10 +83,6 @@ def main():
         except Exception as e:
             failures.append(name)
             print(f"FAIL {name}: SPARK ERROR {type(e).__name__}: {str(e)[:400]}")
-            continue
-        if name not in oracles:
-            print(f"SKIP {name}: no oracle ({len(srows)} rows, "
-                  f"{time.time()-t0:.1f}s)")
             continue
         try:
             res = con.execute(oracles[name])

@@ -135,24 +135,6 @@ def main() -> int:
     else:
         print("OK  bgp_construct: JVM-only projection + hash-agg distinct")
 
-    # Verbatim-span dedup: documents scan pruned to (doc_id, text),
-    # gram df a two-phase hash aggregate, no Python.
-    from extract_cbd_shape_spark.operators.spans import repeated_spans
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = plan_of(repeated_spans(docs, k=8, min_df=2))
-    probs = []
-    if not re.search(r"ReadSchema: struct<doc_id:bigint,text:string>", plan):
-        probs.append("documents scan not pruned")
-    if re.search(r"BatchEvalPython", plan):
-        probs.append("row-Python in span path")
-    if not re.search(r"partial_count", plan):
-        probs.append("gram df missing map-side combine")
-    if probs:
-        failures.append("repeated_spans")
-        print(f"FAIL repeated_spans: {', '.join(probs)}")
-    else:
-        print("OK  repeated_spans: pruned scan, combined df agg, JVM-only")
-
     # Store-local sink: one task per bucket file over a JVM source. No
     # Exchange, no Python-RDD scan, and exactly one Python operator, the
     # kernel's mapInArrow (a Python-RDD manifest would add a second
