@@ -36,12 +36,7 @@ from extract_cbd_shape_spark.operators.kgtriples import (
     with_store_key,
 )
 from extract_cbd_shape_spark.operators.linking import link_mentions
-from extract_cbd_shape_spark.functions.text import (
-    LANG_STOPWORDS,
-    lang_id_column,
-    quality_columns,
-    tokens,
-)
+from extract_cbd_shape_spark.functions.text import tokens
 from extract_cbd_shape_spark.rdf import parse_trig
 from extract_cbd_shape_spark.shapes import ShapesGraph
 from extract_cbd_shape_spark.sources.pages import (
@@ -420,23 +415,6 @@ def _q_url_canonical_dedup(spark, sf_dir):
     )
 
 
-def _q_text_metrics(spark, sf_dir):
-    """The text-analysis functions over one pass of `documents`: token
-    counting, n-gram-stopword language ID and quality ratios (all
-    map-only column expressions)."""
-    d = _t(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    cols = quality_columns(F.col("text"), toks)
-    return d.select(
-        "doc_id",
-        cols["n_chars"].alias("n_chars"),
-        cols["n_tokens"].alias("n_tokens"),
-        cols["punct_ratio"].alias("punct_ratio"),
-        cols["stopword_ratio"].alias("stopword_ratio"),
-        lang_id_column(toks).alias("predicted_lang"),
-    )
-
-
 def _q_entity_link(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     toks = (
@@ -533,34 +511,6 @@ def _q_bgp_optional_filter(spark, sf_dir):
                   ("?m", "kbo:status", "?st7")]],
         filters=["pc < '5000'"],
         select=["?m", "?name", "?pc", "?st7"])
-
-
-def _q_rdfs_entail(spark, sf_dir):
-    """RDFS forward-chaining materialization over the KBO graph:
-    subclass/subproperty/range rules applied as broadcast schema joins
-    (one corpus scan per rule family, one final distinct —
-    operators/entailment.py). 18 triples per member: 14 data + label
-    (rdfs7) + Organization/Agent (rdfs9/11) + typed address (rdfs3)."""
-    from extract_cbd_shape_spark.operators.entailment import rdfs_entail
-
-    triples, _ = kbo_members(spark, sf_dir)
-    onto = spark.createDataFrame([
-        ("kbo:Enterprise",
-         "http://www.w3.org/2000/01/rdf-schema#subClassOf",
-         "kbo:Organization"),
-        ("kbo:Organization",
-         "http://www.w3.org/2000/01/rdf-schema#subClassOf", "kbo:Agent"),
-        ("kbo:legalName",
-         "http://www.w3.org/2000/01/rdf-schema#subPropertyOf",
-         "rdfs:label"),
-        ("kbo:registeredAddress",
-         "http://www.w3.org/2000/01/rdf-schema#range", "kbo:Address"),
-    ], "subject string, predicate string, object_value string")
-    out = rdfs_entail(triples, onto, type_predicate="rdf:type")
-    return out.select(
-        "subject", F.col("subject_kind").cast("int").alias("subject_kind"),
-        "predicate", "object_value",
-        F.col("object_kind").cast("int").alias("object_kind"))
 
 
 def _q_pages_triples(spark, sf_dir):
@@ -751,9 +701,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "top_orders_per_customer": _q_top_orders_per_customer,
         "events_hourly": _q_events_hourly,
         "events_sessions": _q_events_sessions,
-        # -- curation: text/url -------------------------------------------
+        # -- curation: url -------------------------------------------------
         "url_canonical_dedup": _q_url_canonical_dedup,
-        "text_metrics": _q_text_metrics,
         # -- linking, canonicalization -------------------------------------
         "entity_link": _q_entity_link,
         "connected_components": _q_connected_components,
@@ -762,11 +711,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pages_text_identity": _q_pages_text_identity,
         "nquads_roundtrip": _q_nquads_roundtrip,
         "turtle_roundtrip": _q_turtle_roundtrip,
-        # -- SPARQL-side consumption + entailment --------------------------
+        # -- SPARQL-side consumption ---------------------------------------
         "bgp_union_values_topk": _q_bgp_union_values_topk,
         "bgp_optional_filter": _q_bgp_optional_filter,
         "bgp_path": _q_bgp_path,
-        "rdfs_entail_kbo": _q_rdfs_entail,
         # -- extraction engines (heaviest pairs last) ----------------------
         "path_closure": _q_path_closure,
         "cbd_blank_closure": _q_cbd_blank_closure,
@@ -820,23 +768,6 @@ SELECT DISTINCT * FROM (
   JOIN triples t ON t.subject = 'n:'||c.c_nationkey
 )
 """
-
-_LANG_CASE = (
-    "CASE WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en' "
-    "WHEN s_es >= s_de AND s_es >= s_fr THEN 'es' "
-    "WHEN s_de >= s_fr THEN 'de' ELSE 'fr' END"
-)
-
-
-def _lang_scores_sql():
-    out = []
-    for lang, ws in LANG_STOPWORDS.items():
-        arr = ", ".join(f"'{w}'" for w in ws)
-        out.append(
-            f"len(list_filter(t, x -> list_contains([{arr}], x))) AS s_{lang}"
-        )
-    return ", ".join(out)
-
 
 # Expected quads of the KBO shape over kgtriples.kbo_members: every
 # member's own quads plus its blank address's two quads.
@@ -949,20 +880,6 @@ kept AS (SELECT canonical_url, arg_max(url, warc_ts) AS kept_url
 SELECT c.doc_id, c.canonical_url, k.kept_url
 FROM canon c JOIN kept k USING (canonical_url)
 """,
-        "text_metrics": f"""
-WITH b AS (SELECT doc_id, text, {_TOKS_SQL} AS t FROM documents),
-s AS (SELECT doc_id, {_lang_scores_sql()}
-      FROM (SELECT doc_id, {_TOKS_SQL} AS t FROM documents))
-SELECT b.doc_id,
-       length(b.text) AS n_chars,
-       len(b.t) AS n_tokens,
-       round(length(regexp_replace(b.text, '[^.!?,;:]', '', 'g')) * 1.0
-             / greatest(length(b.text), 1), 4) AS punct_ratio,
-       round(len(list_filter(b.t, x -> list_contains(['the','and','of','to','in'], x))) * 1.0
-             / greatest(len(b.t), 1), 4) AS stopword_ratio,
-       {_LANG_CASE} AS predicted_lang
-FROM b JOIN s USING (doc_id)
-""",
         "entity_link": f"""
 WITH toks AS (SELECT DISTINCT doc_id, unnest({_TOKS_SQL}) AS mention
               FROM documents),
@@ -992,35 +909,6 @@ SELECT 'm:'||o_orderkey AS entity,
        (o_orderkey % 7 <> 0) AS conforms,
        CASE WHEN o_orderkey % 7 = 0 THEN '<kbo:status>' END AS missing
 FROM orders
-""",
-        "rdfs_entail_kbo": """
-WITH m AS (SELECT o_orderkey AS k FROM orders)
-SELECT * FROM (
-  SELECT 'm:'||k AS subject, 0 AS subject_kind, 'rdf:type' AS predicate,
-         'kbo:legalEntity' AS object_value, 0 AS object_kind FROM m
-  UNION ALL SELECT 'm:'||k, 0, 'rdf:type', 'kbo:Enterprise', 0 FROM m
-  UNION ALL SELECT 'm:'||k, 0, 'kbo:isVersionOf', 'v:'||k, 0 FROM m
-  UNION ALL SELECT 'm:'||k, 0, 'kbo:companyStatus',
-            'kbo:JuridicalSituation_000', 0 FROM m
-  UNION ALL SELECT 'm:'||k, 0, 'kbo:companyType',
-            'kbo:JuridicalForm_014', 0 FROM m
-  UNION ALL SELECT 'm:'||k, 0, 'kbo:legalName', 'Company '||k, 2 FROM m
-  UNION ALL SELECT 'm:'||k, 0, 'kbo:registeredAddress', 'a:'||k, 1 FROM m
-  UNION ALL SELECT 'm:'||k, 0, 'kbo:activity', 'act:'||(k % 50), 0 FROM m
-  UNION ALL SELECT 'm:'||k, 0, 'kbo:activity', 'act:'||((k + 7) % 50), 0 FROM m
-  UNION ALL SELECT 'm:'||k, 0, 'kbo:activity', 'act:'||((k + 13) % 50), 0 FROM m
-  UNION ALL SELECT 'm:'||k, 0, 'kbo:establishment', 'e:'||k, 0 FROM m
-  UNION ALL SELECT 'm:'||k, 0, 'kbo:status', 'kbo:Status_AC', 0 FROM m
-  UNION ALL SELECT 'a:'||k, 1, 'kbo:fullAddress', 'Street '||k, 2 FROM m
-  UNION ALL SELECT 'a:'||k, 1, 'kbo:postCode', (k % 9999)::VARCHAR, 2 FROM m
-  -- rdfs7: legalName subPropertyOf rdfs:label
-  UNION ALL SELECT 'm:'||k, 0, 'rdfs:label', 'Company '||k, 2 FROM m
-  -- rdfs9/rdfs11: Enterprise < Organization < Agent
-  UNION ALL SELECT 'm:'||k, 0, 'rdf:type', 'kbo:Organization', 0 FROM m
-  UNION ALL SELECT 'm:'||k, 0, 'rdf:type', 'kbo:Agent', 0 FROM m
-  -- rdfs3: registeredAddress range kbo:Address (blank object typed)
-  UNION ALL SELECT 'a:'||k, 1, 'rdf:type', 'kbo:Address', 0 FROM m
-)
 """,
         "bgp_union_values_topk": """
 WITH m AS (SELECT o_orderkey AS k FROM orders),

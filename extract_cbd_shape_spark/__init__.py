@@ -18,8 +18,7 @@ vectorized page->triples extraction, store-local bulk extraction
 (bucket by page once, then one sink-fused task per bucket file), entity
 linking, connected-components canonicalization, and snapshot
 materialization. `functions/` holds the JVM-side text and URL column
-helpers those stages share. `operators/pii.py` (PII redaction) is the
-one corpus operator left outside the pipeline.
+helpers those stages share.
 """
 
 __version__ = "0.1.0"

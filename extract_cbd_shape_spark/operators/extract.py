@@ -251,7 +251,6 @@ class BulkCBDShapeExtractor:
         shape: Optional[Term] = None,
         graphs_to_ignore: Optional[Sequence[Term]] = None,
         bulk: bool = False,
-        store_partitioned: bool = False,
         members_distinct: bool = False,
     ) -> Tuple[DataFrame, DataFrame]:
         """Extract every member; returns (results, flags).
@@ -285,13 +284,6 @@ class BulkCBDShapeExtractor:
         ``input_idx`` column is trusted to be DETERMINISTIC under
         recomputation (literals, hashes, row ids of a checkpointed
         frame — not a bare monotonically_increasing_id).
-
-        ``store_partitioned=True`` declares that ``triples`` is already
-        clustered by (subject, subject_kind) — a bucketed-table read or
-        an upstream repartition — so the engine skips its own full-store
-        repartition + checkpoint (at corpus scale that is a full copy of
-        the input before any work; see materialize_table(bucket_by=
-        "subject") for the matching writer layout).
         """
         if isinstance(members, DataFrame):
             sk = F.lit(_shape_key(shape)).cast("string")
@@ -333,7 +325,6 @@ class BulkCBDShapeExtractor:
             )
             run = _Run(self, triples, mdf, bulk,
                        global_ignores=tuple(graphs_to_ignore or ()),
-                       store_partitioned=store_partitioned,
                        initial_shape_keys=init_keys,
                        n_members=n_members)
             return run.execute()
@@ -356,9 +347,7 @@ class BulkCBDShapeExtractor:
 
         resolved: set = set()
         for _ in range(self.max_deref_rounds):
-            run = _Run(self, triples, norm, bulk,
-                       store_partitioned=store_partitioned,
-                       n_members=len(norm))
+            run = _Run(self, triples, norm, bulk, n_members=len(norm))
             results, flags = run.execute()
             if not self.resolver:
                 return results, flags
@@ -407,7 +396,6 @@ class _Run:
     def __init__(self, ex: BulkCBDShapeExtractor, triples: DataFrame,
                  members: Union[List[Member], DataFrame], bulk: bool,
                  global_ignores: Sequence[Term] = (),
-                 store_partitioned: bool = False,
                  initial_shape_keys: Optional[set] = None,
                  n_members: Optional[int] = None):
         self.ex = ex
@@ -494,11 +482,7 @@ class _Run:
         # SPOG index (lib/Utils.ts:10-23). Inverse hops use a second,
         # object-keyed copy (the POSG ordering), built lazily on first
         # use (_obj_triples).
-        if store_partitioned:
-            # Caller-provided clustering (bucketed table / upstream
-            # repartition): no full-store copy, joins reuse it as-is.
-            self.triples = t
-        elif self.latency:
+        if self.latency:
             # Latency mode: no subject repartition — frontier joins
             # broadcast their (counted-small) build side, so the store
             # needs no clustering at all; persist() caches the tagged

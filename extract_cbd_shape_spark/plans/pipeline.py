@@ -5,8 +5,10 @@ extraction -> entity linking -> canonicalization (connected
 components) -> materialized triples + entities tables.
 
 Every stage commits a snapshot (sinks/materialize.py) and the run is
-resumable: completed stages are detected by their snapshot manifest
-and skipped, so a crashed run restarts at the failed stage. Counters
+resumable: each derived stage stamps the snapshot numbers of its inputs
+into its manifest, a stage counts as done only when its latest manifest
+carries its name and the inputs' latest snapshots, and done stages are
+skipped, so a crashed run restarts at the failed stage. Counters
 come from observe() + manifest row counts; lineage = page_url column
 carried end-to-end + per-bucket partition stats in each manifest.
 """
@@ -95,16 +97,32 @@ class KGConstructionPipeline:
         self.stage_seconds[stage] = round(
             self.stage_seconds.get(stage, 0.0) + time.time() - t0, 3)
 
-    def _stage_done(self, name: str, stage: str) -> bool:
+    @staticmethod
+    def _inputs(manifests: Dict[str, dict], *names: str) -> dict:
+        """The input stamp of a derived stage: the snapshot number of
+        each table it reads, as recorded in its manifest."""
+        return {n: manifests[n]["snapshot"] for n in names}
+
+    def _stage_done(self, manifests: Dict[str, dict], name: str,
+                    stage: str, *inputs: str) -> bool:
+        """Whether the latest snapshot of ``name`` was committed by
+        ``stage`` from the input snapshots now in ``manifests`` (a
+        snapshot left by an earlier build over other inputs is not).
+        A done stage's manifest is added to ``manifests``."""
         m = latest_manifest(self._table(name))
         if m is None or m["stage"] != stage:
+            return False
+        if inputs and m.get("inputs") != self._inputs(manifests, *inputs):
             return False
         # raw_triples snapshots written before ingest-time skew
         # detection carry no giant_stores: re-parse them instead of
         # giving stage 2 a second routing path
-        return name != "raw_triples" or "giant_stores" in m
+        if name == "raw_triples" and "giant_stores" not in m:
+            return False
+        manifests[name] = m
+        return True
 
-    def _extract_entities_sink(self, src_dirs, giants,
+    def _extract_entities_sink(self, src_dirs, giants, inputs: dict,
                                inherit: bool = False,
                                epoch: Optional[int] = None) -> dict:
         """Stage-2 sink-fused extraction over store-complete raw_triples
@@ -115,6 +133,7 @@ class KGConstructionPipeline:
         (ingest-time manifest ``giant_stores``) are excluded in the
         kernel and served by the global fixpoint engine, landing in the
         same snapshot under deterministic ``giant-*`` names.
+        ``inputs`` is the raw_triples stamp (``_inputs``).
 
         ``inherit=True`` (incremental runs): ``src_dirs`` is only the
         DELTA raw_triples dir and the committed snapshot lists the
@@ -182,7 +201,7 @@ class KGConstructionPipeline:
             finally:
                 shutil.rmtree(tmp, ignore_errors=True)
                 ex.release()
-        extra = {"giant_stores": giants}
+        extra = {"giant_stores": giants, "inputs": inputs}
         if epoch is not None:
             extra["epoch"] = epoch
         if inherit:
@@ -219,7 +238,8 @@ class KGConstructionPipeline:
         self.stage_seconds = {}
 
         # Stage 1 — pages -> raw triples (Arrow-vectorized parse).
-        if not (resume and self._stage_done("raw_triples", "extract_pages")):
+        if not (resume and self._stage_done(manifests, "raw_triples",
+                                            "extract_pages")):
             resume = False  # every later stage reads this snapshot
             with self._timed("parse"):
                 # Store-complete by page: each page's triples land whole
@@ -248,20 +268,16 @@ class KGConstructionPipeline:
         # parts_for_bytes), so a small corpus runs one task per core.
         # Skew guard: giant pages were identified at ingest (manifest
         # giant_stores) and route to the global engine.
-        if not (resume and self._stage_done("entity_triples", "extract_entities")):
+        if not (resume and self._stage_done(manifests, "entity_triples",
+                                            "extract_entities", "raw_triples")):
             resume = False
             with self._timed("extract"):
                 manifests["entity_triples"] = self._extract_entities_sink(
                     latest_snapshot_paths(self._table("raw_triples")),
                     latest_manifest(self._table("raw_triples"))["giant_stores"],
+                    self._inputs(manifests, "raw_triples"),
                 )
         self._graph_stages(manifests, resume)
-
-        for name in ("raw_triples", "entity_triples", "links", "entities", "triples"):
-            if name not in manifests:
-                m = latest_manifest(self._table(name))
-                if m:
-                    manifests[name] = m
         return manifests
 
     def run_incremental(self, new_pages: DataFrame,
@@ -315,6 +331,7 @@ class KGConstructionPipeline:
             with self._timed("extract"):
                 manifests["entity_triples"] = self._extract_entities_sink(
                     [delta_dir], m["delta_giant_stores"],
+                    self._inputs(manifests, "raw_triples"),
                     inherit=True, epoch=epoch,
                 )
         self._graph_stages(manifests, resume=False)
@@ -322,12 +339,16 @@ class KGConstructionPipeline:
 
     def _graph_stages(self, manifests: Dict[str, dict], resume: bool) -> None:
         """Stages 3-5: linking -> canonicalization -> final tables,
-        over the latest (possibly appended) entity_triples snapshot."""
+        over the latest (possibly appended) entity_triples snapshot.
+        ``manifests`` holds the manifests of raw_triples and
+        entity_triples; a stage that re-runs re-runs every later one."""
         spark = self.spark
         entity_triples = read_latest_snapshot(spark, self._table("entity_triples"))
 
         # Stage 3 — entity linking (salted broadcast dictionary join).
-        if not (resume and self._stage_done("links", "entity_linking")):
+        if not (resume and self._stage_done(manifests, "links",
+                                            "entity_linking", "entity_triples")):
+            resume = False
             with self._timed("link"):
                 mentions = (
                     entity_triples.filter(F.col("predicate") == "kg:mentions")
@@ -351,12 +372,16 @@ class KGConstructionPipeline:
                     F.col("entity_id").alias("object_value"),
                 )
                 manifests["links"] = materialize_table(
-                    links, self._table("links"), "entity_linking"
+                    links, self._table("links"), "entity_linking",
+                    manifest_extra={"inputs": self._inputs(
+                        manifests, "entity_triples")},
                 )
         links = read_latest_snapshot(spark, self._table("links"))
 
         # Stage 4 — canonicalization: connected components over link edges.
-        if not (resume and self._stage_done("entities", "canonicalize")):
+        if not (resume and self._stage_done(manifests, "entities",
+                                            "canonicalize", "links")):
+            resume = False
             with self._timed("canonicalize"):
                 edges = links.select(
                     F.col("subject").alias("src"), F.col("object_value").alias("dst")
@@ -379,6 +404,7 @@ class KGConstructionPipeline:
                 manifests["entities"] = materialize_table(
                     entities, self._table("entities"), "canonicalize",
                     bucket_by="entity_iri",
+                    manifest_extra={"inputs": self._inputs(manifests, "links")},
                 )
 
         # Stage 4b — optional CONSTRUCT enrichment: each rule derives
@@ -388,9 +414,13 @@ class KGConstructionPipeline:
         # their OWN snapshot so the stage is resumable and the final
         # union can be rebuilt without re-running the rules.
         derived = None
+        final_inputs = ["entity_triples", "links"]
         if self.construct_rules:
-            if not (resume and self._stage_done("derived_triples",
-                                                "construct_enrich")):
+            final_inputs.append("derived_triples")
+            if not (resume and self._stage_done(manifests, "derived_triples",
+                                                "construct_enrich",
+                                                "entity_triples")):
+                resume = False
                 with self._timed("enrich"):
                     from extract_cbd_shape_spark.operators.bgp import bgp_construct
 
@@ -418,6 +448,8 @@ class KGConstructionPipeline:
                             _flat("object_value", "object_kind"),
                         ).dropDuplicates(),
                         self._table("derived_triples"), "construct_enrich",
+                        manifest_extra={"inputs": self._inputs(
+                            manifests, "entity_triples")},
                     )
             derived = read_latest_snapshot(
                 spark, self._table("derived_triples"))
@@ -425,7 +457,8 @@ class KGConstructionPipeline:
         # Stage 5 — final triples table = entity triples + link triples
         # (+ CONSTRUCT-derived triples), bucketed by subject for
         # co-located downstream joins.
-        if not (resume and self._stage_done("triples", "materialize")):
+        if not (resume and self._stage_done(manifests, "triples",
+                                            "materialize", *final_inputs)):
             with self._timed("materialize"):
                 final = entity_triples.select(
                     "subject", "predicate", "object_value"
@@ -434,5 +467,7 @@ class KGConstructionPipeline:
                     final = final.unionByName(
                         derived.select("subject", "predicate", "object_value"))
                 manifests["triples"] = materialize_table(
-                    final, self._table("triples"), "materialize"
+                    final, self._table("triples"), "materialize",
+                    manifest_extra={"inputs": self._inputs(
+                        manifests, *final_inputs)},
                 )

@@ -1,6 +1,5 @@
 from extract_cbd_shape_spark.streaming.incremental import (  # noqa: F401
     PAGES_DDL,
     pages_stream,
-    stream_pages_to_triples,
     streaming_kg_construction,
 )

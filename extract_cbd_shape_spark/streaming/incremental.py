@@ -6,12 +6,11 @@ infrastructure, not reference parity: new page files landing in a
 corpus directory are ingested incrementally —
 
     readStream(parquet pages dir)
-      -> vectorized page->triples extraction (same mapInPandas op the
-         batch path uses; Structured Streaming runs it per micro-batch)
-      -> foreachBatch append into the snapshot-manifest table contract
-         (sinks/materialize.py), one snapshot per micro-batch, with the
-         stream checkpoint providing exactly-once batch replay and the
-         manifest recording stream epoch lineage.
+      -> foreachBatch: the KG pipeline's run_incremental over the
+         micro-batch (plans/pipeline.py), one delta snapshot per table
+         (sinks/materialize.py), with the stream checkpoint providing
+         exactly-once batch replay and the batch id stamped into each
+         manifest as its epoch.
 
 ``Trigger.AvailableNow`` (availableNow=True) drains everything present
 and stops — the "incremental re-run over new page partitions" mode from
@@ -26,12 +25,6 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from extract_cbd_shape_spark.sinks.materialize import (
-    latest_manifest,
-    materialize_table,
-)
-from extract_cbd_shape_spark.sources.pages import extract_page_triples
-
 PAGES_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
@@ -45,40 +38,6 @@ def pages_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(pages_dir)
-
-
-def stream_pages_to_triples(
-    spark: SparkSession,
-    pages_dir: str,
-    table_path: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: Optional[int] = None,
-):
-    """Incrementally extract triples from new page files into the
-    snapshot table at ``table_path``. Exactly-once: the stream
-    checkpoint dedups input files across restarts, and a replayed
-    micro-batch (crash between sink write and checkpoint commit) is
-    detected by its ``stream-epoch-N`` stage name in the latest
-    manifest and skipped. Returns the finished StreamingQuery."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        stage = f"stream-epoch-{batch_id}"
-        m = latest_manifest(table_path)
-        if m is not None and m["stage"] == stage:
-            return  # replayed batch, already committed
-        triples = extract_page_triples(batch_df)
-        materialize_table(triples, table_path, stage)
-
-    stream = pages_stream(spark, pages_dir, max_files_per_trigger)
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
 
 
 def streaming_kg_construction(

@@ -19,8 +19,8 @@ def spark():
     from pyspark.sql import SparkSession
 
     # Tiny-fixture tuning: 1 shuffle partition, no codegen/AQE — per-stage
-    # compile overhead dominates at this scale. bench.py flips these for
-    # real data volumes.
+    # compile overhead dominates at this scale. perfbench/session.py
+    # sizes these for real data volumes.
     spark = (
         SparkSession.builder.master("local[4]")
         .appName("extract-cbd-shape-spark-tests")

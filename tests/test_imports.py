@@ -3,8 +3,8 @@
 perfbench and the top-level scripts names a module that exists and, for
 ``from ... import name``, a name defined at the top level of that module
 (or a submodule of that package). String constants that are themselves
-Python programs (the per-job runner of ``tools/bench_scaling.py``) are
-checked the same way. Scripts under ``tools/`` run in no other test, so
+Python programs (a script's embedded per-job runner) are checked the same
+way. Scripts under ``tools/`` run in no other test, so
 a deleted module or function would otherwise leave a dangling import
 there."""
 
@@ -13,7 +13,7 @@ import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "extract_cbd_shape_spark"
-SOURCES = [PKG, "tests", "tools", "perfbench", "bench.py", "__spark_entry__.py"]
+SOURCES = [PKG, "tests", "tools", "perfbench", "__spark_entry__.py"]
 
 
 def _py_files():

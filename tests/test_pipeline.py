@@ -436,9 +436,16 @@ def clean_warehouse(spark, tmp_path_factory):
     return pages, wh
 
 
-def _table_rows(spark, wh, table, cols):
-    return sorted(tuple(r) for r in read_latest_snapshot(
-        spark, os.path.join(wh, table)).select(*cols).collect())
+# Every table a run without CONSTRUCT rules writes.
+TABLES = ("raw_triples", "entity_triples", "links", "entities", "triples")
+
+
+def _table_rows(spark, wh, table, cols=None):
+    """The rows of a table's latest snapshot over ``cols`` (default:
+    every column but the bucket), sorted."""
+    df = read_latest_snapshot(spark, os.path.join(wh, table))
+    cols = cols or [c for c in df.columns if c != "bucket"]
+    return sorted((tuple(r) for r in df.select(*cols).collect()), key=repr)
 
 
 def test_leftover_sink_tmp_file_is_not_read(
@@ -528,13 +535,56 @@ def test_resume_reparses_snapshot_without_giant_stores(
     manifests = KGConstructionPipeline(spark, wh).run(pages, resume=True)
     assert manifests["raw_triples"]["snapshot"] == 1  # re-parsed
     assert "giant_stores" in latest_manifest(raw)
-    for table, cols in (
-            ("raw_triples", ["page_url", "subject", "predicate",
-                             "object_value"]),
-            ("entity_triples", ["entity", "subject", "predicate",
-                                "object_value"]),
-            ("links", ["subject", "predicate", "object_value"]),
-            ("entities", ["entity_iri", "canonical_id"]),
-            ("triples", ["subject", "predicate", "object_value"])):
-        assert _table_rows(spark, wh, table, cols) == \
-            _table_rows(spark, clean, table, cols), table
+    for table in TABLES:
+        assert _table_rows(spark, wh, table) == \
+            _table_rows(spark, clean, table), table
+
+
+@pytest.fixture(scope="module")
+def clean_30(spark, tmp_path_factory):
+    """A clean pipeline run over a 30-page superset of clean_warehouse's
+    pages: (pages, warehouse)."""
+    pages = synth_pages(spark, SF).orderBy("url").limit(30).cache()
+    wh = str(tmp_path_factory.mktemp("clean30") / "wh")
+    KGConstructionPipeline(spark, wh).run(pages, resume=False)
+    return pages, wh
+
+
+@pytest.mark.parametrize("crash_at", [
+    "link_mentions", "connected_components_driver", "materialize_table"])
+def test_resume_after_crash_over_earlier_build(
+        spark, clean_warehouse, clean_30, tmp_path, monkeypatch, crash_at):
+    """A warehouse holds a complete 20-page build. A 30-page
+    ``run(resume=False)`` crashes in linking, in canonicalization or in
+    the final triples write, after the stages before it committed. The
+    resumed run must not take the earlier build's graph-stage snapshots
+    as its own: every table ends equal to a clean 30-page build."""
+    import shutil
+
+    from extract_cbd_shape_spark.plans import pipeline as pipemod
+
+    class Killed(Exception):
+        pass
+
+    _, build1 = clean_warehouse
+    pages, clean = clean_30
+    wh = str(tmp_path / "wh")
+    shutil.copytree(build1, wh)
+    if crash_at == "materialize_table":
+        write = pipemod.materialize_table
+
+        def crash(df, path, stage, *args, **kwargs):
+            if stage == "materialize":  # the final triples write
+                raise Killed()
+            return write(df, path, stage, *args, **kwargs)
+    else:
+        def crash(*args, **kwargs):
+            raise Killed()
+    with monkeypatch.context() as m:
+        m.setattr(pipemod, crash_at, crash)
+        with pytest.raises(Killed):
+            KGConstructionPipeline(spark, wh).run(pages, resume=False)
+    KGConstructionPipeline(spark, wh).run(pages, resume=True)
+    for table in TABLES:
+        assert _table_rows(spark, wh, table) == \
+            _table_rows(spark, clean, table), table

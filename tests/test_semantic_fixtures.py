@@ -35,6 +35,10 @@ by the shape rules of SURVEY.md §2:
 * An ``sh:node`` link extracts every target of its path under the
   linked shape, whether or not the path's quads were added; each node
   is extracted once per member (O13).
+* Out of band (O17): a node a member reaches whose required path has no
+  quads is flagged ``needs_dereference`` if it is an IRI; it is not
+  fetched. A resolver that answers for the node adds its quads to the
+  store before the member is extracted again.
 
 Quads are compared as (entity, subject, predicate, object_value, graph);
 blank labels are the TriG labels without ``_:``, the default graph is
@@ -69,6 +73,8 @@ F, NX, NS, T, U, N1, N2, N3, OUT, LINK = _ex(
 ROOT, C1, C2, D1, D2, Q1, END_P, END_N, END_Q = _ex(
     "Root", "C1", "C2", "D1", "D2", "Q1", "endP", "endN", "endQ")
 CH, L, PA, PB, PC = _ex("Ch", "L", "a", "b", "c")
+ANN, BOB, CY, DEE = _ex("Ann", "Bob", "Cy", "Dee")
+D, AUTH, TITLE, AUTHOR, BORN = _ex("D", "Auth", "title", "author", "born")
 
 SHAPES_PREFIXES = """
 @prefix sh: <http://www.w3.org/ns/shacl#> .
@@ -249,6 +255,76 @@ ex:Open a sh:NodeShape .
                  (L, NAME, "L", None), (L, ADDR, "l1", None),
                  ("l1", STREET, "Main", None)},
         }),
+    "self_linked_shape": dict(
+        members=[ANN, DEE], bulk=False, ignore=(),
+        shapes=SHAPES_PREFIXES + """
+ex:Person a sh:NodeShape ;
+    sh:closed true ;
+    sh:property [ sh:path ex:name ] ,
+                [ sh:path ex:knows ; sh:node ex:Person ] .
+""",
+        shape=EX + "Person",
+        expected={
+            # ex:Person is closed: each node it claims gives only its
+            # ex:name and ex:knows quads, never ex:age. From ex:Ann:
+            # ex:knows reaches ex:Bob, claimed under ex:Person; ex:Bob's
+            # ex:knows reach ex:Cy (claimed), ex:Ann (the member, already
+            # claimed) and ex:Bob itself (already claimed); ex:Cy's reach
+            # ex:Ann (claimed) and _:anon (claimed); _:anon's reaches
+            # ex:Ann (claimed). Every node is claimed once, so the walk
+            # ends: 4 nodes, 11 quads. ex:Dee and ex:Eve are never
+            # reached from ex:Ann.
+            ANN: {(ANN, NAME, "Ann", None), (ANN, KNOWS, BOB, None),
+                  (BOB, NAME, "Bob", None), (BOB, KNOWS, CY, None),
+                  (BOB, KNOWS, ANN, None), (BOB, KNOWS, BOB, None),
+                  (CY, NAME, "Cy", None), (CY, KNOWS, ANN, None),
+                  (CY, KNOWS, "anon", None),
+                  ("anon", NAME, "anon", None), ("anon", KNOWS, ANN, None)},
+            # Claims are per member: ex:Dee claims itself (2 quads), then
+            # ex:Ann and everything ex:Ann reaches above, even though
+            # member ex:Ann claimed those nodes too. ex:Eve points at
+            # ex:Dee and is not reached.
+            DEE: {(DEE, NAME, "Dee", None), (DEE, KNOWS, ANN, None),
+                  (ANN, NAME, "Ann", None), (ANN, KNOWS, BOB, None),
+                  (BOB, NAME, "Bob", None), (BOB, KNOWS, CY, None),
+                  (BOB, KNOWS, ANN, None), (BOB, KNOWS, BOB, None),
+                  (CY, NAME, "Cy", None), (CY, KNOWS, ANN, None),
+                  (CY, KNOWS, "anon", None),
+                  ("anon", NAME, "anon", None), ("anon", KNOWS, ANN, None)},
+        }),
+    "out_of_band_flag": dict(
+        members=[D], bulk=False, ignore=(),
+        shapes=SHAPES_PREFIXES + """
+ex:Doc a sh:NodeShape ;
+    sh:property [ sh:path ex:author ; sh:node ex:Author ] .
+ex:Author a sh:NodeShape ;
+    sh:property [ sh:path ex:name ; sh:minCount 1 ] .
+""",
+        shape=EX + "Doc",
+        expected={
+            # ex:Doc is open: CBD(ex:D) (2), which also witnesses
+            # ex:author. Its target ex:Auth is extracted under the open
+            # ex:Author: ex:Auth has no quads in the store, so its CBD
+            # and its ex:name path add nothing. ex:Other is never
+            # reached.
+            D: {(D, TITLE, "D", None), (D, AUTHOR, AUTH, None)},
+        },
+        # The required ex:name of ex:Auth, an IRI, is unsatisfied: the
+        # global engine flags ex:Auth needs_dereference for member ex:D
+        # (member ex:D itself has rows and no required path).
+        flags={(D, AUTH)},
+        # Dereferencing ex:Auth yields this document. With it as the
+        # resolver's answer, CBD(ex:Auth) (2) joins the rows, ex:name
+        # is satisfied and no flag remains.
+        resolver={AUTH: """
+@prefix ex: <http://example.org/> .
+ex:Auth ex:name "Auth" ;
+        ex:born "1900" .
+"""},
+        resolved={
+            D: {(D, TITLE, "D", None), (D, AUTHOR, AUTH, None),
+                (AUTH, NAME, "Auth", None), (AUTH, BORN, "1900", None)},
+        }),
 }
 
 
@@ -266,8 +342,8 @@ def _shapes(case):
             Term(IRI, case["shape"]))
 
 
-def _want(case):
-    return {(e, *q) for e, qs in case["expected"].items() for q in qs}
+def _want(case, key="expected"):
+    return {(e, *q) for e, qs in case[key].items() for q in qs}
 
 
 def _key(entity, row):
@@ -333,3 +409,33 @@ def test_global_engine(spark, name, regime):
     got = {_key(r["entity"], [r[c] for c in QUAD_COLS])
            for r in res.select("entity", *QUAD_COLS).collect()}
     assert got == _want(case)
+
+
+@pytest.mark.parametrize("regime", [
+    pytest.param({}, id="latency"),
+    pytest.param({"broadcast_members_max": 0}, id="scale"),
+])
+@pytest.mark.parametrize("resolve", [False, True])
+def test_global_engine_out_of_band(spark, regime, resolve):
+    """The out-of-band rule (SURVEY.md O17) on the global engine: a
+    linked IRI whose required path has no quads is flagged
+    needs_dereference, not fetched; a resolver that answers for it adds
+    its quads and clears the flag."""
+    from extract_cbd_shape_spark.sources import quads_to_df
+
+    case = CASES["out_of_band_flag"]
+    resolver = ({node: parse_trig(ttl)
+                 for node, ttl in case["resolver"].items()}
+                if resolve else None)
+    shapes, shape = _shapes(case)
+    members = case["members"]
+    res, flags = BulkCBDShapeExtractor(
+        spark, shapes_graph=shapes, resolver=resolver, **regime).extract(
+        quads_to_df(spark, _load("out_of_band_flag")),
+        [Term(IRI, m) for m in members], shape=shape)
+    got = {_key(r["entity"], [r[c] for c in QUAD_COLS])
+           for r in res.select("entity", *QUAD_COLS).collect()}
+    assert got == _want(case, "resolved" if resolve else "expected")
+    flagged = {(members[r["member_id"]], r["node"])
+               for r in flags.collect()}
+    assert flagged == (set() if resolve else case["flags"])

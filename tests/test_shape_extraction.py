@@ -338,28 +338,6 @@ def test_mrg_out_of_band_chain(spark):
     assert geo_subject_quads == 2
 
 
-def test_store_partitioned_skips_repartition(spark):
-    """store_partitioned=True: engine must not add its own Exchange over
-    the caller-clustered store, and results stay identical."""
-    from pyspark.sql import functions as F
-
-    from extract_cbd_shape_spark.model import quad_to_row, quad_schema
-    from extract_cbd_shape_spark.rdf import parse_trig
-
-    quads = [quad_to_row(q) for q in parse_trig(
-        load_fixture("03 - CBD tests without a shape/data.ttl"))]
-    base = spark.createDataFrame(quads, quad_schema())
-    pre = base.repartition(F.col("subject"), F.col("subject_kind")).localCheckpoint()
-
-    ex = BulkCBDShapeExtractor(spark)
-    member = [Term(IRI, "http://example.org/B")]
-    r_default, _ = ex.extract(base, member)
-    r_pre, _ = ex.extract(pre, member, store_partitioned=True)
-    d = {tuple(r) for r in r_default.select(*_CMP_COLS).collect()}
-    p = {tuple(r) for r in r_pre.select(*_CMP_COLS).collect()}
-    assert d == p and len(d) == 8
-
-
 _CMP_COLS = ["entity", "subject", "predicate", "object_value"]
 
 

@@ -1,9 +1,8 @@
-"""Incremental (Structured Streaming) ingestion: exactly-once snapshot
-commits per micro-batch, and epoch-replay idempotence."""
+"""Incremental (Structured Streaming) KG construction: a drained stream
+builds the batch pipeline's graph, and an epoch replay is idempotent."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from extract_cbd_shape_spark.sinks.materialize import (
@@ -11,62 +10,9 @@ from extract_cbd_shape_spark.sinks.materialize import (
     read_latest_snapshot,
 )
 from extract_cbd_shape_spark.sources.pages import synth_pages
-from extract_cbd_shape_spark.streaming import (
-    stream_pages_to_triples,
-    streaming_kg_construction,
-)
+from extract_cbd_shape_spark.streaming import streaming_kg_construction
 
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def waves(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("stream")
-    pages = synth_pages(spark, SF).cache()
-    w1 = pages.filter(F.col("url").endswith("0"))
-    w2 = pages.filter(~F.col("url").endswith("0"))
-    return root, pages, w1, w2
-
-
-def _total_rows(spark, table):
-    df = read_latest_snapshot(spark, table)
-    # table accumulates one snapshot per micro-batch; sum all of them
-    snaps = sorted(
-        d for d in os.listdir(table) if d.startswith("snap-")
-    )
-    n = 0
-    for s in snaps:
-        n += spark.read.parquet(os.path.join(table, s, "data")).count()
-    return n, df
-
-
-def test_incremental_exactly_once(spark, waves):
-    root, pages, w1, w2 = waves
-    pages_dir = str(root / "pages")
-    table = str(root / "triples_table")
-    ckpt = str(root / "ckpt")
-
-    w1.write.mode("append").parquet(pages_dir)
-    stream_pages_to_triples(spark, pages_dir, table, ckpt)
-    n1, _ = _total_rows(spark, table)
-    from extract_cbd_shape_spark.sources.pages import extract_page_triples
-    expect1 = extract_page_triples(w1).count()
-    assert n1 == expect1
-
-    # second wave: only new files are processed on re-run
-    w2.write.mode("append").parquet(pages_dir)
-    stream_pages_to_triples(spark, pages_dir, table, ckpt)
-    n2, _ = _total_rows(spark, table)
-    expect_all = extract_page_triples(pages).count()
-    assert n2 == expect_all
-
-    # a third run with nothing new must commit nothing
-    stream_pages_to_triples(spark, pages_dir, table, ckpt)
-    n3, _ = _total_rows(spark, table)
-    assert n3 == expect_all
-
-    m = latest_manifest(table)
-    assert m["stage"].startswith("stream-epoch-")
 
 
 def test_streaming_kg_construction_matches_batch(spark, tmp_path):

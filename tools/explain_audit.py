@@ -82,13 +82,13 @@ def main() -> int:
         r"PushedFilters: \[.*GreaterThan\(l_shipdate",
     ], [r"BatchEvalPython"])
 
-    # Column pruning: text metrics read only (doc_id, text).
-    plan = plan_of(qs["text_metrics"](spark, SF_DIR))
+    # Column pruning: entity linking reads only (doc_id, text).
+    plan = plan_of(qs["entity_link"](spark, SF_DIR))
     if re.search(r"ReadSchema: struct<doc_id:bigint,text:string>", plan):
-        print("OK  text_metrics: ReadSchema pruned to doc_id,text")
+        print("OK  entity_link: ReadSchema pruned to doc_id,text")
     else:
-        failures.append("text_metrics")
-        print("FAIL text_metrics: scan not pruned")
+        failures.append("entity_link")
+        print("FAIL entity_link: scan not pruned")
         print(plan[:2000])
 
     # Engine star-join: at this (small, driver-counted) seed scale the
