@@ -29,7 +29,7 @@ import re
 import sys
 from typing import Dict, List, Optional
 
-from extract_cbd_shape_spark.model import IRI, Quad, Term
+from extract_cbd_shape_spark.model import IRI, Quad, Term, rows_to_df
 from extract_cbd_shape_spark.rdf.trig import parse_trig
 
 OWL_IMPORTS = "http://www.w3.org/2002/07/owl#imports"
@@ -306,8 +306,8 @@ def cmd_validate(args: argparse.Namespace) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     shapes_graph = ShapesGraph.from_quads(load_shape_quads(args.shapes))
     data = quads_to_df(spark, load_shape_quads(args.data))
-    members = spark.createDataFrame(
-        [(e, 0, i) for i, e in enumerate(args.entity)],
+    members = rows_to_df(
+        spark, [(e, 0, i) for i, e in enumerate(args.entity)],
         "entity string, entity_kind tinyint, input_idx long",
     )
     rep = shacl_report(

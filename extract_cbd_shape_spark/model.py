@@ -159,6 +159,31 @@ def quad_to_row(q: Quad) -> tuple:
     )
 
 
+def rows_to_df(spark, rows, schema):
+    """Driver-side rows (tuples in ``schema`` order) as a DataFrame with
+    exactly ``schema`` (a StructType or a DDL string): its names, types
+    and nullability, for no rows too.
+
+    The rows reach the JVM as an Arrow stream and no Python worker runs.
+    ``spark.createDataFrame(list)`` would pickle them through an
+    RDD-level ``PythonRDD``, whose workers Spark keeps in a daemon pool
+    of their own, beside the pool of the SQL runners (the parse's
+    ``mapInPandas``, the sink's ``mapInArrow``): four more resident
+    Python processes per application. Every list-built DataFrame of the
+    package goes through here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
+
+
 def row_to_quad(row) -> Quad:
     graph = None
     if row.graph is not None:

@@ -38,6 +38,7 @@ from typing import Optional, Sequence, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from extract_cbd_shape_spark.model import rows_to_df
 from extract_cbd_shape_spark.shapes.ast import (
     AlternativePath,
     InversePath,
@@ -346,8 +347,7 @@ def _closure_pairs(triples: DataFrame, path: MultiPath,
         consts = sorted({c for c in (src_const, dst_const)
                          if c is not None})
         if consts:
-            return spark.createDataFrame(
-                [(c,) for c in consts], "node string")
+            return rows_to_df(spark, [(c,) for c in consts], "node string")
         return _graph_terms(triples)
 
     if isinstance(path, ZeroOrOnePath):
@@ -360,7 +360,7 @@ def _closure_pairs(triples: DataFrame, path: MultiPath,
     # seed set; plus = star composed with one more hop (cycles land a
     # (s, s) pair through the composition, never through the seed row).
     if src_const is not None:
-        seeds = spark.createDataFrame([(src_const,)], "node string")
+        seeds = rows_to_df(spark, [(src_const,)], "node string")
     else:
         seeds = one.select(F.col("_src").alias("node")).distinct()
     star = transitive_closure(
@@ -752,8 +752,8 @@ def bgp_match(
                 raise ValueError(
                     "VALUES UNDEF is not supported (needs a "
                     "compatible-mapping join, not an equi-join)")
-        vdf = triples.sparkSession.createDataFrame(
-            [tuple(r) for r in rows],
+        vdf = rows_to_df(
+            triples.sparkSession, [tuple(r) for r in rows],
             ", ".join(f"{n} string" for n in names))
         out = _join_solutions(out, F.broadcast(vdf))
     for name, expr in (bind or {}).items():

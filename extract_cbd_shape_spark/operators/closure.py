@@ -14,6 +14,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from extract_cbd_shape_spark.model import rows_to_df
 
 
 def transitive_closure(edges: DataFrame, seeds: DataFrame,
@@ -197,10 +200,8 @@ def connected_components_driver(edges: DataFrame) -> DataFrame:
 
     for r in rows:
         union(r.src, r.dst)
-    out = [(n, find(n)) for n in parent]
-    spark = edges.sparkSession
-    if not out:
-        return edges.select(
-            F.col("src").alias("node"), F.col("dst").alias("component")
-        ).limit(0)
-    return spark.createDataFrame(out, ["node", "component"])
+    node_type = edges.schema["src"].dataType
+    return rows_to_df(
+        edges.sparkSession, [(n, find(n)) for n in parent],
+        T.StructType([T.StructField("node", node_type),
+                      T.StructField("component", node_type)]))

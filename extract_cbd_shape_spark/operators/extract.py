@@ -58,6 +58,7 @@ from extract_cbd_shape_spark.model import (
     Term,
     quad_schema,
     quad_to_row,
+    rows_to_df,
 )
 from extract_cbd_shape_spark.shapes.ast import (
     STEP_SEP,
@@ -361,8 +362,8 @@ class BulkCBDShapeExtractor:
             for u in new_urls:
                 resolved.add(u)
                 extra.extend(self.resolver[u])
-            extra_df = self.spark.createDataFrame(
-                [quad_to_row(q) for q in extra], quad_schema()
+            extra_df = rows_to_df(
+                self.spark, [quad_to_row(q) for q in extra], quad_schema()
             )
             triples = triples.unionByName(extra_df).localCheckpoint()
         return results, flags
@@ -436,15 +437,16 @@ class _Run:
                 )
                 for g in m.graphs_to_ignore:
                     ignore_rows.append((i, g.value))
-            self.members_df = self.spark.createDataFrame(
-                member_rows,
+            self.members_df = rows_to_df(
+                self.spark, member_rows,
                 "member_id long, entity string, entity_kind tinyint, "
                 "shape_key string, input_idx long",
             )
             if self.initial_shape_keys is None:
                 self.initial_shape_keys = {r[3] for r in member_rows}
             self.ignored_pairs = (
-                self.spark.createDataFrame(ignore_rows, "member_id long, graph string")
+                rows_to_df(self.spark, ignore_rows,
+                           "member_id long, graph string")
                 if ignore_rows
                 else None
             )

@@ -138,8 +138,11 @@ def materialize_table(
     reference plus its own (Iceberg snapshot/manifest reuse — a 100 TB
     table is never rewritten to ingest a day of crawl). Caller contract
     for append tables read by store-local extraction: the delta
-    contains only NEW ``bucket_by`` groups (re-crawled pages go through url_dedup first),
-    so every group still lives whole inside one file. With
+    contains only NEW ``bucket_by`` groups, so every group still lives
+    whole inside one file. A group already in the table (a re-crawled
+    page) is not replaced but split over two files;
+    ``functions.urls.url_dedup`` cannot prevent that, since it dedups
+    only within one DataFrame. With
     ``n_buckets=None`` the delta inherits the parent's bucket count; an
     explicit count that differs from it is rejected. Manifest carries
     merged ``giant_stores`` plus delta-scoped ``delta_giant_stores`` /

@@ -11,12 +11,17 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from extract_cbd_shape_spark.model import Quad, quad_schema, quad_to_row
+from extract_cbd_shape_spark.model import (
+    Quad,
+    quad_schema,
+    quad_to_row,
+    rows_to_df,
+)
 from extract_cbd_shape_spark.rdf.trig import parse_trig
 
 
 def quads_to_df(spark: SparkSession, quads: List[Quad]) -> DataFrame:
-    return spark.createDataFrame([quad_to_row(q) for q in quads], quad_schema())
+    return rows_to_df(spark, [quad_to_row(q) for q in quads], quad_schema())
 
 
 def trig_to_df(spark: SparkSession, text: str, base: Optional[str] = None) -> DataFrame:

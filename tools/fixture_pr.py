@@ -144,7 +144,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from extract_cbd_shape_spark.model import IRI, Term, quad_to_row
+    from extract_cbd_shape_spark.model import IRI, Term, quad_to_row, rows_to_df
     from extract_cbd_shape_spark.operators import BulkCBDShapeExtractor
     from extract_cbd_shape_spark.operators.local_extract import (
         compile_single_hop_links,
@@ -224,9 +224,8 @@ def main() -> int:
             vec_cases += 1
             tdf = quads_to_df(spark, parsed).withColumn(
                 "store_key", F.lit("s"))
-            mem = spark.createDataFrame(
-                [(entity,)], "entity string").withColumn(
-                    "store_key", F.lit("s"))
+            mem = rows_to_df(spark, [(entity,)], "entity string").withColumn(
+                "store_key", F.lit("s"))
             root = tempfile.mkdtemp(prefix="fixture_pr_")
             out = os.path.join(root, "out")
             extract_store_files_to_store(
